@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.{Callable, Executors, TimeUnit}
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: executes every SparkEntry query at
   * SPARK_GRAFT_SF_DIR via `.count()` and emits one JSON line.
@@ -17,9 +16,9 @@ import org.apache.spark.sql.SparkSession
   * must use like-for-like actions.
   *
   * Methodology: after a warmup, the suite runs with intra-suite
-  * parallelism (min(8, cpus) concurrent queries on Spark's FAIR
-  * scheduler) — a single small query can't saturate a 32-thread
-  * executor, and whole-suite throughput is the meaningful
+  * parallelism (min(8, cpus) concurrent queries on the session's
+  * default FIFO scheduler) — a single small query can't saturate a
+  * 32-thread executor, and whole-suite throughput is the meaningful
   * single-node number for a query suite on one box. Reported fields
   * (r15, VERDICT r14 item 2): `value` = the PER-QUERY-MIN SUM —
   * each query's best wall seconds across all passes, summed (the
@@ -89,23 +88,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val conc = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONC",
       math.min(8, math.max(1, cpus.toInt)).toString).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // tiny-SF shuffles: let AQE coalesce to few large partitions
-      // instead of cpus near-empty tasks (pure overhead at small
-      // scale, harmless at large scale where partitions stay full)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // size-driven join strategy sized for large-memory executors: the
-      // r9 hint audit removed forced broadcasts on data-proportional
-      // dims (part/supplier); 64m keeps them broadcast while they are
-      // genuinely small and degrades to shuffle joins when they are not
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts (Tables.events)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", Some(cpus.toInt))
     spark.sparkContext.setLogLevel("WARN")
     // The whole warmup below is timed and reported as `warm_sec`
     // (r18, VERDICT r17 item 1): the untimed warm region is real

@@ -16,25 +16,66 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  /** Recommended session: UTC, graft native functions injected, AQE
-    * coalescing tuned; shuffle partitions default to available cores
-    * (override for cluster deployments).
+  /** Size of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark default 100). One pass
+    * over the 289-query inventory at sf0.01 compiles about 3,400
+    * distinct classes (3,984 when class names carry the codegen stage
+    * number); this is about twice that, so a repeated query finds its
+    * classes instead of recompiling them. With the default, a 13-query
+    * pass that needs about 225 classes evicts its own classes and
+    * recompiles 7–29 Janino classes per query on every pass.
+    *
+    * Memory: the cache is bounded by entry count, not bytes. Holding
+    * the inventory's 3,400 classes cost about 165 MB of used heap
+    * (mostly the keys, the generated source text) and 20 MB of
+    * metaspace, about 50 KB and 6 KB per entry. A long-lived session
+    * serving ad-hoc SQL that fills all 8192 entries should therefore
+    * expect about 400 MB of heap and 50 MB of metaspace; that figure is
+    * extrapolated per entry, not measured at the cap.
+    */
+  val CodegenCacheEntries: Int = 8192
+
+  /** The session every engine entry point builds (Bench, Verify,
+    * GenScale, the test suites): UTC, graft native functions and the
+    * cosine rewrite injected, AQE coalescing tuned, broadcast joins up
+    * to 64 MB, and the generated-class cache sized for the inventory
+    * and keyed without codegen stage numbers. Callers choose only the
+    * master and the shuffle partition count, which defaults to
+    * available cores (override for cluster deployments); every other
+    * setting is the same for every engine-built session.
+    *
+    * The codegen cache size is deliberately not a parameter: Spark
+    * reads it once per JVM, from whichever session first generates
+    * code, so a per-session value would be silently ignored by every
+    * later session. Fixing it here gives every engine-built session in
+    * a JVM the same cache. A session built outside this method keeps
+    * Spark's default unless it sets the key itself.
     */
   def session(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
       shufflePartitions: Option[Int] = None): SparkSession = {
     val parts = shufflePartitions
       .getOrElse(Runtime.getRuntime.availableProcessors())
-    SparkSession.builder()
-      .master(master)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    val settings = Map(
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      // tiny-SF shuffles: let AQE coalesce to few large partitions
+      // instead of one near-empty task per core (pure overhead at small
+      // scale, harmless at large scale where partitions stay full)
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       // size-driven join strategy sized for large-memory executors: the
       // r9 hint audit removed forced broadcasts on data-proportional
       // dims (part/supplier); 64m keeps them broadcast while they are
       // genuinely small and degrades to shuffle joins when they are not
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts (Tables.events)
+      "spark.sql.autoBroadcastJoinThreshold" -> "64m",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true", // events.ts (Tables.events)
+      "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+      // generated class names without the codegen stage number: the
+      // same pipeline at another stage position (another query, or
+      // another AQE stage order) then hits its cached class
+      "spark.sql.codegen.useIdInClassName" -> "false")
+    SparkSession.builder()
+      .master(master)
+      .config(settings)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,22 +13,7 @@ object Verify {
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // tiny-SF shuffles: let AQE coalesce to few large partitions
-      // instead of cpus near-empty tasks (pure overhead at small
-      // scale, harmless at large scale where partitions stay full)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // size-driven join strategy sized for large-memory executors: the
-      // r9 hint audit removed forced broadcasts on data-proportional
-      // dims (part/supplier); 64m keeps them broadcast while they are
-      // genuinely small and degrades to shuffle joins when they are not
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts (Tables.events)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", Some(cpus.toInt))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -47,17 +47,24 @@ object HashPairKernels {
 
   private val empty = new GenericArrayData(Array.empty[Any])
 
+  /** Null elements are skipped: a null string has no identity, so it
+    * is not a member of the set.
+    */
   def hashPairs(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    if (n == 0) return empty
-    val pairs = new Array[(Long, Long)](n)
+    val len = arr.numElements()
+    val pairs = new Array[(Long, Long)](len)
+    var n = 0
     var i = 0
-    while (i < n) {
-      val s = arr.getUTF8String(i)
-      pairs(i) = (XXH64.hashUTF8String(s, Seed1), XXH64.hashUTF8String(s, Seed2))
+    while (i < len) {
+      if (!arr.isNullAt(i)) {
+        val s = arr.getUTF8String(i)
+        pairs(n) = (XXH64.hashUTF8String(s, Seed1), XXH64.hashUTF8String(s, Seed2))
+        n += 1
+      }
       i += 1
     }
-    java.util.Arrays.sort(pairs, new java.util.Comparator[(Long, Long)] {
+    if (n == 0) return empty
+    java.util.Arrays.sort(pairs, 0, n, new java.util.Comparator[(Long, Long)] {
       override def compare(a: (Long, Long), b: (Long, Long)): Int = {
         val c = java.lang.Long.compare(a._1, b._1)
         if (c != 0) c else java.lang.Long.compare(a._2, b._2)
@@ -100,7 +107,9 @@ object HashPairKernels {
   }
 }
 
-/** array<string> → sorted distinct array<struct<h1:bigint,h2:bigint>>. */
+/** array<string> → sorted distinct array<struct<h1:bigint,h2:bigint>>;
+  * null elements are skipped.
+  */
 case class HashPairs128(child: Expression) extends UnaryExpression {
   override def prettyName: String = HashPairs128.name
 

@@ -440,6 +440,10 @@ object EventsTime extends QueryModule {
     * month's distinct actives — two bounded count-distinct
     * aggregations joined on month, ratio float-cast (exact int ratio;
     * float is fully deterministic where round() can boundary-flip).
+    * The month table (one row per calendar month) is broadcast by
+    * hint: both sides are small, and without the hint AQE picked the
+    * build side by whichever aggregate finished first, so repeat runs
+    * planned, and compiled, different join stages.
     */
   val stickiness = QueryDef(
     "q_stickiness",
@@ -451,7 +455,7 @@ object EventsTime extends QueryModule {
         .agg(countDistinct(col("user_id")).as("dau"))
       val mau = ev.groupBy(col("month"))
         .agg(countDistinct(col("user_id")).as("mau"))
-      dau.join(mau, Seq("month"))
+      dau.join(broadcast(mau), Seq("month"))
         .select(col("day"), col("dau"), col("mau"),
           (col("dau").cast("double") / col("mau")).cast("float").as("stickiness"))
         .orderBy(col("day"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (not part of the library surface): scale up a test-data
@@ -79,13 +79,7 @@ object GenScale {
     require(skewPct >= 0 && skewPct < 100, s"skew pct out of range: $skewPct")
     val hotUser = 7L // a base-corpus user id; stays in-range for joins
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(s"local[$cpus]", Some(cpus.toInt))
     spark.sparkContext.setLogLevel("WARN")
 
     val lower = "abcdefghijklmnopqrstuvwxyz"

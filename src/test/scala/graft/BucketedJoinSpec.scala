@@ -34,10 +34,11 @@ class BucketedJoinSpec extends AnyFunSuite {
 
       // AQE keeps the bucket layout; the join itself must not shuffle —
       // the only Exchange allowed is the final single-partition agg
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
       val plan =
         try joined.queryExecution.executedPlan.toString
-        finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+        finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       val joinSection = plan.split("HashAggregate").last // below the first agg
       assert(joinSection.contains("SortMergeJoin"), plan.take(1500))
       assert(!joinSection.contains("Exchange"),

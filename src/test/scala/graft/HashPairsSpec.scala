@@ -43,6 +43,21 @@ class HashPairsSpec extends AnyFunSuite {
     }
   }
 
+  test("hash_pairs128 skips null elements") {
+    registered()
+    val df = Seq(
+      (1L, Seq("a", null, "b", null)),
+      (2L, Seq[String](null)),
+      (3L, Seq("a", "b"))).toDF("id", "arr")
+    val hp = df.select(col("id"), call_function(HashPairs128.name, col("arr")))
+      .collect().map(r => r.getLong(0) ->
+        r.getSeq[org.apache.spark.sql.Row](1).map(p => (p.getLong(0), p.getLong(1))))
+      .toMap
+    assert(hp(1L) === hp(3L), "nulls must not change the set")
+    assert(hp(2L).isEmpty)
+    assert(hp(3L).size === 2)
+  }
+
   test("h2 is independent of h1 (different seed, not a post-mix)") {
     // If h2 were a function of h1, equal h1s would force equal h2s.
     // Directly check the kernel's two seeds give different values and

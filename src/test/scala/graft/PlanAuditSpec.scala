@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -255,11 +256,19 @@ class PlanAuditSpec extends AnyFunSuite {
       w: org.apache.spark.sql.catalyst.plans.logical.Window): Boolean =
     w.orderSpec.exists(_.child.references.exists(_.name == "__ps_pid"))
 
+  /** Every query's optimized plan and executed-plan text, built once
+    * and shared by the inventory-wide audits below.
+    */
+  private lazy val inventoryPlans: Map[String, (LogicalPlan, String)] =
+    SparkEntry.all.map { q =>
+      val qe = SparkEntry.queries(q.name)(spark, TestSpark.sf0001).queryExecution
+      q.name -> (qe.optimizedPlan, qe.executedPlan.toString)
+    }.toMap
+
   test("single-partition Window only over bounded-cardinality inputs") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val offenders = SparkEntry.all.flatMap { q =>
-      val plan = SparkEntry.queries(q.name)(spark, TestSpark.sf0001)
-        .queryExecution.optimizedPlan
+      val (plan, _) = inventoryPlans(q.name)
       val globals = plan.collect {
         case w: LWindow if w.partitionSpec.isEmpty && !isPidOffsetsWindow(w) => w
       }
@@ -275,8 +284,7 @@ class PlanAuditSpec extends AnyFunSuite {
     for (name <- Seq("q_gini", "q_pareto_cutoff", "q_concurrent_sessions",
         "q_weighted_median", "q_rfm", "q_ks_test", "q_mann_whitney",
         "q_histogram_equidepth")) {
-      val plan = SparkEntry.queries(name)(spark, TestSpark.sf0001)
-        .queryExecution.optimizedPlan
+      val (plan, _) = inventoryPlans(name)
       val globals = plan.collect {
         case w: LWindow if w.partitionSpec.isEmpty && !isPidOffsetsWindow(w) => w
       }
@@ -327,8 +335,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("value-buffering aggregates only where bounded or twin-anchored") {
     val offenders = SparkEntry.all.flatMap { q =>
-      val p = SparkEntry.queries(q.name)(spark, TestSpark.sf0001)
-        .queryExecution.executedPlan.toString
+      val (_, p) = inventoryPlans(q.name)
       if (p.contains("ObjectHashAggregate") && !objectHashAllowed.contains(q.name))
         Some(s"${q.name}: unreviewed ObjectHashAggregate (value-buffering) — " +
           "justify as bounded or pair with a sketch twin")
@@ -339,8 +346,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("no query plans a CartesianProduct; BNL only on the tiny-broadcast list") {
     val offenders = SparkEntry.all.flatMap { q =>
-      val p = SparkEntry.queries(q.name)(spark, TestSpark.sf0001)
-        .queryExecution.executedPlan.toString
+      val (_, p) = inventoryPlans(q.name)
       val cart = p.contains("CartesianProduct")
       val bnl = p.contains("BroadcastNestedLoopJoin") && !bnlAllowed(q.name)
       if (cart) Some(s"${q.name}: CartesianProduct")

@@ -65,8 +65,9 @@ class PlanFingerprintSpec extends AnyFunSuite {
     "q_min_price_supplier" -> Map("BroadcastExchange" -> 3, "BroadcastHashJoin" -> 3, "Exchange hashpartitioning" -> 1, "Exchange rangepartitioning" -> 1),
     // Q7 shape: bloc-filtered dims all broadcast, one fact shuffle
     "q_volume_shipping" -> Map("BroadcastExchange" -> 5, "BroadcastHashJoin" -> 5, "Exchange hashpartitioning" -> 1, "Exchange rangepartitioning" -> 1),
-    // Q20 shape: two-level reagg + SMJ join-back of the two sum tables
-    "q_dominant_supplier" -> Map("BroadcastExchange" -> 4, "BroadcastHashJoin" -> 4, "Exchange hashpartitioning" -> 5, "Exchange rangepartitioning" -> 1, "SortMergeJoin" -> 1),
+    // Q20 shape: two-level reagg + join-back of the two sum tables,
+    // broadcast under the session's 64m threshold at this SF
+    "q_dominant_supplier" -> Map("BroadcastExchange" -> 5, "BroadcastHashJoin" -> 5, "Exchange hashpartitioning" -> 4, "Exchange rangepartitioning" -> 1),
     // bucketed kNN (r9 adaptive blocking): the per-label stats pass
     // (count + dim-balance) runs ONCE behind a lazy localCheckpoint
     // shared by both self-join sides (2 broadcasts); the corpus×corpus
@@ -79,8 +80,9 @@ class PlanFingerprintSpec extends AnyFunSuite {
     // 2-column lineitem projection because its bytes estimate sat
     // under the 64m auto threshold (28.8 → 12.1 s at 26× hinted)
     "q_basket_affinity" -> Map("Exchange hashpartitioning" -> 3, "ShuffledHashJoin" -> 1, "TakeOrderedAndProject" -> 1),
-    // Q17 shape: brand slice aggregated then joined back (SMJ at this SF)
-    "q_small_qty_revenue" -> Map("BroadcastExchange" -> 2, "BroadcastHashJoin" -> 2, "Exchange hashpartitioning" -> 2, "SortMergeJoin" -> 1),
+    // Q17 shape: brand slice aggregated then joined back (broadcast
+    // under the session's 64m threshold at this SF)
+    "q_small_qty_revenue" -> Map("BroadcastExchange" -> 3, "BroadcastHashJoin" -> 3, "Exchange hashpartitioning" -> 1),
     // EXISTS-in-disjunction MUST stay an ExistenceJoin (a semi join
     // here would silently drop the high-value-only orders). r10: both
     // correlated lineitem probes carry SHUFFLE_HASH — the same

@@ -37,6 +37,7 @@ class RangeJoinSpec extends AnyFunSuite {
   test("bucketed range join plans as a hash join, not a nested loop") {
     // disable broadcast so the naive version would be forced into
     // cartesian/BNL territory; the bucketed one must still hash-join
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val plan = RangeJoin.bucketed(points, intervals,
@@ -46,7 +47,7 @@ class RangeJoinSpec extends AnyFunSuite {
         plan.take(1200))
       assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
         "range join must not plan as a nested loop:\n" + plan.take(1200))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("bucketWidth is validated") {

@@ -27,8 +27,16 @@ class RewriteCosineSpec extends AnyFunSuite {
   }
 
   test("rewritten plan returns bit-identical results") {
-    val plain = probe.select(col("vec_id"), VF.cosine(col("a"), col("b")).as("c"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    // the shared session injects the rule through GraftExtensions, so
+    // the plain side excludes it by name
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, RewriteCosineToNative.ruleName)
+    val plain =
+      try {
+        val df = probe.select(col("vec_id"), VF.cosine(col("a"), col("b")).as("c"))
+        assert(!df.queryExecution.optimizedPlan.toString.contains("cosine_sim"))
+        df.collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+      } finally spark.conf.unset(excluded)
     spark.experimental.extraOptimizations = Seq(RewriteCosineToNative)
     val rewritten =
       try probe.select(col("vec_id"), VF.cosine(col("a"), col("b")).as("c"))

@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (suites run sequentially
-  * in the forked test JVM).
+  * in the forked test JVM), built by the engine's own session builder
+  * so the suites run under the configuration Bench and Verify use.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts (Tables.events)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Graft.session("local[4]", Some(4))
     s.sparkContext.setLogLevel("WARN")
     s
   }
