@@ -158,29 +158,13 @@ object Graft {
   }
 
   /** Drop every memoized plan/artifact the library keeps per
-    * (session, dataset): table relations (incl. the eventsByDate
-    * partitioned layout), LSH signature/verified-pair checkpoints,
-    * and the graph edge table. The memos exist so one Verify/Bench
-    * run never re-derives a shared artifact; they are keyed by
-    * (SparkSession, dir) and so retained for the session's lifetime —
-    * a slow leak in a long-lived service cycling many datasets. Call
-    * this at dataset-retirement points; the next query re-derives
-    * everything identically (CachesSpec pins result equality across a
-    * clear). Checkpoint blocks are reclaimed by Spark's
-    * ContextCleaner once the dropped references are collected.
+    * (session, dataset) and delete the temp roots those artifacts
+    * wrote. The memos are keyed by (SparkSession, dir) and so retained
+    * for the session's lifetime — a slow leak in a long-lived service
+    * cycling many datasets. Call this at dataset-retirement points; the
+    * next query re-derives everything identically (CachesSpec pins
+    * result equality across a clear). The lock and retirement rules
+    * are stated once, on [[Artifacts]].
     */
-  def clearCaches(): Unit = {
-    Tables.clearCache()
-    queries.Dedup.clearCaches()
-    queries.Graphs.clearCache()
-    queries.TextAnalysis.clearIndexCache()
-    queries.Similarity.clearVecIndexCache()
-    queries.Similarity.clearAuxVecIndexCaches()
-    functions.SkewRouter.clearCache()
-    functions.JoinRouter.clearCache()
-    functions.ExactQuantiles.clearCache()
-    functions.PrefixSum.clearRouteCache()
-    queries.Aggregations.clearPriceQuantileCache()
-    sources.BandHistory.clearCaches()
-  }
+  def clearCaches(): Unit = Artifacts.clear()
 }

@@ -19,14 +19,11 @@ object Tables {
   // relation (file listing + schema) across the many queries a
   // Verify/Bench run builds, instead of re-reading parquet footers
   // per query.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  private val cache = Artifacts.memo[(SparkSession, String, String), DataFrame]()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val key = (spark, sfDir, name)
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
+    cache.peek(key).getOrElse {
       val path = s"$sfDir/$name.parquet"
       // a dataset whose table is a SNAPSHOT root (r15): resolve the
       // CURRENT version per call and skip the memo — a cached plan
@@ -35,17 +32,9 @@ object Tables {
       // corpora never hit it.
       if (graft.sources.SnapshotTable.currentVersion(path) > 0)
         graft.sources.SnapshotTable.read(spark, path)
-      else cache.computeIfAbsent(key, _ => spark.read.parquet(path))
+      else cache.get(key)(spark.read.parquet(path))
     }
   }
-
-  /** Drop every memoized plan (incl. eventsByDate layouts — the
-    * on-disk partitioned copy stays; a post-clear re-derivation writes
-    * a FRESH versioned directory, never overwriting the old one, so
-    * queries still scanning the previous layout are unaffected). For
-    * long-lived services juggling many datasets; see Graft.clearCaches.
-    */
-  private[graft] def clearCache(): Unit = cache.clear()
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -89,47 +78,32 @@ object Tables {
     * ingest job performs once at load time. Readers get the original
     * columns plus the `event_date` partition column.
     */
+  // Not an Artifacts.tempRoot: the layouts stay on disk across a
+  // clear, because queries still scanning an old layout may be in
+  // flight.
   private lazy val partRoot =
     java.nio.file.Files.createTempDirectory("graft-part-").toString
 
-  // Monotonic suffix for re-derived layouts: after clearCache() the
-  // next eventsByDate call writes layout v(N+1) in a NEW directory
-  // rather than mode-overwriting v(N) in place. In-flight queries
-  // whose plans still point at v(N) keep reading intact files — the
-  // production dataset-retirement pattern (write new version, flip
-  // pointer, garbage-collect old only after quiescence).
+  // Monotonic suffix for re-derived layouts: after a clear the next
+  // eventsByDate call writes layout v(N+1) in a NEW directory rather
+  // than mode-overwriting v(N) in place. In-flight queries whose plans
+  // still point at v(N) keep reading intact files — the production
+  // dataset-retirement pattern (write new version, flip pointer,
+  // garbage-collect old only after quiescence).
   private val layoutVersion = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  def eventsByDate(s: SparkSession, d: String): DataFrame = {
-    val key = (s, d, "events_by_date")
-    // NOT computeIfAbsent: building the layout calls events() → the
-    // same cache map, and a nested computeIfAbsent on one CHM is a
-    // forbidden recursive update (can throw or livelock when the keys
-    // share a bin). Resolve the source and run the (one-time, multi-
-    // second) write outside any map lock; a coarse lock serializes
-    // concurrent first-callers so the overwrite never races itself.
-    val cached = cache.get(key)
-    if (cached != null) cached
-    else {
-      val src = events(s, d)
-      this.synchronized {
-        val again = cache.get(key)
-        if (again != null) again
-        else {
-          // collision-free per-dataset subdir: sanitized full path
-          // (a 32-bit hashCode of the dir can collide and overwrite
-          // another dataset's live layout); versioned leaf so a
-          // re-derivation after clearCache never deletes files an
-          // in-flight scan may still hold open
-          val sub = d.replaceAll("[^A-Za-z0-9._-]", "_")
-          val out = s"$partRoot/$sub/events_by_date/v${layoutVersion.incrementAndGet()}"
-          src.withColumn("event_date", to_date(col("ts")))
-            .write.mode("overwrite").partitionBy("event_date").parquet(out)
-          val df = s.read.parquet(out)
-          cache.put(key, df)
-          df
-        }
-      }
+  // The build reads events() from the same memo inside its own
+  // compute; Artifacts.Memo allows that nesting, and concurrent first
+  // callers wait on the one build.
+  def eventsByDate(s: SparkSession, d: String): DataFrame =
+    cache.get((s, d, "events_by_date")) {
+      // collision-free per-dataset subdir: sanitized full path (a
+      // 32-bit hashCode of the dir can collide and overwrite another
+      // dataset's live layout)
+      val sub = d.replaceAll("[^A-Za-z0-9._-]", "_")
+      val out = s"$partRoot/$sub/events_by_date/v${layoutVersion.incrementAndGet()}"
+      events(s, d).withColumn("event_date", to_date(col("ts")))
+        .write.mode("overwrite").partitionBy("event_date").parquet(out)
+      s.read.parquet(out)
     }
-  }
 }

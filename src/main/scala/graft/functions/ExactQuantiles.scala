@@ -65,13 +65,7 @@ object ExactQuantiles {
     * triple, never on the requested percentiles.
     */
   private val rankedCache =
-    new graft.Memo[(org.apache.spark.sql.SparkSession, String), DataFrame]
-
-  /** Drop the memoized ranked tables (dataset retirement —
-    * Graft.clearCaches). Checkpoint blocks are reclaimed by Spark's
-    * ContextCleaner once unreferenced.
-    */
-  private[graft] def clearCache(): Unit = rankedCache.clear()
+    graft.Artifacts.memo[(org.apache.spark.sql.SparkSession, String), DataFrame]()
 
   /** The ingest-maintained saturation scalar for a (sfDir, table)
     * source — the [[graft.sources.TableStats]] enrollment named after

@@ -63,7 +63,7 @@ object JoinRouter {
     * one narrow count job per table per session, shared by every
     * routed join. Seeded by [[recordRows]] in specs and warm paths.
     */
-  private val countCache = new graft.Memo[(SparkSession, String), Long]
+  private val countCache = graft.Artifacts.memo[(SparkSession, String), Long]()
 
   /** Seed a known row count (spec hook + ingest-maintained path).
     * OVERWRITES any cached probe (r17, ADVICE r16): a table that
@@ -143,7 +143,4 @@ object JoinRouter {
     if (shuffleHashSafeForSource(df.sparkSession, sfDir, table, df))
       df.hint("shuffle_hash")
     else df
-
-  /** Drop memoized probes (dataset retirement — Graft.clearCaches). */
-  private[graft] def clearCache(): Unit = countCache.keys.foreach(countCache.remove)
 }

@@ -468,9 +468,7 @@ object PrefixSum {
   // window on data the probe would have rejected. The tag must still
   // uniquely name the (dataset, group, order, filter) of the input.
   private val routeCache =
-    new graft.Memo[(org.apache.spark.sql.SparkSession, String, Long), Boolean]
-
-  private[graft] def clearRouteCache(): Unit = routeCache.clear()
+    graft.Artifacts.memo[(org.apache.spark.sql.SparkSession, String, Long), Boolean]()
 
   def attachAuto(
       df: DataFrame,

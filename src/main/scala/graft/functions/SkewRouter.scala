@@ -45,12 +45,12 @@ object SkewRouter {
   val HotKeyRows: Long = 1L << 22
 
   private val statCache =
-    new graft.Memo[(org.apache.spark.sql.SparkSession, String), Long]
+    graft.Artifacts.memo[(org.apache.spark.sql.SparkSession, String), Long]()
 
   /** Max rows under any single `keys` value. `tag` identifies the
     * (dataset, key) pair for memoization — pass a stable string like
     * s"$dir#events.user_id". An empty input reports 0. The probe job
-    * runs outside any map bin lock (graft.Memo — ADVICE r13), so
+    * runs outside any map bin lock (graft.Artifacts), so
     * concurrent callers on different tags never serialize.
     */
   def maxKeyRows(df: DataFrame, keys: Seq[String], tag: String): Long =
@@ -111,7 +111,4 @@ object SkewRouter {
       threshold: Long = HotKeyRows): Boolean =
     plainWindowSafeForTable(s"$sfDir/$table.parquet", keys.mkString("_"),
       df, keys, tag, threshold)
-
-  /** Drop memoized stats (dataset retirement — Graft.clearCaches). */
-  private[graft] def clearCache(): Unit = statCache.clear()
 }

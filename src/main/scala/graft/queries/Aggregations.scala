@@ -112,12 +112,12 @@ object Aggregations extends QueryModule {
     * from the corpus, built once, read by several queries — warmAll
     * materializes it as ingest-class work. Oracles unchanged.
     */
-  private val priceQuantileCache = new java.util.concurrent.ConcurrentHashMap[
+  private val priceQuantileCache = graft.Artifacts.memo[
     (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
 
   private[graft] def priceQuantilePanel(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    priceQuantileCache.computeIfAbsent((s, d), _ =>
+    priceQuantileCache.get((s, d))(
       graft.functions.ExactQuantiles.cont(
         Tables.lineitem(s, d), Seq("l_returnflag"), "l_extendedprice",
         Seq(0.05 -> "p05", 0.25 -> "q25", 0.5 -> "q50", 0.75 -> "q75",
@@ -126,8 +126,6 @@ object Aggregations extends QueryModule {
         knownMaxDistinct = graft.functions.ExactQuantiles
           .knownMaxDistinctForSource(d, "lineitem", Seq("l_returnflag"),
             "l_extendedprice")).localCheckpoint(false))
-
-  private[graft] def clearPriceQuantileCache(): Unit = priceQuantileCache.clear()
 
   private[graft] def approxPercentileRaw(
       s: org.apache.spark.sql.SparkSession, d: String) =

@@ -108,12 +108,12 @@ object Dedup extends QueryModule {
     * role is a written-once shingle/signature side table (the band
     * history already persists the signature half).
     */
-  private val shCache = new java.util.concurrent.ConcurrentHashMap[
+  private val shCache = graft.Artifacts.memo[
     (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
 
   private def shingleTableWarm(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    shCache.computeIfAbsent((s, d), _ =>
+    shCache.get((s, d))(
       shingleTable(s, d)
         // 128-BIT hashed shingle SET alongside the strings (r18,
         // VERDICT r17 item 4): the verify intersects ~200-element
@@ -164,12 +164,12 @@ object Dedup extends QueryModule {
     * shuffles, and the checkpoint is the documented "materialize the
     * signature table once" pattern (MinhashProfile: 6.6s → 3.7s).
     */
-  private val sigCache = new java.util.concurrent.ConcurrentHashMap[
+  private val sigCache = graft.Artifacts.memo[
     (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
 
   private def bandSignatures(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    sigCache.computeIfAbsent((s, d), _ => bandSignaturesPlan(s, d))
+    sigCache.get((s, d))(bandSignaturesPlan(s, d))
 
   private def bandSignaturesPlan(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
@@ -320,49 +320,16 @@ object Dedup extends QueryModule {
     * materializes it (|pairs| rows, near-dup-density-sized — orders of
     * magnitude smaller than the corpus), later consumers read the
     * checkpointed rows. At 100 TB the same role is played by a
-    * write-once parquet pair table. computeIfAbsent keeps concurrent
+    * write-once parquet pair table. The memo keeps concurrent
     * consumers (the bench runs 8-way) from building two plans; the
     * lazy checkpoint itself is materialized-once per RDD by Spark.
     */
-  private val pairsCache = new java.util.concurrent.ConcurrentHashMap[
+  private val pairsCache = graft.Artifacts.memo[
     (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
 
   private def verifiedPairs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    pairsCache.computeIfAbsent((s, d),
-      _ => minhashPairs(s, d).localCheckpoint(false))
-
-  /** Drop the memoized signature/pair artifacts; next consumer
-    * re-derives them identically (CachesSpec). The checkpoint blocks
-    * are reclaimed by Spark's ContextCleaner once unreferenced — no
-    * eager unpersist here, which would break queries still holding
-    * the old DataFrames mid-flight. See Graft.clearCaches.
-    */
-  private[graft] def clearCaches(): Unit = {
-    sigCache.clear(); pairsCache.clear(); shCache.clear()
-    batchBandCache.clear(); fpCache.clear(); spansCache.clear()
-    docCountCache.clear(); adaptiveFpCache.clear()
-    // the history band tables live in temp dirs THIS cache created —
-    // delete them as their last reference drops (ADVICE r13: "OS
-    // reclaims" only holds at reboot/tmp-cleaner; repeated clear+rerun
-    // cycles would otherwise accumulate full band tables under /tmp)
-    histTableCache.keys.foreach { k =>
-      histTableCache.peek(k).foreach(deleteTree)
-      histTableCache.remove(k)
-    }
-  }
-
-  private def deleteTree(root: String): Unit = {
-    import java.nio.file.{Files, Path, Paths}
-    import java.util.Comparator
-    val p = Paths.get(root)
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
-  }
+    pairsCache.get((s, d))(minhashPairs(s, d).localCheckpoint(false))
 
   /** Force the one-time shared artifacts (LSH signatures + verified
     * pairs, both eager checkpoints) so a bench harness can charge the
@@ -569,9 +536,9 @@ object Dedup extends QueryModule {
     * [[warm]] for the graded widths; the adaptive query keeps its own
     * width-routed cache (adaptiveFpCache).
     */
-  private val fpCache = new graft.Memo[
+  private val fpCache = graft.Artifacts.memo[
     (org.apache.spark.sql.SparkSession, String, Int),
-    org.apache.spark.sql.DataFrame]
+    org.apache.spark.sql.DataFrame]()
 
   private[graft] def simhashFpWarm(s: org.apache.spark.sql.SparkSession,
       d: String, width: Int): org.apache.spark.sql.DataFrame =
@@ -843,11 +810,11 @@ object Dedup extends QueryModule {
     * Spark jobs (VERDICT r10 item 5; WarmAllSpec pins it); on a cold
     * session the first construction pays one count, as before.
     */
-  private val docCountCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), java.lang.Long]()
+  private val docCountCache =
+    graft.Artifacts.memo[(org.apache.spark.sql.SparkSession, String), Long]()
 
   private def docCount(s: org.apache.spark.sql.SparkSession, d: String): Long =
-    docCountCache.computeIfAbsent((s, d), _ => Tables.documents(s, d).count())
+    docCountCache.get((s, d))(Tables.documents(s, d).count())
 
   /** Memoized adaptive-width fingerprint table (doc_id, band0..3) —
     * the per-dataset artifact q_dedup_simhash_adaptive reads. The
@@ -855,12 +822,12 @@ object Dedup extends QueryModule {
     * un-memoized, the lazy localCheckpoint's `toRdd` under AQE
     * launches a stage at every plan build (WarmAllSpec pins zero).
     */
-  private val adaptiveFpCache = new java.util.concurrent.ConcurrentHashMap[
+  private val adaptiveFpCache = graft.Artifacts.memo[
     (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
 
   private def adaptiveFp(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    adaptiveFpCache.computeIfAbsent((s, d), _ => {
+    adaptiveFpCache.get((s, d)) {
       val w = adaptiveBandBits(docCount(s, d))
       val tok = Tables.documents(s, d)
         .select(col("doc_id"), explode(TF.tokens(col("text"))).as("token"))
@@ -876,7 +843,7 @@ object Dedup extends QueryModule {
             when(col(s"s${p}_$j") > 0, lit(1L << p)).otherwise(lit(0L)))
             .reduce(_ + _).as(s"band$j")): _*)
         .localCheckpoint(false)
-    })
+    }
 
   val dedupSimhashAdaptive = QueryDef(
     "q_dedup_simhash_adaptive",
@@ -1207,25 +1174,21 @@ object Dedup extends QueryModule {
     * bucket-pruned path; nothing at query time re-touches history
     * text or the full-corpus signature artifact.
     */
-  private val histTableCache = new graft.Memo[
-    (org.apache.spark.sql.SparkSession, String, Long), String]
+  private val histTableCache = graft.Artifacts.memo[
+    (org.apache.spark.sql.SparkSession, String, Long), String]()
 
   /** Batch-side band signatures per (session, dataset, split) — the
     * banding the ingest pipeline runs once per arriving batch (r17);
     * batch-sized checkpoint, materialized in [[warm]].
     */
-  private val batchBandCache = new graft.Memo[
+  private val batchBandCache = graft.Artifacts.memo[
     (org.apache.spark.sql.SparkSession, String, Long),
-    org.apache.spark.sql.DataFrame]
+    org.apache.spark.sql.DataFrame]()
 
   private def incrementalHistoryRoot(
       s: org.apache.spark.sql.SparkSession, d: String, splitId: Long): String =
-    // graft.Memo (ADVICE r13): the history ingest is a long Spark job —
-    // it must not run under a ConcurrentHashMap bin lock where it
-    // would serialize unrelated concurrent callers
     histTableCache.get((s, d, splitId)) {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-bandhistory").toString
+      val root = graft.Artifacts.tempRoot("graft-bandhistory")
       val hist = bandSignaturesOf(shingleTable(s, d).filter(col("doc_id") < splitId))
       graft.sources.BandHistory.append(s, root, hist, batchId = 0L)
       root
@@ -1305,9 +1268,9 @@ object Dedup extends QueryModule {
     * table); built by the first consumer's action since r18 (warm
     * must not pre-build per-query subplans).
     */
-  private val spansCache = new graft.Memo[
+  private val spansCache = graft.Artifacts.memo[
     (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame]
+    org.apache.spark.sql.DataFrame]()
 
   private def spanTableWarm(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =

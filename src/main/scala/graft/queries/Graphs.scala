@@ -26,13 +26,7 @@ import org.apache.spark.sql.functions._
   */
 object Graphs extends QueryModule {
 
-  private val edgeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  /** Drop the memoized edge table; re-derived identically on next use
-    * (CachesSpec). See Graft.clearCaches.
-    */
-  private[graft] def clearCache(): Unit = edgeCache.clear()
+  private val edgeCache = graft.Artifacts.memo[(SparkSession, String), DataFrame]()
 
   /** Force the memoized edge table (eager checkpoint) for an untimed
     * bench warmup — the shared per-dataset build cost, not any one
@@ -47,7 +41,7 @@ object Graphs extends QueryModule {
     * same contract as Dedup.verifiedPairs / Tables.eventsByDate.
     */
   private def keptEdges(s: SparkSession, d: String): DataFrame =
-    edgeCache.computeIfAbsent((s, d), _ => {
+    edgeCache.get((s, d)) {
       val e0 = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
@@ -73,7 +67,7 @@ object Graphs extends QueryModule {
         .filter(col("w") * col("ne") > col("tw"))
         .select(col("a"), col("b"), col("w"))
         .localCheckpoint()
-    })
+    }
 
   /** Oracle CTE producing the identical `kept(a, b)` edge set. The
     * MATERIALIZED hints matter: DuckDB inlines CTEs by default, and

@@ -101,23 +101,14 @@ object Similarity extends QueryModule {
     * once in warmAll (ingest-class cost), probed by q_ann_ivf_indexed.
     */
   private val vecIndexCache =
-    new graft.Memo[(org.apache.spark.sql.SparkSession, String), String]
+    graft.Artifacts.memo[(org.apache.spark.sql.SparkSession, String), String]()
 
   private def vecIndexRootOf(
       s: org.apache.spark.sql.SparkSession, d: String): String =
     vecIndexCache.get((s, d)) {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-vecindex").toString
+      val root = graft.Artifacts.tempRoot("graft-vecindex")
       graft.sources.VectorIndex.build(s, Tables.embeddings(s, d), root)
       root
-    }
-
-  private[graft] def clearVecIndexCache(): Unit =
-    vecIndexCache.keys.foreach { k =>
-      vecIndexCache.peek(k).foreach { root =>
-        graft.sources.SnapshotTable.deleteTree(java.nio.file.Paths.get(root))
-      }
-      vecIndexCache.remove(k)
     }
 
   /** q_ann_ivf's exact answer THROUGH the persisted vector index
@@ -142,13 +133,12 @@ object Similarity extends QueryModule {
     * alive so the probe batch is identical to q_ann_ivf's.
     */
   private val postDeleteVecCache =
-    new graft.Memo[(org.apache.spark.sql.SparkSession, String), String]
+    graft.Artifacts.memo[(org.apache.spark.sql.SparkSession, String), String]()
 
   private def postDeleteVecRootOf(
       s: org.apache.spark.sql.SparkSession, d: String): String =
     postDeleteVecCache.get((s, d)) {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-vecindex-del").toString
+      val root = graft.Artifacts.tempRoot("graft-vecindex-del")
       graft.sources.VectorIndex.build(s, Tables.embeddings(s, d), root)
       graft.sources.VectorIndex.delete(s, root,
         "vec_id % 9 = 0 AND vec_id >= 10")
@@ -160,15 +150,13 @@ object Similarity extends QueryModule {
     * disjoint batch split converges to the same index content.
     */
   private val streamVecCache =
-    new graft.Memo[(org.apache.spark.sql.SparkSession, String), String]
+    graft.Artifacts.memo[(org.apache.spark.sql.SparkSession, String), String]()
 
   private def streamVecRootOf(
       s: org.apache.spark.sql.SparkSession, d: String): String =
     streamVecCache.get((s, d)) {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-vecindex-stream").toString
-      val txn = java.nio.file.Files
-        .createTempDirectory("graft-vecindex-stream-txn").toString
+      val root = graft.Artifacts.tempRoot("graft-vecindex-stream")
+      val txn = graft.Artifacts.tempRoot("graft-vecindex-stream-txn")
       graft.sources.VectorIndex.init(root)
       val e = Tables.embeddings(s, d)
       (0 until 3).foreach { i =>
@@ -176,16 +164,6 @@ object Similarity extends QueryModule {
         graft.sources.VectorIndex.ingestBatch(s, batch, root, txn, i.toLong)
       }
       root
-    }
-
-  private[graft] def clearAuxVecIndexCaches(): Unit =
-    Seq(postDeleteVecCache, streamVecCache).foreach { cache =>
-      cache.keys.foreach { k =>
-        cache.peek(k).foreach { root =>
-          graft.sources.SnapshotTable.deleteTree(java.nio.file.Paths.get(root))
-        }
-        cache.remove(k)
-      }
     }
 
   /** The shared ANN rerank over a vector-index root: probe batch =

@@ -1988,18 +1988,17 @@ object TextAnalysis extends QueryModule {
   // ---- inverted-index search ----------------------------------------
 
   /** One persisted index per (session, dataset) — built on first use
-    * (graft.Memo: the build is a Spark job and must not run under a
-    * map bin lock), reused by Bench reruns. Temp-dir roots, the same
+    * (an Artifacts memo: the build is a Spark job and must not run
+    * under a map bin lock), reused by Bench reruns. Temp-dir roots, the same
     * lifecycle as the incremental-dedup band history.
     */
   private val indexCache =
-    new graft.Memo[(org.apache.spark.sql.SparkSession, String), String]
+    graft.Artifacts.memo[(org.apache.spark.sql.SparkSession, String), String]()
 
   private def indexRootOf(
       s: org.apache.spark.sql.SparkSession, d: String): String =
     indexCache.get((s, d)) {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-textindex").toString
+      val root = graft.Artifacts.tempRoot("graft-textindex")
       graft.sources.TextIndex.build(s, Tables.documents(s, d), root)
       root
     }
@@ -2011,15 +2010,14 @@ object TextAnalysis extends QueryModule {
     * [[indexRootOf]] because delete mutates the root.
     */
   private val postDeleteCache =
-    new graft.Memo[(org.apache.spark.sql.SparkSession, String), String]
+    graft.Artifacts.memo[(org.apache.spark.sql.SparkSession, String), String]()
 
   private[queries] val PostDeletePredicate = "doc_id % 7 = 0"
 
   private def postDeleteRootOf(
       s: org.apache.spark.sql.SparkSession, d: String): String =
     postDeleteCache.get((s, d)) {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-textindex-del").toString
+      val root = graft.Artifacts.tempRoot("graft-textindex-del")
       graft.sources.TextIndex.build(s, Tables.documents(s, d), root)
       graft.sources.TextIndex.delete(s, root, PostDeletePredicate)
       root
@@ -2032,15 +2030,13 @@ object TextAnalysis extends QueryModule {
     * doc_id; any disjoint split converges to the same folded index.
     */
   private val streamIndexCache =
-    new graft.Memo[(org.apache.spark.sql.SparkSession, String), String]
+    graft.Artifacts.memo[(org.apache.spark.sql.SparkSession, String), String]()
 
   private def streamIndexRootOf(
       s: org.apache.spark.sql.SparkSession, d: String): String =
     streamIndexCache.get((s, d)) {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-textindex-stream").toString
-      val txn = java.nio.file.Files
-        .createTempDirectory("graft-textindex-stream-txn").toString
+      val root = graft.Artifacts.tempRoot("graft-textindex-stream")
+      val txn = graft.Artifacts.tempRoot("graft-textindex-stream-txn")
       graft.sources.TextIndex.init(root)
       val docs = Tables.documents(s, d)
       (0 until 3).foreach { i =>
@@ -2050,21 +2046,6 @@ object TextAnalysis extends QueryModule {
       }
       graft.sources.TextIndex.optimize(s, root)
       root
-    }
-
-  /** Drop the memoized index roots AND their temp-dir tables (the
-    * same lifecycle contract as Dedup's band-history cache: "OS
-    * reclaims /tmp" only holds at reboot, so repeated clear+rerun
-    * cycles must not accumulate full postings tables).
-    */
-  private[graft] def clearIndexCache(): Unit =
-    Seq(indexCache, postDeleteCache, streamIndexCache).foreach { cache =>
-      cache.keys.foreach { k =>
-        cache.peek(k).foreach { root =>
-          graft.sources.SnapshotTable.deleteTree(java.nio.file.Paths.get(root))
-        }
-        cache.remove(k)
-      }
     }
 
   /** Conjunctive term retrieval THROUGH the inverted index (sources/

@@ -268,24 +268,19 @@ object BandHistory {
     * stop-shingle buckets saturate — the same bound that lets the
     * probe broadcast it), so driver collection is safe.
     */
-  private val satCache = new graft.Memo[(SparkSession, String, Int),
-    (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)]
+  private val satCache = graft.Artifacts.memo[(SparkSession, String, Int),
+    (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)]()
 
   /** file → (min, max) slice stats per bands-table version. */
-  private val statsCache = new graft.Memo[(String, Int),
-    Map[String, (String, String)]]
+  private val statsCache = graft.Artifacts.memo[(String, Int),
+    Map[String, (String, String)]]()
 
   /** The bands table's schema (append-only table — stable across
     * versions): lets the pruned probe read skip per-call parquet
     * footer inference.
     */
   private val schemaCache =
-    new graft.Memo[(SparkSession, String), org.apache.spark.sql.types.StructType]
-
-  /** Drop the per-version memos (dataset retirement — Graft.clearCaches). */
-  private[graft] def clearCaches(): Unit = {
-    satCache.clear(); statsCache.clear(); schemaCache.clear()
-  }
+    graft.Artifacts.memo[(SparkSession, String), org.apache.spark.sql.types.StructType]()
 
   /** The saturated-bucket set visible to batch `beforeBatchId` —
     * rows from earlier batches only, so a replayed batch never sees

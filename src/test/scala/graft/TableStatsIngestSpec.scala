@@ -99,7 +99,7 @@ class TableStatsIngestSpec extends AnyFunSuite {
     // END-TO-END: constructing q_sessionize_auto over this dataset
     // runs ZERO Spark jobs — the stored scalar answers the route and
     // no probe, checkpoint, or inference job fires
-    SkewRouter.clearCache()
+    Graft.clearCaches()
     var routed: org.apache.spark.sql.DataFrame = null
     val jobs = jobsDuring {
       routed = SparkEntry.queries("q_sessionize_auto")(spark, dir)
