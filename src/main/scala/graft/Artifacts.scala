@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
+import scala.jdk.CollectionConverters._
+
 /** The one seam through which the library memoizes per-(session,
   * dataset) artifacts and owns their temp roots. Two rules hold here
   * and nowhere else:
@@ -17,18 +19,19 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
   *    a nested compute on the same map is a forbidden recursive update.
   *  - Retirement rule: every memo is made by [[memo]], which registers
   *    it, and every temp directory an artifact writes is made by
-  *    [[tempRoot]], which records it. [[clear]] (`Graft.clearCaches`)
-  *    drops every registered memo, then deletes every recorded root.
-  *    Registration happens where the cache is made, so no cache can be
-  *    missed by a clear.
+  *    [[tempRoot]] or [[exitRoot]], which record it. [[clear]]
+  *    (`Graft.clearCaches`) drops every registered memo, then deletes
+  *    every [[tempRoot]]. One shutdown hook deletes every recorded root
+  *    of both kinds when the JVM exits, so a JVM that never clears
+  *    leaves no tree behind. Registration happens where the cache or
+  *    root is made, so none can be missed.
   *
   * A clear is for dataset-retirement points: a query still reading a
   * deleted root, or a build running during the clear, can fail. Plans
   * held by in-flight queries are not unpersisted; Spark's
   * ContextCleaner reclaims checkpoint blocks once the dropped
-  * references are collected. The one temp root outside this seam is
-  * `Tables.partRoot`, the events layout, kept across a clear for
-  * in-flight readers.
+  * references are collected. An [[exitRoot]] (the events layout,
+  * `Tables.partRoot`) is kept across a clear for in-flight readers.
   */
 private[graft] object Artifacts {
 
@@ -77,6 +80,13 @@ private[graft] object Artifacts {
 
   private val memos = new ConcurrentLinkedQueue[Memo[_, _]]()
   private val roots = ConcurrentHashMap.newKeySet[String]()
+  private val exitRoots = ConcurrentHashMap.newKeySet[String]()
+
+  // best effort per root: one that fails to delete (say, still being
+  // written at exit) must not keep the others on disk
+  sys.addShutdownHook {
+    (roots.asScala ++ exitRoots.asScala).foreach(root => scala.util.Try(delete(root)))
+  }
 
   /** A new memo, registered so [[clear]] drops it. */
   def memo[K, V](): Memo[K, V] = {
@@ -86,20 +96,30 @@ private[graft] object Artifacts {
   }
 
   /** A new temp directory named `prefix…` for an artifact to write,
-    * recorded so [[clear]] deletes it.
+    * recorded so [[clear]] (or, failing that, JVM exit) deletes it.
     */
-  def tempRoot(prefix: String): String = {
+  def tempRoot(prefix: String): String = record(roots, prefix)
+
+  /** A new temp directory named `prefix…` that survives [[clear]] and
+    * is deleted only at JVM exit.
+    */
+  def exitRoot(prefix: String): String = record(exitRoots, prefix)
+
+  private def record(set: java.util.Set[String], prefix: String): String = {
     val root = java.nio.file.Files.createTempDirectory(prefix).toString
-    roots.add(root)
+    set.add(root)
     root
   }
 
-  /** Drop every registered memo, then delete every recorded root. */
+  private def delete(root: String): Unit =
+    sources.SnapshotTable.deleteTree(java.nio.file.Paths.get(root))
+
+  /** Drop every registered memo, then delete every [[tempRoot]]. */
   def clear(): Unit = {
     memos.forEach(_.clear())
     roots.forEach { root =>
       roots.remove(root)
-      sources.SnapshotTable.deleteTree(java.nio.file.Paths.get(root))
+      delete(root)
     }
   }
 }

@@ -78,11 +78,10 @@ object Tables {
     * ingest job performs once at load time. Readers get the original
     * columns plus the `event_date` partition column.
     */
-  // Not an Artifacts.tempRoot: the layouts stay on disk across a
+  // An exit root, not a tempRoot: the layouts stay on disk across a
   // clear, because queries still scanning an old layout may be in
-  // flight.
-  private lazy val partRoot =
-    java.nio.file.Files.createTempDirectory("graft-part-").toString
+  // flight; they go when the JVM exits.
+  private lazy val partRoot = Artifacts.exitRoot("graft-part-")
 
   // Monotonic suffix for re-derived layouts: after a clear the next
   // eventsByDate call writes layout v(N+1) in a NEW directory rather

@@ -35,9 +35,10 @@ import org.apache.spark.sql.types.DecimalType
   *    integer boundary — the discrete jump makes that a WRONG VALUE,
   *    not a rounding blur.
   *
-  * Construction is eager (PrefixSum checkpoints and collects its
-  * metadata-sized partials when the plan is built) — the same
-  * contract as q_weighted_median / q_ks_test.
+  * Construction runs jobs only for what the route needs: the routing
+  * probe when no stored stat is passed, and PrefixSum's lazy
+  * checkpoint on the prefix route (see [[PrefixSum]]). A stored stat
+  * that routes to the window builds a fully lazy plan.
   */
 object ExactQuantiles {
 
@@ -55,7 +56,7 @@ object ExactQuantiles {
 
   /** Session-warm memo of the ranked distinct-value table per
     * (session, tag) — VERDICT r13 item 2. Construction of a quantile
-    * query is eager (checkpoint + routing-stat jobs); queries over
+    * query can run jobs (routing probe, prefix checkpoint); queries over
     * the SAME (dataset, groups, value) triple were each paying that
     * fixed cost per invocation. A caller-supplied `tag` (stable
     * string naming the triple, e.g. s"$dir#lineitem.l_returnflag
@@ -72,7 +73,7 @@ object ExactQuantiles {
     * `groupCols :+ valueCol` (the same convention SkewRouter's
     * plainWindowSafeForSource uses). Zero Spark jobs; `None` for a
     * plain parquet corpus (one file-exists check) or a stale stat,
-    * both of which fall back to [[windowSafe]]'s probe. Pass the
+    * both of which fall back to [[PrefixSum.attachAuto]]'s probe. Pass the
     * result as `knownMaxDistinct` so a stats-bearing snapshot table
     * constructs its quantile plan job-free (TableStatsIngestSpec).
     */
@@ -169,34 +170,28 @@ object ExactQuantiles {
     * cumulative count `cum` with multiplicity `c` occupies ranks
     * [lo, cum] = [cum−c+1, cum]; `n` is the group row count.
     *
-    * Cumulation strategy (r12 saturation guard, finished r13):
-    *  - GLOBAL quantiles (no groups) always go through [[PrefixSum]]'s
+    * The cumulation is one [[PrefixSum.attachAuto]] call over the
+    * distinct-value table, so the window-versus-prefix choice is made in
+    * one place:
+    *  - GLOBAL quantiles (no groups) always take [[PrefixSum]]'s
     *    distributed cumsum — a group-less window is ONE partition over
     *    a domain with no saturation guarantee.
-    *  - GROUPED quantiles first materialize the distinct-value table
-    *    once (`localCheckpoint` — the routing stat and the cumulation
-    *    both read it, so the RAW input is scanned exactly once; at
-    *    100 TB the raw scan dominates, and a saturating domain's
-    *    distinct table is tiny), then pick:
-    *      - |distinct values| of the LARGEST group ≤ `maxWindowDistinct`
-    *        → plain `Window.partitionBy(groups)`: the window input
-    *        saturates (integer cents/µs/days domains repeat long before
-    *        row counts stop growing) and a partition never approaches
-    *        the raw group size. Measured at sf0.1 this is ~2× cheaper
-    *        per call than the PrefixSum machinery when |groups| is
-    *        small. Both per-group sums share one WindowExec (same
-    *        partition+order spec, different frames).
-    *      - above the guard (a genuinely continuous domain — q_mad's
-    *        ~99%-unique double deviations at corpus scale) → the
-    *        grouped [[PrefixSum]] cumsum: distinct-per-group tracks the
-    *        group size, so the window partition WOULD be the
-    *        single-task serialization this operator exists to kill.
-    *    The two routes are rank-identical (counts are exact longs), so
-    *    the switch is invisible to results — pinned both ways in
-    *    ExactQuantilesSpec.
-    * Construction is eager either way (checkpoint / PrefixSum collect
-    * run when the query function is invoked — the q_weighted_median
-    * contract).
+    *  - GROUPED quantiles take the plain `Window.partitionBy(groups)`
+    *    while the LARGEST group's distinct-value count is ≤
+    *    `maxWindowDistinct`: the window input saturates (integer
+    *    cents/µs/days domains repeat long before row counts stop
+    *    growing), and measured at sf0.1 this is ~2× cheaper per call
+    *    than the prefix machinery when |groups| is small. Above the
+    *    guard (a genuinely continuous domain — q_mad's ~99%-unique
+    *    double deviations at corpus scale) the grouped PrefixSum
+    *    cumsum takes over.
+    *  - The stat is `knownMaxDistinct` when the caller has it (no job,
+    *    no checkpoint); otherwise attachAuto checkpoints the distinct
+    *    table once and probes it, so the RAW input is scanned exactly
+    *    once — never a second raw scan for routing.
+    * The two routes are rank-identical (counts are exact longs), so the
+    * switch is invisible to results — pinned both ways in
+    * ExactQuantilesSpec.
     */
   private def rankedValuesTagged(df: DataFrame, groupCols: Seq[String],
       valueCol: String, maxWindowDistinct: Long, tag: String,
@@ -224,61 +219,12 @@ object ExactQuantiles {
       knownMaxDistinct: Option[Long]): DataFrame = {
     val distinctTable = df.groupBy((groupCols :+ valueCol).map(col): _*)
       .agg(count(lit(1)).as("__eq_c"))
-    def windowCum(agg: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(groupCols.map(col): _*).orderBy(col(valueCol))
-      val W = org.apache.spark.sql.expressions.Window
-      agg
-        .withColumn("__eq_cum", sum(col("__eq_c")).over(
-          w.rowsBetween(W.unboundedPreceding, W.currentRow)))
-        .withColumn("__eq_n", sum(col("__eq_c")).over(
-          w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)))
-    }
-    def prefixCum(agg: DataFrame): DataFrame =
-      PrefixSum.attach(agg, groupCols, Seq(col(valueCol)),
+    PrefixSum.attachAuto(distinctTable, groupCols, Seq(col(valueCol)),
         sums = Seq("__eq_c" -> "__eq_cum"),
-        totals = Seq("__eq_c" -> "__eq_n"))
-    val cum =
-      if (groupCols.isEmpty) {
-        PrefixSum.attach(distinctTable, Nil, Seq(col(valueCol)),
-          sums = Seq("__eq_c" -> "__eq_cum"),
-          totals = Seq("__eq_c" -> "__eq_n"))
-      } else knownMaxDistinct match {
-        case Some(md) =>
-          // ingest-maintained stat (TableStats r14): routing needs
-          // ZERO query-time jobs, and the window route needs no
-          // checkpoint either (there is no second consumer of the
-          // distinct table), so the plan stays fully lazy
-          if (md <= maxWindowDistinct) windowCum(distinctTable)
-          else prefixCum(distinctTable)
-        case None =>
-          val agg = distinctTable.localCheckpoint()
-          if (windowSafe(agg, groupCols, maxWindowDistinct)) windowCum(agg)
-          else prefixCum(agg)
-      }
-    cum.withColumn("__eq_lo", col("__eq_cum") - col("__eq_c") + 1)
-  }
-
-  /** Routing stat for the saturation guard: max distinct-value count
-    * over all groups, computed on the (group, value, count) table —
-    * never the raw input (a second raw scan is exactly the 100 TB
-    * cost to avoid). Two tiers: the TOTAL distinct count (a
-    * shuffle-free job over the already-checkpointed table) upper-
-    * bounds every group's count, so when it fits the guard the
-    * per-group shuffle is skipped entirely — the common case for
-    * saturating domains. Only a total above the guard pays the
-    * per-group max. True (window-safe) when every group's distinct
-    * count fits; an empty input routes to the window trivially.
-    */
-  private[graft] def windowSafe(distinctTable: DataFrame,
-      groupCols: Seq[String], maxWindowDistinct: Long): Boolean = {
-    if (distinctTable.count() <= maxWindowDistinct) return true
-    val r = distinctTable
-      .groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__eq_d"))
-      .agg(max(col("__eq_d")))
-      .head()
-    r.isNullAt(0) || r.getLong(0) <= maxWindowDistinct
+        totals = Seq("__eq_c" -> "__eq_n"),
+        maxWindowDistinct = maxWindowDistinct,
+        knownMaxDistinct = knownMaxDistinct)
+      .withColumn("__eq_lo", col("__eq_cum") - col("__eq_c") + 1)
   }
 
   private def widen(byP: DataFrame, groupCols: Seq[String],

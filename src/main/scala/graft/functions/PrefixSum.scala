@@ -1,11 +1,8 @@
 package graft.functions
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Distributed exact total-order rank / running-sum (SCALING.md's
   * two-pass prefix primitive). `Window.orderBy(...)` with no partition
@@ -15,20 +12,37 @@ import org.apache.spark.sql.types._
   * computes the same ranks and inclusive running sums with all-parallel
   * stages:
   *
-  *   1. range-partition on (groupCols ++ sortCols) and stamp each row
-  *      with its physical partition id; `localCheckpoint` pins the
-  *      sampled range boundaries so both downstream passes read the
-  *      SAME partitioning (two independent range shuffles could sample
-  *      different bounds and corrupt the offsets);
-  *   2. per-(pid, group) partial counts/sums — one map-side-combined
-  *      aggregate whose output is cluster-metadata-sized
-  *      (#partitions × #groups rows), collected to the driver exactly
-  *      like the storage layer's file-count metadata ops;
-  *   3. exclusive prefix offsets per group computed driver-side and
-  *      broadcast-joined back on (pid, group);
+  *   1. range-partition on (groupCols ++ sortCols), stamp each row
+  *      with its physical partition id, and pin the result with a LAZY
+  *      `localCheckpoint`: every downstream pass reads the SAME RDD, so
+  *      the sampled range bounds are fixed once by RDD identity (two
+  *      independent range shuffles could sample different bounds and
+  *      corrupt the offsets); correctness never depends on exchange
+  *      reuse;
+  *   2. per-(pid, group) partial counts / sums / mins — one
+  *      map-side-combined aggregate of #partitions × #groups rows;
+  *   3. exclusive prefix offsets and group totals over those partials
+  *      with Spark windows partitioned by the groups and ordered by
+  *      pid, joined back on (pid, group);
   *   4. a per-(pid, group)-PARTITIONED window adds the local
-  *      rank/running sum to the broadcast offset — WindowExec runs on
+  *      rank/running sum to the offset — WindowExec runs on
   *      #buckets-way parallel slices, never one partition.
+  *
+  * Nothing is collected to the driver and no action runs while the
+  * plan is built; everything after the range exchange fuses into the
+  * caller's action. What construction still costs is the lazy
+  * checkpoint's `toRdd`: under AQE it materializes the range sampling
+  * and shuffle-map stages (`Dataset.localCheckpoint(false)` plans the
+  * subtree), the same for grouped and global orders.
+  *
+  * Partials size: with no groups they are at most one row per shuffle
+  * partition by construction, so the global offsets are broadcast (the
+  * one legitimate unpartitioned window: ordered by pid over those
+  * partials). With groups they are #partitions × #groups rows and the
+  * size-driven join choice decides how they join back; the offsets
+  * window is partitioned by the groups. Many small groups are usually
+  * cheaper as a plain partitioned window — [[attachAuto]] routes
+  * between the two on a per-group size stat.
   *
   * The produced rank / running sums are a pure function of the total
   * order (sortCols must be a total order within each group — include a
@@ -42,36 +56,14 @@ import org.apache.spark.sql.types._
   * bit-identical to the one-partition window — callers needing
   * hash-stable doubles should sum an exact type (e.g. cents as long,
   * or decimal) and divide at the end, which is what every graded query
-  * using this primitive does.
+  * using this primitive does. Running mins are order-insensitive and
+  * use Spark's own `min` at every level (NaN largest, strings in
+  * UTF-8 binary order), so they are bit-identical for every type.
   *
   * Group totals (`totals` / `countTotal`) ride the same partials — no
   * `Window.partitionBy()` over the data, no second aggregate pass.
-  *
-  * CARDINALITY CONTRACT: the pass-1 partials are #partitions × #groups
-  * rows and are collected to the driver, so `groupCols` must have
-  * BOUNDED cardinality (a global order, calendar buckets, enum-like
-  * groups). `attach` enforces this with a runtime guard: if the
-  * partials exceed `maxPartials` rows the metadata collect is aborted
-  * (only `maxPartials + 1` rows ever reach the driver) and the call
-  * falls back to the plain `Window.partitionBy(groupCols)` window —
-  * which is exactly the right plan for high-cardinality groups, since
-  * many groups already parallelize WindowExec and need no prefix
-  * machinery. The fallback computes identical ranks/sums, so the
-  * switch is invisible to callers.
-  *
-  * Construction is EAGER (checkpoint + metadata collect run when the
-  * query function is invoked), the same contract as Dedup.verifiedPairs
-  * and KMeansLite.
   */
 object PrefixSum {
-
-  /** Partials-row cap for the driver-side metadata collect: above this
-    * the per-group offsets stop being "cluster metadata" and `attach`
-    * falls back to the partitioned window. 2^17 rows × ~100 B ≈ 13 MB
-    * driver memory worst-case — same order as Spark's own
-    * `spark.sql.autoBroadcastJoinThreshold` default.
-    */
-  val DefaultMaxPartials: Int = 1 << 17
 
   /** Attach rank / running-sum / group-total columns to `df`.
     *
@@ -95,9 +87,6 @@ object PrefixSum {
     *                   min over rows strictly before the current row;
     *                   null on a group's first row (skyline "does any
     *                   strictly-cheaper row undercut me" probes)
-    * @param maxPartials guard on the driver-side partials collect; above
-    *                   this the call falls back to the plain partitioned
-    *                   window (see the cardinality contract above)
     */
   def attach(
       df: DataFrame,
@@ -108,247 +97,33 @@ object PrefixSum {
       totals: Seq[(String, String)] = Nil,
       countTotal: Option[String] = None,
       mins: Seq[(String, String)] = Nil,
-      minsExcl: Seq[(String, String)] = Nil,
-      maxPartials: Int = DefaultMaxPartials): DataFrame = {
-    // Construction-LAZY global path (r18, VERDICT r17 item 5): with no
-    // group columns the partials are provably ≤ #shuffle-partitions
-    // rows, so the cardinality guard (the reason for the eager collect)
-    // is vacuous and the offsets can be a broadcast-joined SUBQUERY
-    // instead of a driver collect. Construction then runs ZERO Spark
-    // jobs — under a concurrent bench the old eager checkpoint +
-    // guarded collect serialized every PrefixSum query's construction
-    // (q_rfm builds three of these machines: measured 4.1 s concurrent
-    // vs 1.65 s solo in r17, the round's biggest honest per-query
-    // cost). Results are identical: same range partitioning, same
-    // per-slice window arithmetic, offsets now summed by Spark's own
-    // window aggregate over the partials instead of driver-side.
-    if (groupCols.isEmpty)
-      return attachGlobalLazy(df, sortCols, rank, sums, totals,
-        countTotal, mins, minsExcl)
-    val spark = df.sparkSession
-    val pid = "__ps_pid"
-    val buckets = spark.sessionState.conf.numShufflePartitions
-    val rangeCols = groupCols.map(col) ++ sortCols
-    val parted = df
-      .repartitionByRange(buckets, rangeCols: _*)
-      .withColumn(pid, spark_partition_id())
-      .localCheckpoint()
-
-    // Pass 1: per-(pid, group) partials. Output is #partitions × #groups
-    // rows — the collect below is metadata-sized, not data-sized.
-    val valueCols = (sums.map(_._1) ++ totals.map(_._1)).distinct
-    val minCols = (mins.map(_._1) ++ minsExcl.map(_._1)).distinct
-    val partialAggs = (count(lit(1)).as("__ps_cnt") +:
-      valueCols.map(v => sum(col(v)).as(s"__ps_s_$v"))) ++
-      minCols.map(v => min(col(v)).as(s"__ps_m_$v"))
-    val partialsDf = parted
-      .groupBy((pid +: groupCols).map(col): _*)
-      .agg(partialAggs.head, partialAggs.tail: _*)
-    val pSchema = partialsDf.schema
-    // Guarded metadata collect: the limit caps what can ever reach the
-    // driver; one extra row past the cap proves the cardinality
-    // contract is broken and flips to the partitioned-window fallback.
-    val pRows = partialsDf.limit(maxPartials + 1).collect()
-    if (pRows.length > maxPartials) {
-      return windowFallback(df, groupCols, sortCols,
-        rank, sums, totals, countTotal, mins, minsExcl)
-    }
-
-    // Pass 2 (driver): exclusive prefix offsets in pid order per group,
-    // plus group totals, over exact numeric partials.
-    def zero(dt: DataType): Any = dt match {
-      case LongType    => 0L
-      case IntegerType => 0
-      case DoubleType  => 0.0d
-      case _: DecimalType => java.math.BigDecimal.ZERO
-      case other => throw new IllegalArgumentException(
-        s"PrefixSum: unsupported sum type $other")
-    }
-    def add(a: Any, b: Any): Any = (a, b) match {
-      case (x, null) => x
-      case (null, y) => y
-      case (x: Long, y: Long)     => x + y
-      case (x: Int, y: Int)       => x + y
-      case (x: Double, y: Double) => x + y
-      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.add(y)
-      case other => throw new IllegalArgumentException(
-        s"PrefixSum: unsupported sum operands $other")
-    }
-    // Running-min prefix compare: NaN orders LARGEST for float/double
-    // (java.lang compare), and strings compare as UNSIGNED UTF-8
-    // BYTES — both matching Spark's own ordering (UTF8String is
-    // binary-ordered; Scala's UTF-16 `<` would rank supplementary-
-    // plane characters BELOW U+E000..U+FFFF via their 0xD800 surrogate
-    // units, flipping the merged min across partition boundaries).
-    def lt(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: Long, y: Long)     => x < y
-      case (x: Int, y: Int)       => x < y
-      case (x: Double, y: Double) => java.lang.Double.compare(x, y) < 0
-      case (x: Float, y: Float)   => java.lang.Float.compare(x, y) < 0
-      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y) < 0
-      case (x: String, y: String) =>
-        java.util.Arrays.compareUnsigned(
-          x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          y.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
-      case other => throw new IllegalArgumentException(
-        s"PrefixSum: unsupported min operands $other")
-    }
-    // null = "no value yet" (empty prefix, or an all-null partial)
-    def minOf(a: Any, b: Any): Any =
-      if (a == null) b else if (b == null) a else if (lt(b, a)) b else a
-    val nGroup = groupCols.size
-    val sumTypes = valueCols.map(v => pSchema(s"__ps_s_$v").dataType)
-    val nSums = valueCols.size
-    val minTypes = minCols.map(v => pSchema(s"__ps_m_$v").dataType)
-    val offRows = pRows
-      .groupBy(r => (1 to nGroup).map(r.get).toSeq)
-      .valuesIterator
-      .flatMap { grp =>
-        val ordered = grp.sortBy(_.getInt(0)) // pid ascending
-        val totCnt = ordered.map(_.getLong(1 + nGroup)).sum
-        val totSums = sumTypes.zipWithIndex.map { case (dt, i) =>
-          ordered.foldLeft(zero(dt))((acc, r) => add(acc, r.get(2 + nGroup + i)))
-        }
-        var offCnt = 0L
-        var offSums = sumTypes.map(zero)
-        // EXCLUSIVE prefix mins (min over all prior partitions' rows
-        // of this group); null until a prior partition held a value
-        var offMins: Seq[Any] = minCols.map(_ => null)
-        ordered.map { r =>
-          val row = Row.fromSeq(
-            (0 to nGroup).map(r.get) ++ (offCnt +: offSums) ++
-              (totCnt +: totSums) ++ offMins)
-          offCnt += r.getLong(1 + nGroup)
-          offSums = offSums.zipWithIndex.map { case (acc, i) =>
-            add(acc, r.get(2 + nGroup + i))
-          }
-          offMins = offMins.zipWithIndex.map { case (acc, i) =>
-            minOf(acc, r.get(2 + nGroup + nSums + i))
-          }
-          row
-        }
-      }
-      .toSeq
-    val offSchema = StructType(
-      pSchema.fields.take(1 + nGroup) ++
-        (StructField("__ps_off_cnt", LongType) +:
-          valueCols.zip(sumTypes).map { case (v, dt) =>
-            StructField(s"__ps_off_$v", dt)
-          }) ++
-        (StructField("__ps_tot_cnt", LongType) +:
-          valueCols.zip(sumTypes).map { case (v, dt) =>
-            StructField(s"__ps_tot_$v", dt)
-          }) ++
-        minCols.zip(minTypes).map { case (v, dt) =>
-          StructField(s"__ps_off_m_$v", dt)
-        })
-    val offsetsDf = spark.createDataFrame(offRows.asJava, offSchema)
-
-    // Pass 3: broadcast the offsets back and finish with a PARTITIONED
-    // window — local rank/cumsum + the group-prefix offset. Group keys
-    // join with null-safe equality (<=>): pass 1's groupBy keeps a
-    // null group, and a plain equi-join would silently drop its rows.
-    val oPid = "__ps_o_pid"
-    val oGroup = groupCols.indices.map(i => s"__ps_o_g$i")
-    val oRenamed = groupCols.zip(oGroup).foldLeft(
-      offsetsDf.withColumnRenamed(pid, oPid)) {
-      case (d, (c, a)) => d.withColumnRenamed(c, a)
-    }
-    val joinCond = groupCols.zip(oGroup).foldLeft(col(pid) === col(oPid)) {
-      case (acc, (c, a)) => acc && (col(c) <=> col(a))
-    }
-    val joined = parted.join(broadcast(oRenamed), joinCond)
-      .drop((oPid +: oGroup): _*)
-    val wLoc = Window
-      .partitionBy((pid +: groupCols).map(col): _*)
-      .orderBy(sortCols: _*)
-    val wRun = wLoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // exclusive frame for minsExcl: empty on a slice's first row, so
-    // the local min is null there and least() passes the prior-slice
-    // offset through (itself null on the group's true first row)
-    val wExc = wLoc.rowsBetween(Window.unboundedPreceding, -1)
-    var out = joined
-    rank.foreach { o =>
-      out = out.withColumn(o, row_number().over(wLoc).cast("long") + col("__ps_off_cnt"))
-    }
-    sums.foreach { case (v, o) =>
-      out = out.withColumn(o, sum(col(v)).over(wRun) + col(s"__ps_off_$v"))
-    }
-    totals.foreach { case (v, o) =>
-      out = out.withColumn(o, col(s"__ps_tot_$v"))
-    }
-    countTotal.foreach { o => out = out.withColumn(o, col("__ps_tot_cnt")) }
-    // least() skips nulls, which is exactly the "no value yet" merge
-    mins.foreach { case (v, o) =>
-      out = out.withColumn(o, least(min(col(v)).over(wRun), col(s"__ps_off_m_$v")))
-    }
-    minsExcl.foreach { case (v, o) =>
-      out = out.withColumn(o, least(min(col(v)).over(wExc), col(s"__ps_off_m_$v")))
-    }
-    val helper = pid +: ("__ps_off_cnt" +: "__ps_tot_cnt" +:
-      (valueCols.flatMap(v => Seq(s"__ps_off_$v", s"__ps_tot_$v")) ++
-        minCols.map(v => s"__ps_off_m_$v")))
-    out.drop(helper: _*)
-  }
-
-  /** The groupCols-empty path of [[attach]], construction-LAZY (r18):
-    * range-partition + LAZY localCheckpoint pin, per-partition partials
-    * as a subquery, exclusive prefix offsets via ONE ordered window
-    * over the ≤ #partitions partial rows (metadata-sized by
-    * construction — the one place an unpartitioned window is
-    * legitimate; PlanAuditSpec exempts exactly this shape by its
-    * `__ps_pid` order key), broadcast-joined back, finished by the same
-    * pid-sliced window arithmetic as the eager path.
-    *
-    * Correctness does NOT depend on exchange reuse: both the offsets
-    * subquery and the probe side read the SAME lazily-checkpointed
-    * RDD, so the sampled range bounds are pinned once by RDD identity
-    * (two independent range exchanges could sample different bounds —
-    * the corruption the eager path's checkpoint prevented the same
-    * way). The driver-side prefix fold is gone: offsets are Spark's
-    * own window sums over the partials, cast back to the partials'
-    * types so the output schema is bit-identical to the eager path.
-    *
-    * What "lazy" buys (measured, r18): no guarded partials collect, no
-    * eager checkpoint RESULT stage, no construction barrier between
-    * them — the remaining construction cost under AQE is `toRdd`'s
-    * materialization of the sampling + shuffle-map stages (Dataset
-    * .localCheckpoint(false) still plans the subtree); everything
-    * downstream fuses into the caller's action.
-    */
-  private def attachGlobalLazy(
-      df: DataFrame,
-      sortCols: Seq[Column],
-      rank: Option[String],
-      sums: Seq[(String, String)],
-      totals: Seq[(String, String)],
-      countTotal: Option[String],
-      mins: Seq[(String, String)],
-      minsExcl: Seq[(String, String)]): DataFrame = {
+      minsExcl: Seq[(String, String)] = Nil): DataFrame = {
     val spark = df.sparkSession
     val pid = "__ps_pid"
     val buckets = spark.sessionState.conf.numShufflePartitions
     val parted = df
-      .repartitionByRange(buckets, sortCols: _*)
+      .repartitionByRange(buckets, (groupCols.map(col) ++ sortCols): _*)
       .withColumn(pid, spark_partition_id())
       .localCheckpoint(false)
 
+    // Pass 1: per-(pid, group) partials.
+    val slice = (pid +: groupCols).map(col)
     val valueCols = (sums.map(_._1) ++ totals.map(_._1)).distinct
     val minCols = (mins.map(_._1) ++ minsExcl.map(_._1)).distinct
     val partialAggs = (count(lit(1)).as("__ps_cnt") +:
       valueCols.map(v => sum(col(v)).as(s"__ps_s_$v"))) ++
       minCols.map(v => min(col(v)).as(s"__ps_m_$v"))
     val partialsDf = parted
-      .groupBy(col(pid))
+      .groupBy(slice: _*)
       .agg(partialAggs.head, partialAggs.tail: _*)
     val pSchema = partialsDf.schema
 
-    // Exclusive prefix offsets + totals over the partials: both frames
-    // share ONE ordered window spec (a single WindowExec over
-    // ≤ `buckets` rows). Sum offsets coalesce to a typed zero on the
-    // first partition (empty exclusive frame → null); min offsets keep
-    // null = "no value yet", exactly the eager fold's semantics.
-    val wOrd = Window.orderBy(col(pid))
+    // Pass 2: exclusive prefix offsets + totals per group, in pid order.
+    // Both frames share ONE window spec (a single WindowExec over the
+    // partials). Sum offsets coalesce to a typed zero on a group's first
+    // slice (empty exclusive frame → null) and are cast back to the
+    // partials' types; min offsets keep null = "no value yet".
+    val wOrd = Window.partitionBy(groupCols.map(col): _*).orderBy(col(pid))
     val wExc = wOrd.rowsBetween(Window.unboundedPreceding, -1)
     val wAll = wOrd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     var off = partialsDf
@@ -368,13 +143,30 @@ object PrefixSum {
     val helperCols = "__ps_off_cnt" +: "__ps_tot_cnt" +:
       (valueCols.flatMap(v => Seq(s"__ps_off_$v", s"__ps_tot_$v")) ++
         minCols.map(v => s"__ps_off_m_$v"))
-    val oPid = "__ps_o_pid"
-    val offsets = off.select((col(pid).as(oPid) +: helperCols.map(col)): _*)
-    val joined = parted.join(broadcast(offsets), col(pid) === col(oPid))
-      .drop(oPid)
 
-    // Pass 3 — identical arithmetic to the eager path.
-    val wLoc = Window.partitionBy(col(pid)).orderBy(sortCols: _*)
+    // Join the offsets back on (pid, group). Group keys join with
+    // null-safe equality (<=>): pass 1's groupBy keeps a null group,
+    // and a plain equi-join would silently drop its rows. Only the
+    // global partials are bounded by construction (≤ one row per
+    // shuffle partition), so only they carry a broadcast hint.
+    val oPid = "__ps_o_pid"
+    val oGroup = groupCols.indices.map(i => s"__ps_o_g$i")
+    val offsets = off.select((col(pid).as(oPid) +:
+      groupCols.zip(oGroup).map { case (c, a) => col(c).as(a) }) ++
+      helperCols.map(col): _*)
+    val joinCond = groupCols.zip(oGroup).foldLeft(col(pid) === col(oPid)) {
+      case (acc, (c, a)) => acc && (col(c) <=> col(a))
+    }
+    val joined = parted
+      .join(if (groupCols.isEmpty) broadcast(offsets) else offsets, joinCond)
+      .drop((oPid +: oGroup): _*)
+
+    // Pass 3: local rank / running sums per (pid, group) slice plus the
+    // slice's offset. The exclusive frame for minsExcl is empty on a
+    // slice's first row, so the local min is null there and least()
+    // passes the prior-slice offset through (itself null on the group's
+    // true first row); least() skips nulls, the "no value yet" merge.
+    val wLoc = Window.partitionBy(slice: _*).orderBy(sortCols: _*)
     val wRun = wLoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wExcL = wLoc.rowsBetween(Window.unboundedPreceding, -1)
     var out = joined
@@ -395,26 +187,20 @@ object PrefixSum {
     out.drop((pid +: helperCols): _*)
   }
 
-  /** High-cardinality fallback: the plain `Window.partitionBy(groupCols)`
-    * plan, semantically identical to the prefix path (same ranks, sums,
-    * totals) — and the RIGHT distributed plan once groups are many,
-    * because WindowExec already parallelizes #groups-way. Only reached
-    * with non-empty groupCols: a global order has exactly one group, so
-    * its partials can never exceed the bucket count.
+  /** The plain `Window.partitionBy(groupCols)` plan, semantically
+    * identical to [[attach]] (same ranks, sums, totals) — and the RIGHT
+    * distributed plan while every group is small, because WindowExec
+    * already parallelizes #groups-way. Only [[attachAuto]] picks it, and
+    * only for non-empty groupCols (a group-less window is one task).
     */
-  private def windowFallback(
+  private def windowRoute(
       df: DataFrame,
       groupCols: Seq[String],
       sortCols: Seq[Column],
       rank: Option[String],
       sums: Seq[(String, String)],
       totals: Seq[(String, String)],
-      countTotal: Option[String],
-      mins: Seq[(String, String)] = Nil,
-      minsExcl: Seq[(String, String)] = Nil): DataFrame = {
-    require(groupCols.nonEmpty,
-      "PrefixSum partials exceeded maxPartials with no group columns — " +
-        "impossible unless maxPartials < shuffle partition count")
+      countTotal: Option[String]): DataFrame = {
     val wOrd = Window.partitionBy(groupCols.map(col): _*).orderBy(sortCols: _*)
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // totals share the ORDERED spec with a full frame (same
@@ -427,49 +213,41 @@ object PrefixSum {
     sums.foreach { case (v, o) => out = out.withColumn(o, sum(col(v)).over(wRun)) }
     totals.foreach { case (v, o) => out = out.withColumn(o, sum(col(v)).over(wAll)) }
     countTotal.foreach { o => out = out.withColumn(o, count(lit(1)).over(wAll)) }
-    mins.foreach { case (v, o) => out = out.withColumn(o, min(col(v)).over(wRun)) }
-    minsExcl.foreach { case (v, o) =>
-      out = out.withColumn(o,
-        min(col(v)).over(wOrd.rowsBetween(Window.unboundedPreceding, -1)))
-    }
     out
   }
 
-  /** ROUTED grouped cumulation (r13 — the ExactQuantiles saturation
-    * guard generalized to any rank/running-sum): picks the plain
-    * partitioned window while the LARGEST group of `df` holds ≤
-    * `maxWindowDistinct` rows — at that size the window sorts a
-    * bounded partition and beats the prefix machinery's range-shuffle
-    * + checkpoint + offset collect (measured at q_mad's shape, sf0.1:
-    * window 5.6 s vs PrefixSum 9.6 s at 594k rows / 3 groups) — and
-    * falls through to [[attach]] when a group is bigger than that
-    * (the single-task serialization the prefix path exists to kill)
-    * or when there are no groups at all. `df` is checkpointed once so
-    * the routing stat (shuffle-free total count first, per-group max
-    * only past the guard) never re-runs the input lineage. Both
-    * routes produce identical ranks/sums (exact integer arithmetic);
-    * construction is eager either way.
+  /** Session memo of [[attachAuto]]'s routing DECISION per (session,
+    * tag, maxWindowDistinct). The probe (eager checkpoint + count +
+    * per-group max) is metadata work, but it forces a materialization
+    * barrier and extra jobs into every invocation of a routed query. A
+    * caller-supplied stable tag (naming the (dataset, group, order,
+    * filter) of the input) caches the boolean so repeat invocations
+    * construct the fully LAZY routed plan. Only the decision is cached,
+    * never data. The threshold is part of the key: a call site reusing
+    * a tag with a different threshold must not inherit another
+    * threshold's decision.
     */
-  /** Session memo of attachAuto's routing DECISION per (session, tag)
-    * — r17. The probe (eager checkpoint + count + per-group max) is
-    * metadata work, but it forced a materialization barrier and two
-    * extra jobs into every invocation of a routed query. A caller-
-    * supplied stable tag (naming the (dataset, group, order) triple —
-    * the ExactQuantiles/JoinRouter convention) caches the boolean so
-    * repeat invocations construct the fully LAZY routed plan: the
-    * scan, aggregate and window fuse into one pipelined job. Only the
-    * decision is cached, never data — both routes recompute from the
-    * source every run, and the decision is a pure function of the
-    * dataset within a session.
-    */
-  // Key includes maxWindowDistinct (ADVICE r17): a future call site
-  // reusing a tag with a DIFFERENT threshold must not inherit the
-  // other threshold's routing decision — worst case a single-task
-  // window on data the probe would have rejected. The tag must still
-  // uniquely name the (dataset, group, order, filter) of the input.
   private val routeCache =
     graft.Artifacts.memo[(org.apache.spark.sql.SparkSession, String, Long), Boolean]()
 
+  /** ROUTED grouped cumulation: the plain partitioned window
+    * ([[windowRoute]]) while the LARGEST group of `df` holds ≤
+    * `maxWindowDistinct` rows — at that size the window sorts a bounded
+    * partition and beats the prefix machinery (measured at q_mad's
+    * shape, sf0.1: window 5.6 s vs PrefixSum 9.6 s at 594k rows / 3
+    * groups) — and [[attach]] when a group is bigger than that (the
+    * single-task serialization the prefix path exists to kill) or when
+    * there are no groups at all. Both routes produce identical
+    * ranks/sums (exact integer arithmetic).
+    *
+    * The route comes from, in order: `knownMaxDistinct` (a stored
+    * largest-group size, e.g. an ingest-maintained
+    * [[graft.sources.TableStats]] scalar — no job, no checkpoint), the
+    * [[routeCache]] decision for a non-null `tag`, or else a probe:
+    * `df` is checkpointed once so the routing stat ([[windowSafe]])
+    * never re-runs the input lineage, and both routes read the pinned
+    * rows.
+    */
   def attachAuto(
       df: DataFrame,
       groupCols: Seq[String],
@@ -478,42 +256,43 @@ object PrefixSum {
       sums: Seq[(String, String)] = Nil,
       totals: Seq[(String, String)] = Nil,
       countTotal: Option[String] = None,
-      maxPartials: Int = DefaultMaxPartials,
       // the same single-task window ceiling as the quantile family —
-      // one shared constant, not a duplicated literal (ADVICE r13)
+      // one shared constant, not a duplicated literal
       maxWindowDistinct: Long = ExactQuantiles.SaturationGuard,
-      tag: String = null): DataFrame = {
-    if (groupCols.isEmpty)
-      return attach(df, groupCols, sortCols, rank, sums, totals,
-        countTotal, maxPartials = maxPartials)
-    val known =
-      if (tag == null) None
-      else routeCache.peek((df.sparkSession, tag, maxWindowDistinct))
+      tag: String = null,
+      knownMaxDistinct: Option[Long] = None): DataFrame = {
+    def route(in: DataFrame, safe: Boolean): DataFrame =
+      if (safe) windowRoute(in, groupCols, sortCols, rank, sums, totals, countTotal)
+      else attach(in, groupCols, sortCols, rank, sums, totals, countTotal)
+    if (groupCols.isEmpty) return route(df, safe = false)
+    val known = knownMaxDistinct.map(_ <= maxWindowDistinct).orElse(
+      Option(tag).flatMap(t => routeCache.peek((df.sparkSession, t, maxWindowDistinct))))
     known match {
-      case Some(true) =>
-        // memoized window route: no checkpoint, no probe jobs — one
-        // fused lazy plan (results identical to the probed first run:
-        // the checkpoint never changed rows, only pinned them)
-        windowFallback(df, groupCols, sortCols,
-          rank, sums, totals, countTotal)
-      case Some(false) =>
-        attach(df, groupCols, sortCols, rank, sums, totals,
-          countTotal, maxPartials = maxPartials)
+      case Some(safe) => route(df, safe)
       case None =>
         val pinned = df.localCheckpoint()
-        val safe = pinned.count() <= maxWindowDistinct || {
-          val r = pinned.groupBy(groupCols.map(col): _*)
-            .agg(count(lit(1)).as("__ps_g")).agg(max(col("__ps_g"))).head()
-          r.isNullAt(0) || r.getLong(0) <= maxWindowDistinct
-        }
+        val safe = windowSafe(pinned, groupCols, maxWindowDistinct)
         if (tag != null)
           routeCache.put((df.sparkSession, tag, maxWindowDistinct), safe)
-        if (safe) windowFallback(pinned, groupCols, sortCols,
-          rank, sums, totals, countTotal)
-        else attach(pinned, groupCols, sortCols, rank, sums, totals,
-          countTotal, maxPartials = maxPartials)
+        route(pinned, safe)
     }
   }
+
+  /** Routing stat for [[attachAuto]]: true (window-safe) when every
+    * group of `df` holds ≤ `maxWindowDistinct` rows; an empty input
+    * routes to the window trivially. Two tiers: the TOTAL count (a
+    * shuffle-free job over an already-checkpointed input) upper-bounds
+    * every group's count, so when it fits the per-group shuffle is
+    * skipped entirely — the common case for saturating domains. Only a
+    * total above the guard pays the per-group max.
+    */
+  private[graft] def windowSafe(df: DataFrame, groupCols: Seq[String],
+      maxWindowDistinct: Long): Boolean =
+    df.count() <= maxWindowDistinct || {
+      val r = df.groupBy(groupCols.map(col): _*)
+        .agg(count(lit(1)).as("__ps_g")).agg(max(col("__ps_g"))).head()
+      r.isNullAt(0) || r.getLong(0) <= maxWindowDistinct
+    }
 
   /** `ntile(k)` derived from a total-order rank and the group size —
     * the distributed replacement for `ntile(k).over(Window.orderBy(...))`.

@@ -46,15 +46,6 @@ object TextFunctions {
         sequence(lit(1), length(text) - (n - 1)),
         i => substr(text, i, lit(n))))
 
-  /** Distinct char n-grams via the native kernel (same output as
-    * [[charNgrams]]; ~10× cheaper — HOF lambdas are interpreted per
-    * element). Requires expressions.CharNgrams.register(spark) or
-    * GraftExtensions.
-    */
-  def charNgramsFast(text: Column, n: Int): Column =
-    array_distinct(call_function(
-      graft.functions.expressions.CharNgrams.name, text, lit(n)))
-
   /** Distinct word n-gram shingles via the native kernel (same output
     * as [[shingles3]]/[[shingles5]] for n=3/5; NgramsSpec pins the
     * equivalence). Requires expressions.WordNgrams.register(spark) or

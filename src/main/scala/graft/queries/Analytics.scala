@@ -831,7 +831,7 @@ object Analytics extends QueryModule {
   /** Grouped skyline: the (price, size) Pareto frontier WITHIN each
     * brand — q_skyline's dominance logic with the running mins
     * restarting per group, which drives PrefixSum's grouped prefix
-    * path (per-(slice, brand) partials, per-brand driver merge). At
+    * path (per-(slice, brand) partials, per-brand offset window). At
     * 100 TB each brand's distinct-price domain is itself
     * data-proportional, so the per-brand scan must parallelize INSIDE
     * a group — exactly what the two-pass machinery does and a plain

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{QueryDef, QueryModule, Tables}
-import org.apache.spark.sql.functions._
 
 /** Subquery forms via the SQL entry point: Catalyst decorrelates the
   * correlated scalar subquery (RewriteCorrelatedScalarSubquery → an

@@ -28,11 +28,7 @@ import scala.jdk.CollectionConverters._
   * contract.
   */
 final class InMemoryObjectStore {
-
-  final case class Obj(body: Array[Byte], generation: Long) {
-    /** UTF-8 view for the text markers (`_VERSION`, `_log/N`). */
-    def text: String = new String(body, UTF_8)
-  }
+  import InMemoryObjectStore.Obj
 
   private val objects =
     new java.util.concurrent.ConcurrentHashMap[String, Obj]()
@@ -78,6 +74,13 @@ final class InMemoryObjectStore {
     */
   def keys(prefix: String): Seq[String] =
     objects.keySet().asScala.iterator.filter(_.startsWith(prefix)).toSeq.sorted
+}
+
+object InMemoryObjectStore {
+  final case class Obj(body: Array[Byte], generation: Long) {
+    /** UTF-8 view for the text markers (`_VERSION`, `_log/N`). */
+    def text: String = new String(body, UTF_8)
+  }
 }
 
 /** [[CommitBackend]] over conditional-PUT object storage — the cloud

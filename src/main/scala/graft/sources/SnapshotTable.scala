@@ -99,7 +99,6 @@ object SnapshotTable {
     */
   final class SnapshotConflict(msg: String) extends RuntimeException(msg)
 
-  private def versionFile(root: String) = Paths.get(root, "_VERSION")
   private def logDir(root: String) = Paths.get(root, "_log")
 
   /** The DV machinery stamps `__file`/`__idx` helper columns and joins
@@ -535,7 +534,7 @@ object SnapshotTable {
     */
   private def carrySidecars(spark: SparkSession, priorDir: Path,
       staging: Path, keptFiles: Set[String], newFiles: Set[String],
-      setCap: Int, bloomFpp: Double = 0.01): Unit = {
+      setCap: Int, bloomFpp: Double): Unit = {
     val newPaths = newFiles.toSeq.sorted.map(f => staging.resolve(f).toString)
     def carry(sidecar: Path => Path, fresh: Seq[String] => String): Unit = {
       if (!Files.exists(sidecar(priorDir))) return

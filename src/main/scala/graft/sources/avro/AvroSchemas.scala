@@ -2,7 +2,7 @@ package graft.sources.avro
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.{LogicalType, LogicalTypes, Schema, SchemaBuilder}
+import org.apache.avro.{LogicalTypes, Schema}
 import org.apache.spark.sql.types._
 
 /** Avro ⇄ Spark schema conversion for the graft Avro connector

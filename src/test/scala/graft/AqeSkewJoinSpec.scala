@@ -31,7 +31,6 @@ class AqeSkewJoinSpec extends AnyFunSuite {
   }
 
   test("OptimizeSkewedJoin splits the hot partition and preserves the result") {
-    import spark.implicits._
     // left: one hot key (100k rows) + 100 cold keys (100 rows each);
     // right: 101 keys x 50 rows -> hot output partition ~5M rows
     // against ~5k-row siblings

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._

@@ -121,4 +121,42 @@ class CachesSpec extends AnyFunSuite {
     assert(m.get("A")(m.get("B")("b") + "a") == "ba")
     assert(m.peek("B").contains("b"))
   }
+
+  test("a JVM that exits without a clear deletes its temp roots and events layout") {
+    import scala.jdk.CollectionConverters._
+    import scala.sys.process._
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvm ++
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
+        "graft.ExitRootsProbe", sf)
+    val out = new StringBuilder
+    val code = Process(cmd).!(ProcessLogger(l => { out.append(l).append('\n'); () }, _ => ()))
+    assert(code == 0, s"probe JVM failed:\n$out")
+    val dirs = out.toString.linesIterator.collect {
+      case l if l.startsWith("root ") => java.nio.file.Paths.get(l.drop(5))
+    }.toSeq
+    assert(dirs.size == 2, s"probe did not report its two roots:\n$out")
+    assert(dirs.exists(_.getFileName.toString.startsWith("graft-part-")),
+      s"no events layout root among $dirs")
+    val left = dirs.filter(java.nio.file.Files.exists(_))
+    assert(left.isEmpty, s"roots outlived the JVM: ${left.mkString(", ")}")
+  }
+}
+
+/** Child JVM for CachesSpec: makes an artifact temp root and the events
+  * layout, prints both, and exits without `Graft.clearCaches`.
+  */
+object ExitRootsProbe {
+  def main(args: Array[String]): Unit = {
+    val root = Artifacts.tempRoot("graft-exitprobe-")
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "f"), Array[Byte](1))
+    val spark = Graft.session("local[1]", Some(1))
+    val file = Tables.eventsByDate(spark, args(0)).inputFiles.head
+    val part = Iterator.iterate(java.nio.file.Paths.get(new java.net.URI(file)))(_.getParent)
+      .find(_.getFileName.toString.startsWith("graft-part-")).get
+    println(s"root $root")
+    println(s"root $part")
+    sys.exit(0)
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Dev tool: time the q_dedup_cluster phases separately.
   * `sbt "Test/runMain graft.ClusterProfile [sfDir]"`
   */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.ExactQuantiles
+import graft.functions.{ExactQuantiles, PrefixSum}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -116,12 +116,12 @@ class ExactQuantilesSpec extends AnyFunSuite {
     // and the routing stat itself, on hand-built distinct tables
     val contDistinct = contDf.groupBy(col("g"), col("dv"))
       .agg(count(lit(1)).as("__eq_c"))
-    assert(!ExactQuantiles.windowSafe(contDistinct, Seq("g"), guard))
-    assert(ExactQuantiles.windowSafe(contDistinct, Seq("g"), Long.MaxValue))
+    assert(!PrefixSum.windowSafe(contDistinct, Seq("g"), guard))
+    assert(PrefixSum.windowSafe(contDistinct, Seq("g"), Long.MaxValue))
     val centsDistinct = centsDf.groupBy(col("g"), col("dv"))
       .agg(count(lit(1)).as("__eq_c"))
-    assert(ExactQuantiles.windowSafe(centsDistinct, Seq("g"), guard))
-    assert(ExactQuantiles.windowSafe(centsDistinct, Seq("g"), 0L) === false)
+    assert(PrefixSum.windowSafe(centsDistinct, Seq("g"), guard))
+    assert(PrefixSum.windowSafe(centsDistinct, Seq("g"), 0L) === false)
   }
 
   test("both cumulation routes produce bit-identical results") {

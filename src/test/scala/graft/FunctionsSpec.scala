@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hand-computed expectations for the vector/text Column builders. */

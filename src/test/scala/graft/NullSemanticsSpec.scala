@@ -76,7 +76,6 @@ class NullSemanticsSpec extends AnyFunSuite {
     // there — fabricate a minimal events.parquet and run the GRADED
     // query fn against it (ts stored as int64 nanos, matching the
     // real table's nanosAsLong read path)
-    import org.apache.spark.sql.functions.{col => c}
     val us = 1000L * 1000L // one second in µs
     def nanos(sec: Long) = sec * us * 1000L
     val rows = Seq(

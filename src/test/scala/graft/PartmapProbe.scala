@@ -19,7 +19,6 @@ object PartmapProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
 
     def table() = spark.range(rows)
       .select((col("id") % parts).cast("int").as("p"),

@@ -245,16 +245,64 @@ class PlanAuditSpec extends AnyFunSuite {
     "q_cramers_v",         // ≤6 contingency cells
     "q_sql_cte")           // ≤25 nation rows (rank over the nat_rev CTE)
 
-  /** PrefixSum's lazy global path (r18) computes its exclusive prefix
-    * offsets with ONE unpartitioned window ORDERED BY `__ps_pid` over
-    * the per-partition partials — a table that is ≤ #shuffle-partitions
-    * rows BY CONSTRUCTION (one row per physical partition), i.e.
-    * cluster-metadata-sized, never data-proportional. That is the one
-    * legitimate unpartitioned-window shape; anything else stays banned.
+  /** PrefixSum's global path computes its exclusive prefix offsets
+    * with ONE unpartitioned window ordered by the partition id over the
+    * per-partition partials: an Aggregate grouped by exactly that one
+    * attribute, so ≤ #shuffle-partitions rows BY CONSTRUCTION, never
+    * data-proportional. That is the one legitimate unpartitioned-window
+    * shape. The shape is checked, not just the order key's name: a
+    * data-sized window ordered by a column that merely carries the name
+    * is flagged. The name stays as a second condition, because the
+    * shape alone also fits a window over a per-distinct-value aggregate
+    * (`orderBy(k)` over `groupBy(k)`), which grows with the data.
     */
   private def isPidOffsetsWindow(
-      w: org.apache.spark.sql.catalyst.plans.logical.Window): Boolean =
-    w.orderSpec.exists(_.child.references.exists(_.name == "__ps_pid"))
+      w: org.apache.spark.sql.catalyst.plans.logical.Window): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project}
+    def aggregate(p: LogicalPlan): Option[Aggregate] = p match {
+      case a: Aggregate => Some(a)
+      case Project(_, c) => aggregate(c)
+      case _ => None
+    }
+    (w.orderSpec.map(_.child), aggregate(w.child)) match {
+      case (Seq(o: Attribute), Some(a)) =>
+        o.name == "__ps_pid" && (a.groupingExpressions match {
+          case Seq(g: Attribute) => g.exprId == o.exprId
+          case _ => false
+        })
+      case _ => false
+    }
+  }
+
+  test("the pid-offsets exemption keys on the partials shape, not a column name") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val df = (1 to 200).map(i => (i.toLong, i % 7L)).toDF("tb", "v")
+    def unpartitioned(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.optimizedPlan.collect {
+        case w: LWindow if w.partitionSpec.isEmpty => w
+      }
+    // the real shape: PrefixSum's global offsets window is exempt
+    val real = unpartitioned(graft.functions.PrefixSum.attach(df, Nil,
+      Seq(col("tb")), rank = Some("rk"), sums = Seq("v" -> "cs")))
+    assert(real.size == 1 && real.forall(isPidOffsetsWindow))
+    // a data-sized window ordered by a column renamed __ps_pid is not
+    val renamed = unpartitioned(df.withColumnRenamed("tb", "__ps_pid")
+      .withColumn("rk", row_number().over(Window.orderBy(col("__ps_pid")))))
+    assert(renamed.size == 1 && !renamed.exists(isPidOffsetsWindow),
+      "a renamed order column must not earn the exemption")
+    // nor is a cumulation over a per-distinct-value aggregate, which has
+    // the partials' shape but grows with the data
+    val perValue = unpartitioned(df.groupBy(col("v"))
+      .agg(count(lit(1)).as("c"))
+      .withColumn("cs", sum(col("c")).over(Window.orderBy(col("v"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+    assert(perValue.size == 1 && !perValue.exists(isPidOffsetsWindow),
+      "a per-distinct-value window must not earn the exemption")
+  }
 
   /** Every query's optimized plan and executed-plan text, built once
     * and shared by the inventory-wide audits below.

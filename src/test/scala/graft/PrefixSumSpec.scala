@@ -110,7 +110,7 @@ class PrefixSumSpec extends AnyFunSuite {
 
   test("grouped running min restarts per group; nulls and NaN follow Spark min") {
     // null values are skipped by min; NaN orders LARGEST (Spark
-    // semantics) — the driver-side prefix merge must agree with the
+    // semantics) — the offset merge across slices must agree with the
     // pass-3 window on both
     val data = Seq(
       ("a", 1L, Option(5.0)), ("a", 2L, Option.empty[Double]),
@@ -134,7 +134,7 @@ class PrefixSumSpec extends AnyFunSuite {
     // U+FFFF is a single 3-byte UTF-8 sequence; U+10000 encodes as 4
     // bytes (and as a 0xD800 surrogate in UTF-16) — Java string `<`
     // ranks U+10000 BELOW U+FFFF while Spark's UTF8String binary
-    // order ranks it ABOVE. The driver-side prefix merge must agree
+    // order ranks it ABOVE. The offset merge across slices must agree
     // with the in-slice window (Spark's order) or the merged min
     // flips across a partition boundary.
     val data = (1 to 64).map { i =>
@@ -151,22 +151,54 @@ class PrefixSumSpec extends AnyFunSuite {
       "string min ordering diverged from Spark across partitions")
   }
 
-  test("high-cardinality groups trip the guard and fall back bit-identically") {
-    // one group per row → partials are data-sized; with maxPartials = 10
-    // the guarded collect must abort (≤ 11 rows reach the driver) and
-    // the partitioned-window fallback must produce the same answer the
-    // un-guarded prefix path gives
+  test("high-cardinality groups: grouped attach equals the window route bit-identically") {
+    // ~2 rows per group → the per-(slice, group) partials are
+    // data-sized; the prefix path must still give exactly the answer
+    // of the plain partitioned window (attachAuto's window route)
     val many = (1 to 500).map { i =>
       (i.toLong % 251, i.toLong, (i * 7).toLong % 100)
     }.toDF("g", "tb", "v").repartition(5)
-    def run(cap: Int) = PrefixSum.attach(many, Seq("g"), Seq(col("tb")),
+    def run(f: => org.apache.spark.sql.DataFrame): Seq[String] =
+      f.orderBy(col("g"), col("tb")).collect().map(_.toString).toSeq
+    val prefix = run(PrefixSum.attach(many, Seq("g"), Seq(col("tb")),
       rank = Some("rk"), sums = Seq("v" -> "cs"),
-      totals = Seq("v" -> "tot"), countTotal = Some("n"), maxPartials = cap)
-    val guarded = run(10)
-    val prefix = run(PrefixSum.DefaultMaxPartials)
-    assert(guarded.count() == 500)
-    assert(guarded.exceptAll(prefix).isEmpty && prefix.exceptAll(guarded).isEmpty,
-      "fallback diverged from the prefix path")
+      totals = Seq("v" -> "tot"), countTotal = Some("n")))
+    val window = run(PrefixSum.attachAuto(many, Seq("g"), Seq(col("tb")),
+      rank = Some("rk"), sums = Seq("v" -> "cs"),
+      totals = Seq("v" -> "tot"), countTotal = Some("n"),
+      maxWindowDistinct = Long.MaxValue))
+    assert(prefix.size == 500)
+    assert(prefix === window, "grouped prefix path diverged from the window route")
+  }
+
+  test("grouped construction starts no more Spark jobs than the global path") {
+    // nothing is collected to the driver while the plan is built: a
+    // grouped order pays the same lazy range checkpoint as a global one
+    def jobsDuring(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      spark.sparkContext.addSparkListener(l)
+      try { body; Thread.sleep(500) } // job-start events post async
+      finally spark.sparkContext.removeSparkListener(l)
+      jobs.get()
+    }
+    def construct(groups: Seq[String]): Unit = {
+      PrefixSum.attach(df, groups, Seq(col("k"), col("tb")),
+        rank = Some("rk"), sums = Seq("v" -> "cs"),
+        totals = Seq("v" -> "tot"), countTotal = Some("n"),
+        mins = Seq("v" -> "mi"), minsExcl = Seq("v" -> "mp"))
+      ()
+    }
+    construct(Nil); construct(Seq("g")) // warm: first-touch jobs don't count
+    val global = jobsDuring(construct(Nil))
+    val grouped = jobsDuring(construct(Seq("g")))
+    assert(grouped <= global,
+      s"grouped construction ran $grouped jobs, global ran $global")
   }
 
   test("empty input yields an empty result with the attached columns") {

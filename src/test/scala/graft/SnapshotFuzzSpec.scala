@@ -3,6 +3,7 @@ package graft
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Randomized scenario battery over the snapshot layer (VERDICT r9
@@ -30,11 +31,21 @@ import org.scalatest.funsuite.AnyFunSuite
   *     v as a NEW version; compactFiles preserves content exactly;
   *   - read(root, v) reproduces version v forever (time travel).
   */
-class SnapshotFuzzSpec extends AnyFunSuite {
+class SnapshotFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-fuzz-").toString
+  // every table this suite creates, deleted when the suite ends
+  private val tables = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  private def tmp(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fuzz-").toString
+    tables.add(dir)
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try tables.forEach(d => SnapshotTable.deleteTree(java.nio.file.Paths.get(d)))
+    finally super.afterAll()
 
   private type Rnd = scala.util.Random
 
@@ -145,7 +156,6 @@ class SnapshotFuzzSpec extends AnyFunSuite {
           case (n, st, _) if !layout.exists(_._1 == n) => (n, st)
         }
         layout = layout ++ newCols
-        val phys = layout.toMap
         for ((k, i) <- ks.zipWithIndex) {
           val provided = order.map { case (n, _, seeds) => n -> seeds(i) }.toMap
           val base = rows.getOrElse(k,

@@ -4,6 +4,7 @@ import graft.sources.SnapshotTable
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Randomized PRUNING-correctness battery: file skipping is the one
@@ -27,11 +28,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * value equal to the OVERFLOW sentinel — each must round-trip
   * through escapeVal or the set probe misses (= wrong prune).
   */
-class SnapshotPruneFuzzSpec extends AnyFunSuite {
+class SnapshotPruneFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-prunefuzz-").toString
+  // every table this suite creates, deleted when the suite ends
+  private val tables = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  private def tmp(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-prunefuzz-").toString
+    tables.add(dir)
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try tables.forEach(d => SnapshotTable.deleteTree(java.nio.file.Paths.get(d)))
+    finally super.afterAll()
 
   // adversarial category values; '' and separator/escape collisions
   // target the sets manifest, the rest are ordinary dictionary keys

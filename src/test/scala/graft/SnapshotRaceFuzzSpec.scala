@@ -2,6 +2,7 @@ package graft
 
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Randomized CONCURRENT-WRITER races over the snapshot layer's
@@ -20,11 +21,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * replay (time travel is the forensic tool after a race, so it must
   * agree with the serialization order, not with wall-clock).
   */
-class SnapshotRaceFuzzSpec extends AnyFunSuite {
+class SnapshotRaceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-race-").toString
+  // every table this suite creates, deleted when the suite ends
+  private val tables = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  private def tmp(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-race-").toString
+    tables.add(dir)
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try tables.forEach(d => SnapshotTable.deleteTree(java.nio.file.Paths.get(d)))
+    finally super.afterAll()
 
   private def rowsFor(p: Int, writer: Int, rev: Int) = {
     import spark.implicits._

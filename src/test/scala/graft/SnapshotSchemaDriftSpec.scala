@@ -3,6 +3,7 @@ package graft
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Column-order / schema-drift property battery over the snapshot
@@ -13,11 +14,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * schemas so any new ordering or schema-set assumption fails here
   * first, not in a composition.
   */
-class SnapshotSchemaDriftSpec extends AnyFunSuite {
+class SnapshotSchemaDriftSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-drift-").toString
+  // every table this suite creates, deleted when the suite ends
+  private val tables = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  private def tmp(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-drift-").toString
+    tables.add(dir)
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try tables.forEach(d => SnapshotTable.deleteTree(java.nio.file.Paths.get(d)))
+    finally super.afterAll()
 
   private def df(cols: Seq[String], rows: Seq[(Long, Long, Double, String)]): DataFrame = {
     import spark.implicits._

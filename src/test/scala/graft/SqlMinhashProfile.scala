@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Dev tool: time q_sql_minhash_dedup's stages separately at any SF.
   * `SPARK_GRAFT_SF_DIR=... SPARK_DRIVER_MEM=32g
   *  sbt "Test/runMain graft.SqlMinhashProfile"`

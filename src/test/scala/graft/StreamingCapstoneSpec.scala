@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import graft.sources.{IncrementalView, SnapshotTable}
 import graft.streaming.{Event, SnapshotSink, StateV2, Stateful, StreamingView}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 

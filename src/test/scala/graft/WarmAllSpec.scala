@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * memoized artifacts are pre-built, CONSTRUCTING the queries that
   * read them runs zero Spark jobs — interactive first-query latency
   * is plan-build only, with every ingest-style cost paid up front.
-  * (Excluded by design: PrefixSum queries — their limit-guarded
-  * partials collect is per-query, not a shared artifact — and the
+  * (Excluded by design: PrefixSum queries — their lazy range
+  * checkpoint is per-query, not a shared artifact — and the
   * ITERATIVE queries (q_dedup_cluster CC rounds, q_khop/
   * q_shortest_path BFS), whose driver fixpoint loops run bounded
   * O(1)-row actions while BUILDING the final plan; warmAll still
