@@ -3,9 +3,11 @@ package graft.sources
 import java.nio.ByteBuffer
 import java.util.Base64
 
+import scala.jdk.CollectionConverters._
 import scala.util.hashing.MurmurHash3
 
 import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Per-file Bloom-filter sidecar for the snapshot layer's point-lookup
@@ -35,15 +37,22 @@ import org.apache.spark.sql.expressions.Aggregator
   * Spark `cast("string")` rendering, the same rendering the value-set
   * sidecar compares against, so one probe string drives both legs.
   *
-  * Build cost: one map-side-combined aggregate per column over the
-  * staged files (each task ORs into a local bit array; the shuffle
-  * moves |files| buffers, not rows). Buffers are `m/64` longs with `m`
-  * sized from the largest per-file distinct count at the requested
-  * fpp, capped at [[MaxBits]] (1 MiB of bits) — past the cap the
-  * realized fpp degrades gracefully (more files kept, never a wrong
-  * result).
+  * Build cost: no pass of its own. SnapshotTable's manifest pass
+  * builds every bloom, value set and min/max of a staged version in
+  * ONE `groupBy(file)` aggregate (each task ORs into a local bit
+  * array; the shuffle moves |files| buffers, not rows). All filters
+  * of a pass share one `(m, k)`, sized at [[Fpp]] for the largest
+  * staged file's ROW count, read from the Parquet footers with no
+  * job: rows bound distinct values from above, so the realized fpp
+  * stays at or below [[Fpp]] until `m` reaches [[MaxBits]] (1 MiB of
+  * bits) — past the cap it degrades gracefully (more files kept,
+  * never a wrong result). Parquet's own column blooms are not used:
+  * its writer builds none for a dictionary-encoded column chunk.
   */
 object BloomSidecar {
+
+  /** The false-positive rate every sidecar bloom is sized for. */
+  val Fpp: Double = 0.01
 
   /** Bit-size cap per (file, column): 2^23 bits = 1 MiB. A file whose
     * distinct count wants more than this gets a denser (higher-fpp)
@@ -140,5 +149,42 @@ object BloomSidecar {
     }
     override def bufferEncoder: Encoder[Array[Long]] = Encoders.kryo[Array[Long]]
     override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  }
+
+  /** [[CappedSetAgg]]'s buffer: `values` is null once past the cap. */
+  final class ValueSet(var values: java.util.HashSet[String],
+      var hasNull: Boolean)
+
+  /** The per-group (per-file) value-set aggregate behind `_sets.json`:
+    * the distinct values, plus one null element when a null arrived
+    * (nulls sit outside the cap), or EMPTY once more than `cap`
+    * distinct non-null values arrived. The buffer stops growing past
+    * the cap, so memory stays bounded without a distinct-count
+    * pre-pass. A group always has a row, so an in-cap result is never
+    * empty.
+    */
+  final class CappedSetAgg(cap: Int)
+      extends Aggregator[String, ValueSet, Seq[String]] {
+    private def capped(b: ValueSet): ValueSet = {
+      if (b.values != null && b.values.size > cap) b.values = null
+      b
+    }
+    override def zero: ValueSet = new ValueSet(new java.util.HashSet[String], false)
+    override def reduce(b: ValueSet, v: String): ValueSet = {
+      if (v == null) b.hasNull = true
+      else if (b.values != null) b.values.add(v)
+      capped(b)
+    }
+    override def merge(a: ValueSet, b: ValueSet): ValueSet = {
+      a.hasNull ||= b.hasNull
+      if (b.values == null) a.values = null
+      else if (a.values != null) a.values.addAll(b.values)
+      capped(a)
+    }
+    override def finish(b: ValueSet): Seq[String] =
+      if (b.values == null) Nil
+      else b.values.asScala.toSeq ++ (if (b.hasNull) Seq(null) else Nil)
+    override def bufferEncoder: Encoder[ValueSet] = Encoders.kryo[ValueSet]
+    override def outputEncoder: Encoder[Seq[String]] = ExpressionEncoder[Seq[String]]()
   }
 }

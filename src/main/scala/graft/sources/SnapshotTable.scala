@@ -284,7 +284,7 @@ object SnapshotTable {
       partitions: Seq[String] = Nil, readVersion: Int = -1,
       maxRetries: Int = 10, statsCols: Seq[String] = Nil,
       setCols: Seq[String] = Nil, setCap: Int = 1024,
-      bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01): Int = {
+      bloomCols: Seq[String] = Nil): Int = {
     Files.createDirectories(logDir(root))
     requireNoReservedColumns(df)
     // escapeVal makes the newline-framed manifest injective: a
@@ -304,9 +304,7 @@ object SnapshotTable {
     writeSchemaSidecar(staging, df.schema)
     try validateConstraints(spark, root, staging)
     catch { case e: Throwable => deleteTree(staging); throw e }
-    if (statsCols.nonEmpty) writeStats(spark, staging, statsCols)
-    if (setCols.nonEmpty) writeSets(spark, staging, setCols, setCap)
-    if (bloomCols.nonEmpty) writeBlooms(spark, staging, bloomCols, bloomFpp)
+    writeManifests(spark, staging, statsCols, setCols, setCap, bloomCols)
     val manifestTmp = Paths.get(root, "_staging",
       staging.getFileName.toString + ".manifest")
     Files.writeString(manifestTmp, mine.toSeq.sorted.mkString("\n"))
@@ -522,34 +520,31 @@ object SnapshotTable {
       case _ => ()
     }
 
-  /** Carry the per-file pruning sidecars (`_stats.json`, `_sets.json`)
-    * across a fast-path compose: kept (hard-linked) files keep their
-    * lines verbatim — both manifests describe immutable bytes — and
-    * the slice's new files get freshly computed lines over JUST their
-    * own bytes, so manifest data skipping keeps working on partmap
-    * tables without ever rescanning the untouched partitions. New
-    * files' set lines use the CALLER's cap (prior versions' caps are
-    * not recorded; a cap difference only shifts which files carry the
-    * OVERFLOW sentinel, which pruning treats conservatively).
+  /** Carry the per-file pruning manifests across a fast-path compose:
+    * kept (hard-linked) files keep their lines verbatim — the
+    * manifests describe immutable bytes — and the slice's new files
+    * get fresh lines, for the prior version's columns of each kind,
+    * from one manifest pass over JUST their own bytes, so manifest
+    * data skipping keeps working on partmap tables without ever
+    * rescanning the untouched partitions. New files' set lines use
+    * the CALLER's cap (prior versions' caps are not recorded; a cap
+    * difference only shifts which files carry the OVERFLOW sentinel,
+    * which pruning treats conservatively).
     */
   private def carrySidecars(spark: SparkSession, priorDir: Path,
       staging: Path, keptFiles: Set[String], newFiles: Set[String],
-      setCap: Int, bloomFpp: Double): Unit = {
-    val newPaths = newFiles.toSeq.sorted.map(f => staging.resolve(f).toString)
-    def carry(sidecar: Path => Path, fresh: Seq[String] => String): Unit = {
-      if (!Files.exists(sidecar(priorDir))) return
-      val all = Files.readString(sidecar(priorDir)).linesIterator
-        .filter(_.nonEmpty).toSeq
-      val kept = all.filter(l => keptFiles.contains(l.takeWhile(_ != '\t')))
-      val cols = all.map(_.split("\t", 3)(1)).distinct
-      val body = if (newPaths.isEmpty) "" else fresh(cols)
-      Files.writeString(sidecar(staging),
-        (kept ++ body.linesIterator.filter(_.nonEmpty)).mkString("\n") + "\n")
-      ()
+      setCap: Int): Unit = {
+    val prior = manifestFiles.map { f =>
+      Option.when(Files.exists(f(priorDir)))(
+        Files.readString(f(priorDir)).linesIterator.filter(_.nonEmpty).toSeq)
     }
-    carry(statsFile, cols => statsBody(spark, newPaths, cols))
-    carry(setsFile, cols => setsBody(spark, newPaths, cols, setCap))
-    carry(bloomFile, cols => bloomBody(spark, newPaths, cols, bloomFpp))
+    val cols = prior.map(_.toSeq.flatten.map(_.split("\t", 3)(1)).distinct)
+    val fresh = manifestPass(spark, staging, Some(newFiles),
+      cols(0), cols(1), setCap, cols(2))
+    manifestFiles.lazyZip(prior).lazyZip(fresh).foreach { (f, all, lines) =>
+      all.foreach(ls => writeLines(f(staging),
+        ls.filter(l => keptFiles.contains(l.takeWhile(_ != '\t'))) ++ lines))
+    }
   }
 
   /** Partition-sliced read-modify-write commit — the SOUND concurrent
@@ -671,7 +666,7 @@ object SnapshotTable {
       dropValues: Seq[Any], tokenSafe: Boolean, mine: Set[String],
       base: Int, staging: Path, statsCols: Seq[String],
       setCols: Seq[String], setCap: Int,
-      bloomCols: Seq[String], bloomFpp: Double): Unit = {
+      bloomCols: Seq[String]): Unit = {
     if (base == 0) {
       require(dropValues.isEmpty,
         "dropValues on a CREATE commit: nothing exists to drop")
@@ -728,10 +723,13 @@ object SnapshotTable {
             Files.createLink(staging.resolve(f), priorDir.resolve(f)))
           val fresh = writeSlicePerValue(aligned, partitionCol, vals, staging)
           writePartmap(staging, partitionCol, keep ++ fresh)
+          // schema sidecar in the table's (prior) column order —
+          // zero-job reads of the new version and of the carry pass
+          writeSchemaSidecar(staging, aligned.schema)
           // pruning manifests survive the fast path too: kept
           // files' lines carry verbatim, new files are scanned
           carrySidecars(spark, priorDir, staging, keep.keySet,
-            fresh.keySet, setCap, bloomFpp)
+            fresh.keySet, setCap)
         case _ =>
           // SLOW PATH (no partmap / DV present / token-unsafe
           // type / too many values): full compose stays correct,
@@ -744,21 +742,18 @@ object SnapshotTable {
             org.apache.spark.sql.functions.lit(false))
           prior.filter(!replaced).unionByName(aligned)
             .write.mode("overwrite").parquet(staging.toString)
+          writeSchemaSidecar(staging, aligned.schema)
       }
-      // schema sidecar in the table's (prior) column order —
-      // zero-job reads of the new version
-      writeSchemaSidecar(staging, aligned.schema)
     }
-    // explicit sidecar requests (same contract as commit()). A
+    // explicit manifest requests (same contract as commit()). A
     // carried manifest that does not cover the REQUESTED columns
     // is recomputed over the whole staging (a pruning-column
-    // upgrade is a data-sized event, never a silent drop).
-    if (statsCols.nonEmpty && !sidecarCovers(statsFile(staging), statsCols))
-      writeStats(spark, staging, statsCols)
-    if (setCols.nonEmpty && !sidecarCovers(setsFile(staging), setCols))
-      writeSets(spark, staging, setCols, setCap)
-    if (bloomCols.nonEmpty && !sidecarCovers(bloomFile(staging), bloomCols))
-      writeBlooms(spark, staging, bloomCols, bloomFpp)
+    // upgrade is a data-sized event, never a silent drop); every
+    // kind that needs it shares one pass.
+    def missing(f: Path => Path, cols: Seq[String]) =
+      if (sidecarCovers(f(staging), cols)) Nil else cols
+    writeManifests(spark, staging, missing(statsFile, statsCols),
+      missing(setsFile, setCols), setCap, missing(bloomFile, bloomCols))
     validateConstraints(spark, root, staging)
   }
 
@@ -767,7 +762,7 @@ object SnapshotTable {
       maxRetries: Int = 10, statsCols: Seq[String] = Nil,
       setCols: Seq[String] = Nil, setCap: Int = 1024,
       dropValues: Seq[Any] = Nil,
-      bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01): Int = {
+      bloomCols: Seq[String] = Nil): Int = {
     Files.createDirectories(logDir(root))
     requireNoReservedColumns(df)
     val (vals, tokenSafe, mine) = slicePreamble(df, partitionCol, dropValues)
@@ -800,7 +795,7 @@ object SnapshotTable {
         try {
         composeSliceStaging(spark, root, df, partitionCol, vals, dropValues,
           tokenSafe, mine, base, staging, statsCols, setCols, setCap,
-          bloomCols, bloomFpp)
+          bloomCols)
         manifestTmp = Paths.get(root, "_staging",
           staging.getFileName.toString + ".manifest")
         Files.writeString(manifestTmp, mine.toSeq.sorted.mkString("\n"))
@@ -879,28 +874,39 @@ object SnapshotTable {
     Files.writeString(schemaFile(staging), nullable.json); ()
   }
 
-  private def readWithSidecarSchema(spark: SparkSession, dir: Path): DataFrame = {
+  /** A reader of `dir`'s files that declares its `_schema.json`
+    * (inference, a Spark job, only when the sidecar is absent).
+    */
+  private def sidecarReader(spark: SparkSession,
+      dir: Path): org.apache.spark.sql.DataFrameReader = {
     val sf = schemaFile(dir)
     if (Files.exists(sf))
       spark.read.schema(org.apache.spark.sql.types.DataType
         .fromJson(Files.readString(sf))
         .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .parquet(dir.toString)
-    else spark.read.parquet(dir.toString)
+    else spark.read
+  }
+
+  /** `version`, or the published head when `version <= 0`; either
+    * way it must be committed: an orphan marker/directory from a
+    * crashed writer can exist ABOVE the pointer, and reading it would
+    * surface uncommitted data.
+    */
+  private def committedVersion(root: String, version: Int): Int = {
+    val cur = currentVersion(root)
+    val v = if (version > 0) version else cur
+    require(v > 0, s"no committed version at $root")
+    require(v <= cur, s"version $v is not committed (latest is $cur)")
+    v
   }
 
   /** Read the latest snapshot (default) or time-travel to `version`. */
   def read(spark: SparkSession, root: String, version: Int = -1): DataFrame = {
-    val cur = currentVersion(root)
-    val v = if (version > 0) version else cur
-    require(v > 0, s"no committed version at $root")
-    // an orphan marker/directory from a crashed writer can exist ABOVE
-    // the pointer; reading it would surface uncommitted data
-    require(v <= cur, s"version $v is not committed (latest is $cur)")
-    require(Files.exists(Paths.get(root, s"v=$v")),
+    val v = committedVersion(root, version)
+    val dir = Paths.get(root, s"v=$v")
+    require(Files.exists(dir),
       s"version $v does not exist (vacuumed or never committed)")
-    applyDv(spark, Paths.get(root, s"v=$v"),
-      readWithSidecarSchema(spark, Paths.get(root, s"v=$v")))
+    applyDv(spark, dir, sidecarReader(spark, dir).parquet(dir.toString))
   }
 
   // ---- deletion vectors (row-level delete without rewrite) ---------
@@ -939,12 +945,8 @@ object SnapshotTable {
     * `__dv_idx`), empty when the version carries none.
     */
   def deletionVectors(spark: SparkSession, root: String,
-      version: Int = -1): DataFrame = {
-    val cur = currentVersion(root)
-    val v = if (version > 0) version else cur
-    require(v > 0 && v <= cur, s"version $v is not committed (latest is $cur)")
-    dvRead(spark, Paths.get(root, s"v=$v"))
-  }
+      version: Int = -1): DataFrame =
+    dvRead(spark, Paths.get(root, s"v=${committedVersion(root, version)}"))
 
   private def dvRead(spark: SparkSession, dir: Path): DataFrame =
     if (Files.exists(dvDir(dir)))
@@ -1328,56 +1330,19 @@ object SnapshotTable {
   // data skipping: per-file min/max column stats recorded at commit
   // time, so a selective read opens only the files whose range can
   // match — before any parquet footer is touched. Same idea here:
-  // `commit(statsCols = ...)` computes per-file min/max for the named
-  // columns from the STAGED files (one aggregate over data just
-  // written and still in page cache; |files| rows to the driver — the
-  // same small-by-construction collect contract as ParquetDml's
-  // partition listing) into `_stats.json` INSIDE the staging dir, so
-  // it publishes atomically with the version rename and is invisible
-  // to readers (underscore-prefixed files are hidden from Spark's
-  // parquet listing). `readPruned` consults it and hands Spark only
-  // the surviving files. At 100 TB this is the difference between
-  // listing 10⁶ footers and opening the 3 files a key-range probe
-  // needs.
+  // `commit(statsCols = ...)` records per-file min/max for the named
+  // columns of the STAGED files in `_stats.json` INSIDE the staging
+  // dir (computed by the manifest pass below, together with the value
+  // sets and blooms), so it publishes atomically with the version
+  // rename and is invisible to readers (underscore-prefixed files are
+  // hidden from Spark's parquet listing). `readPruned` consults it and
+  // hands Spark only the surviving files. At 100 TB this is the
+  // difference between listing 10⁶ footers and opening the 3 files a
+  // key-range probe needs. Lines: `fileName \t col \t min \t max`
+  // (values as strings, "\0N" for an all-null file; file names are
+  // basename-only — the directory is renamed at publish).
 
   private def statsFile(dir: Path) = dir.resolve("_stats.json")
-
-  /** Per-file min/max for `cols`, one tab-separated line per
-    * (file, col): `fileName  col  min  max` (values as strings, "\0N"
-    * for an all-null file). File names are stored basename-only —
-    * the directory is renamed at publish.
-    */
-  private def writeStats(spark: SparkSession, staged: Path, cols: Seq[String]): Unit = {
-    Files.writeString(statsFile(staged),
-      statsBody(spark, Seq(staged.toString), cols))
-    ()
-  }
-
-  /** The stats manifest lines for exactly `srcs` (a whole staged dir
-    * or an explicit file subset — the fast path computes stats for
-    * its NEW files only and carries the linked files' lines).
-    */
-  private def statsBody(spark: SparkSession, srcs: Seq[String],
-      cols: Seq[String]): String = {
-    import org.apache.spark.sql.functions.{col => c, input_file_name, max => mx, min => mn}
-    val aggs = cols.flatMap(n => Seq(
-      mn(c(n)).cast("string").as(s"min:$n"), mx(c(n)).cast("string").as(s"max:$n")))
-    val rows = spark.read.parquet(srcs: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val sb = new StringBuilder
-    rows.foreach { r =>
-      val file = Paths.get(new java.net.URI(r.getString(0)).getPath)
-        .getFileName.toString
-      cols.zipWithIndex.foreach { case (n, i) =>
-        val lo = Option(r.get(1 + 2 * i)).map(v => escapeVal(v.toString)).getOrElse("\\0N")
-        val hi = Option(r.get(2 + 2 * i)).map(v => escapeVal(v.toString)).getOrElse("\\0N")
-        sb.append(s"$file\t$n\t$lo\t$hi\n")
-      }
-    }
-    sb.toString
-  }
 
   // ---- value-set skipping (point-lookup pruning) -------------------
   //
@@ -1391,7 +1356,9 @@ object SnapshotTable {
   // pruning stays an optimization, never a correctness filter. This
   // is the parquet-dictionary / bloom-filter idea at manifest level:
   // at 100 TB a point lookup opens |files-holding-key| files instead
-  // of every file whose min..max straddles it.
+  // of every file whose min..max straddles it. Lines: `file \t col \t
+  // v1 \x01 v2 …` (escaped values, sorted; "\0N" for null, which the
+  // cap does not count) or `file \t col \t \0OVERFLOW`.
 
   private def setsFile(dir: Path) = dir.resolve("_sets.json")
   private val setsOverflow = "\\0OVERFLOW"
@@ -1459,50 +1426,6 @@ object SnapshotTable {
     sb.toString
   }
 
-  private def writeSets(spark: SparkSession, staged: Path, cols: Seq[String],
-      cap: Int): Unit = {
-    Files.writeString(setsFile(staged),
-      setsBody(spark, Seq(staged.toString), cols, cap))
-    ()
-  }
-
-  /** The value-set manifest lines for exactly `srcs` (see
-    * [[statsBody]] for why the source set is explicit).
-    */
-  private def setsBody(spark: SparkSession, srcs: Seq[String],
-      cols: Seq[String], cap: Int): String = {
-    import org.apache.spark.sql.functions.{col => c, countDistinct, input_file_name}
-    val df = spark.read.parquet(srcs: _*)
-    val sb = new StringBuilder
-    cols.foreach { n =>
-      // two passes, both small-by-construction: distinct counts per
-      // file first, then the value lists only for files under cap
-      // (collect_set on an over-cap file would buffer unboundedly)
-      val counts = df.groupBy(input_file_name().as("file"))
-        .agg(countDistinct(c(n)).as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val under = counts.filter(_._2 <= cap).keySet
-      val values: Map[String, Seq[String]] =
-        if (under.isEmpty) Map.empty
-        else df.select(input_file_name().as("file"), c(n).cast("string").as("v"))
-          .filter(c("file").isin(under.toSeq: _*))
-          .distinct().collect()
-          .groupBy(_.getString(0))
-          .map { case (f, rows) =>
-            f -> rows.map(r => Option(r.getString(1)).map(escapeVal)
-              .getOrElse("\\0N")).toSeq.sorted
-          }
-      counts.keys.foreach { uri =>
-        val file = Paths.get(new java.net.URI(uri).getPath).getFileName.toString
-        val payload =
-          if (under(uri)) values.getOrElse(uri, Nil).mkString(setsSep.toString)
-          else setsOverflow
-        sb.append(s"$file\t$n\t$payload\n")
-      }
-    }
-    sb.toString
-  }
-
   // ---- bloom-filter skipping (high-cardinality point pruning) ------
   //
   // The value-set sidecar is exact but capped: files past `setCap`
@@ -1513,55 +1436,92 @@ object SnapshotTable {
   // non-clustered high-cardinality columns (IDs, hashes) where at
   // 100 TB the set cap is always exceeded. Probes consult the set
   // first (exact), and fall through to the bloom only for files whose
-  // set is OVERFLOW or absent.
+  // set is OVERFLOW or absent. Lines: `file \t col \t m:k:base64`.
 
   private def bloomFile(dir: Path) = dir.resolve("_bloom.json")
 
-  private def writeBlooms(spark: SparkSession, staged: Path,
-      cols: Seq[String], fpp: Double): Unit = {
-    Files.writeString(bloomFile(staged),
-      bloomBody(spark, Seq(staged.toString), cols, fpp))
-    ()
+  // ---- the manifest pass ------------------------------------------
+  //
+  // All three manifests of a staged version come from ONE
+  // `groupBy(file)` aggregate over the staged bytes (still in page
+  // cache): min/max per stats column, a capped value set per set
+  // column ([[BloomSidecar.CappedSetAgg]]), and bloom bits per bloom
+  // column ([[BloomSidecar.BloomAgg]]). |files| rows reach the driver
+  // — the same small-by-construction collect contract as ParquetDml's
+  // partition listing. The read declares the staged `_schema.json`,
+  // so schema inference runs no job either.
+
+  /** The manifest kinds, in the order [[manifestPass]] returns them. */
+  private val manifestFiles: Seq[Path => Path] = Seq(statsFile, setsFile, bloomFile)
+
+  /** Rows in a staged parquet file, from its footer (no Spark job). */
+  private def footerRows(file: Path): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(file))
+    try r.getRecordCount finally r.close()
   }
 
-  /** The bloom manifest lines for exactly `srcs` (explicit source set,
-    * same contract as [[statsBody]]): `file \t col \t m:k:base64`.
-    * Two passes per column, both bounded: per-file distinct counts
-    * size the filters (one metadata-sized collect), then one
-    * map-side-combined aggregate ORs each file's value hashes into an
-    * `m`-bit buffer — the shuffle moves |files| buffers, never rows.
+  /** Stats, value-set and bloom manifest lines (in [[manifestFiles]]
+    * order) for the data files of `dir` — all of them, or just
+    * `only` (the fast path computes lines for its NEW files and
+    * carries the linked files' lines). A kind with no columns gets no
+    * lines; nothing requested runs no job.
     */
-  private def bloomBody(spark: SparkSession, srcs: Seq[String],
-      cols: Seq[String], fpp: Double): String = {
-    import org.apache.spark.sql.functions.{col => c, countDistinct, input_file_name, udaf}
+  private def manifestPass(spark: SparkSession, dir: Path,
+      only: Option[Set[String]], statsCols: Seq[String],
+      setCols: Seq[String], setCap: Int,
+      bloomCols: Seq[String]): Seq[Seq[String]] = {
     import org.apache.spark.sql.Encoders
-    val df = spark.read.parquet(srcs: _*)
-    val sb = new StringBuilder
-    cols.foreach { n =>
-      val counts = df.groupBy(input_file_name().as("file"))
-        .agg(countDistinct(c(n)).as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-      if (counts.nonEmpty) {
-        // one (m, k) per column, sized for the LARGEST file so no
-        // file's realized fpp exceeds the request (post-OPTIMIZE files
-        // are near-uniform; smaller files just get a sparser filter)
-        val (m, k) = BloomSidecar.size(counts.map(_._2).max, fpp)
-        val agg = udaf(new BloomSidecar.BloomAgg(m, k), Encoders.STRING)
-        val rows = df
-          .select(input_file_name().as("file"), c(n).cast("string").as("v"))
-          .groupBy(c("file")).agg(agg(c("v")).as("bits")).collect()
-        rows.foreach { r =>
-          val file = Paths.get(new java.net.URI(r.getString(0)).getPath)
-            .getFileName.toString
-          val bytes = r.getAs[Array[Byte]](1)
-          val bb = java.nio.ByteBuffer.wrap(bytes)
-          val longs = Array.fill(bytes.length / 8)(bb.getLong)
-          sb.append(s"$file\t$n\t${BloomSidecar.encode(longs, m, k)}\n")
-        }
-      }
+    import org.apache.spark.sql.functions.{col => c, input_file_name, max => mx, min => mn, udaf}
+    lazy val files = only.map(_.toSeq.sorted).getOrElse(listDataFiles(dir))
+    if ((statsCols ++ setCols ++ bloomCols).isEmpty || files.isEmpty)
+      return manifestFiles.map(_ => Nil)
+    // one (m, k) for the largest file's row count, so no file's
+    // realized fpp exceeds Fpp (smaller files get a sparser filter)
+    lazy val (m, k) = BloomSidecar.size(
+      files.map(f => footerRows(dir.resolve(f))).max, BloomSidecar.Fpp)
+    val sets = udaf(new BloomSidecar.CappedSetAgg(setCap), Encoders.STRING)
+    lazy val bloom = udaf(new BloomSidecar.BloomAgg(m, k), Encoders.STRING)
+    val aggs = statsCols.flatMap(n => Seq(mn(c(n)), mx(c(n))).map(_.cast("string"))) ++
+      setCols.map(n => sets(c(n).cast("string"))) ++
+      bloomCols.map(n => bloom(c(n).cast("string")))
+    val src = only.fold(Seq(dir.toString))(_ => files.map(dir.resolve(_).toString))
+    val rows = sidecarReader(spark, dir).parquet(src: _*)
+      .groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*).collect()
+    def render(v: String) = if (v == null) "\\0N" else escapeVal(v)
+    val (s0, b0) = (1 + 2 * statsCols.size, 1 + 2 * statsCols.size + setCols.size)
+    val lines = rows.toSeq.map { r =>
+      val file = Paths.get(new java.net.URI(r.getString(0)).getPath)
+        .getFileName.toString
+      Seq(
+        statsCols.zipWithIndex.map { case (n, i) =>
+          s"$file\t$n\t${render(r.getString(1 + 2 * i))}\t${render(r.getString(2 + 2 * i))}"
+        },
+        setCols.zipWithIndex.map { case (n, i) =>
+          val vs = r.getSeq[String](s0 + i)
+          s"$file\t$n\t${if (vs.isEmpty) setsOverflow
+            else vs.map(render).sorted.mkString(setsSep.toString)}"
+        },
+        bloomCols.zipWithIndex.map { case (n, i) =>
+          val bb = java.nio.ByteBuffer.wrap(r.getAs[Array[Byte]](b0 + i))
+          val bits = Array.fill(bb.capacity / 8)(bb.getLong)
+          s"$file\t$n\t${BloomSidecar.encode(bits, m, k)}"
+        })
     }
-    sb.toString
+    manifestFiles.indices.map(i => lines.flatMap(_(i)))
   }
+
+  private def writeLines(file: Path, lines: Seq[String]): Unit = {
+    Files.writeString(file, lines.map(_ + "\n").mkString); ()
+  }
+
+  /** Write the requested manifests over every data file of `dir`. */
+  private def writeManifests(spark: SparkSession, dir: Path,
+      statsCols: Seq[String], setCols: Seq[String], setCap: Int,
+      bloomCols: Seq[String]): Unit =
+    manifestFiles.lazyZip(Seq(statsCols, setCols, bloomCols))
+      .lazyZip(manifestPass(spark, dir, None, statsCols, setCols, setCap, bloomCols))
+      .foreach { (file, cols, lines) => if (cols.nonEmpty) writeLines(file(dir), lines) }
 
   /** Driver-side bloom slice for one column of one version directory:
     * file → (m, k, bits). Absent manifest or malformed lines read as
@@ -1588,17 +1548,9 @@ object SnapshotTable {
     */
   def pruneFilesEq(spark: SparkSession, root: String, column: String,
       value: String, version: Int = -1): Seq[String] = {
-    val cur = currentVersion(root)
-    val v = if (version > 0) version else cur
-    require(v > 0 && v <= cur, s"version $v is not committed (latest is $cur)")
+    val v = committedVersion(root, version)
     val dir = Paths.get(root, s"v=$v")
-    val all = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-        .toVector.sorted
-      finally s.close()
-    }
+    val all = listDataFiles(dir).sorted
     val blooms = loadBlooms(dir, column)
     def bloomKeep(f: String): Boolean = blooms.get(f) match {
       case Some((m, k, bits)) => BloomSidecar.mightContain(bits, m, k, value)
@@ -1646,8 +1598,7 @@ object SnapshotTable {
       preds: Seq[(String, String)], version: Int = -1): DataFrame = {
     import org.apache.spark.sql.functions.{col => c, lit}
     require(preds.nonEmpty, "readPointAll needs at least one predicate")
-    val cur = currentVersion(root)
-    val v = if (version > 0) version else cur
+    val v = committedVersion(root, version)
     val files = preds
       .map { case (column, value) =>
         pruneFilesEq(spark, root, column, value, v).toSet
@@ -1674,39 +1625,19 @@ object SnapshotTable {
   def pruneFiles(spark: SparkSession, root: String, column: String,
       lo: String, hi: String, numeric: Boolean = true,
       version: Int = -1): Seq[String] = {
-    val cur = currentVersion(root)
-    val v = if (version > 0) version else cur
-    require(v > 0 && v <= cur, s"version $v is not committed (latest is $cur)")
-    val dir = Paths.get(root, s"v=$v")
-    val all = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-        .toVector.sorted
-      finally s.close()
-    }
-    val sf = statsFile(dir)
-    if (!Files.exists(sf)) return all.map(n => s"$root/v=$v/$n")
-    // ranges: file -> (min, max) for the requested column, if present
-    val ranges: Map[String, (String, String)] =
-      Files.readString(sf).linesIterator.flatMap { line =>
-        line.split('\t') match {
-          case Array(f, c, mnV, mxV) if c == column => Some(f -> (mnV, mxV))
-          case _ => None
-        }
-      }.toMap
+    val v = committedVersion(root, version)
+    val ranges = statsRanges(root, column, v)
     def le(a: String, b: String): Boolean =
       if (!numeric) a <= b
       else (a.toDoubleOption, b.toDoubleOption) match {
         case (Some(x), Some(y)) => x <= y
         case _ => true // unparsable stat: conservative keep
       }
-    all.filter { f =>
+    listDataFiles(Paths.get(root, s"v=$v")).sorted.filter { f =>
       ranges.get(f) match {
-        case Some((mnV, mxV)) =>
-          if (mnV == "\\0N" || mxV == "\\0N") true // all-null file: keep
-          // range intersects [lo, hi] (stored stats are frame-escaped)
-          else le(lo, unescapeVal(mxV)) && le(unescapeVal(mnV), hi)
+        // all-null file ("\0N"; a real "\0N" value keeps too): keep
+        case Some((mnV, mxV)) if mnV == "\\0N" || mxV == "\\0N" => true
+        case Some((mnV, mxV)) => le(lo, mxV) && le(mnV, hi) // intersects
         case None => true // no stats line for this file: keep
       }
     }.map(n => s"$root/v=$v/$n")
@@ -1722,18 +1653,17 @@ object SnapshotTable {
       lo: String, hi: String, numeric: Boolean = true,
       version: Int = -1): DataFrame = {
     import org.apache.spark.sql.functions.{col => c}
-    val files = pruneFiles(spark, root, column, lo, hi, numeric, version)
+    val v = committedVersion(root, version)
+    val files = pruneFiles(spark, root, column, lo, hi, numeric, v)
     val typed =
       if (numeric) c(column).cast("double").between(lo.toDouble, hi.toDouble)
       else c(column).between(lo, hi)
     if (files.isEmpty) {
       // every file pruned: empty result with the table's schema
-      read(spark, root, version).filter(org.apache.spark.sql.functions.lit(false))
+      read(spark, root, v).filter(org.apache.spark.sql.functions.lit(false))
     } else {
       // deletion vectors apply to the surviving files too (the DV
       // join keys on file_name, so a file subset is fine)
-      val cur = currentVersion(root)
-      val v = if (version > 0) version else cur
       applyDv(spark, Paths.get(root, s"v=$v"),
         spark.read.parquet(files: _*)).filter(typed)
     }
@@ -1746,10 +1676,7 @@ object SnapshotTable {
     */
   def statsTable(spark: SparkSession, root: String, version: Int = -1): DataFrame = {
     import spark.implicits._
-    val cur = currentVersion(root)
-    val v = if (version > 0) version else cur
-    require(v > 0 && v <= cur, s"version $v is not committed (latest is $cur)")
-    val dir = Paths.get(root, s"v=$v")
+    val dir = Paths.get(root, s"v=${committedVersion(root, version)}")
     val sf = statsFile(dir)
     val rows: Seq[(String, String, String, String, Long)] =
       if (!Files.exists(sf)) Nil
@@ -1765,8 +1692,8 @@ object SnapshotTable {
   }
 
   /** Driver-only stats-manifest slice: file → (min, max) for one
-    * column of one version — the map [[pruneFiles]] builds internally,
-    * exposed so per-batch probes (BandHistory) can memoize it per
+    * column of one version — the map [[pruneFiles]] prunes with,
+    * shared so per-batch probes (BandHistory) can memoize it per
     * (root, version) instead of re-collecting [[statsTable]] (which
     * also stats every data file's size) on every call. Zero Spark
     * jobs; an absent manifest is the empty map (callers keep files
@@ -2030,7 +1957,7 @@ object SnapshotTable {
   * partitions' complete new rows; untouched partitions carry forward
   * from the published head (hard links on the partmap fast path), and
   * the conflict manifest claims only the touched partition tokens.
-  * `setCols`/`setCap`/`bloomCols`/`bloomFpp` request pruning sidecars
+  * `setCols`/`setCap`/`bloomCols` request pruning sidecars
   * exactly as in commitPartitions. Because composition reads ONLY
   * published data, the claimed slot must be contiguous with the
   * composed base; a concurrent claim in between aborts the whole
@@ -2043,7 +1970,7 @@ final case class TableWrite(root: String, df: DataFrame,
     appendFiles: Boolean = false,
     sliceCol: Option[String] = None,
     setCols: Seq[String] = Nil, setCap: Int = 1024,
-    bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01)
+    bloomCols: Seq[String] = Nil)
 
 /** Cross-table transactions over [[SnapshotTable]] — the piece even
   * most production formats lack (Delta/Iceberg commit one table at a
@@ -2131,7 +2058,7 @@ object SnapshotTransaction {
         val base = currentVersion(w0.root)
         try composeSliceStaging(spark, w0.root, w0.df, pcol, vals, Nil,
           tokenSafe, mine, base, staging, Nil,
-          w0.setCols, w0.setCap, w0.bloomCols, w0.bloomFpp)
+          w0.setCols, w0.setCap, w0.bloomCols)
         catch { case e: Throwable => deleteTree(staging); throw e }
         val w = if (w0.readVersion < 0) w0.copy(readVersion = base) else w0
         val manifestTmp = Paths.get(w.root, "_staging",

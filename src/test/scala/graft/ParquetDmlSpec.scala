@@ -15,7 +15,7 @@ class ParquetDmlSpec extends AnyFunSuite {
     * values F, O, P) in a temp dir.
     */
   private def freshTable(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dml").toString
+    val dir = Artifacts.exitRoot("graft_dml")
     val path = s"$dir/orders"
     Tables.orders(spark, TestSpark.sf0001)
       .write.partitionBy("o_orderstatus").parquet(path)
@@ -116,7 +116,7 @@ class ParquetDmlSpec extends AnyFunSuite {
 
   test("delete handles NULL and special-character partition values (escaped dirs)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dml_esc").toString
+    val dir = Artifacts.exitRoot("graft_dml_esc")
     val path = s"$dir/t"
     Seq((1, "a:b c", 10), (2, null, 20), (3, "plain", 30))
       .toDF("id", "part", "v").write.partitionBy("part").parquet(path)

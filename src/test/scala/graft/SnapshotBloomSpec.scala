@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{BloomSidecar, SnapshotTable}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +17,20 @@ class SnapshotBloomSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshRoot(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-bloom-$tag").toString
+    Artifacts.exitRoot(s"graft-bloom-$tag")
+
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(500) } // job-start events post async
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get()
+  }
 
   test("bloom kernel: sizing, no false negatives, bounded false positives") {
     val (m, k) = BloomSidecar.size(10000, 0.01)
@@ -35,6 +49,39 @@ class SnapshotBloomSpec extends AnyFunSuite {
     assert(m2 == m && k2 == k && bits2.sameElements(bits))
     assert(BloomSidecar.decode("garbage").isEmpty)
     assert(BloomSidecar.decode("64:1:AAA").isEmpty) // wrong byte length
+    // a committed filter, sized from its file's ROW count: each key
+    // repeats 4x, and 10,000 absent keys may keep the file at most at
+    // the requested rate plus 3 sigma of binomial slack
+    val root = freshRoot("fpp")
+    SnapshotTable.commit(spark, root,
+      spark.range(40000).select((col("id") / 4).cast("long").as("k")).coalesce(1),
+      bloomCols = Seq("k"))
+    val Array(_, _, payload) = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(root, "v=1", "_bloom.json")).trim.split('\t')
+    val Some((fm, fk, fbits)) = BloomSidecar.decode(payload)
+    val keptAbsent = (0 until 10000).count(i =>
+      BloomSidecar.mightContain(fbits, fm, fk, s"${1000000 + i}"))
+    val p = BloomSidecar.Fpp
+    assert(keptAbsent <= 10000 * p + 3 * math.sqrt(10000 * p * (1 - p)),
+      s"committed bloom kept $keptAbsent of 10000 absent keys")
+  }
+
+  test("one manifest pass: stats, sets and blooms start no more jobs than stats alone") {
+    val orders = Tables.orders(spark, TestSpark.sf0001)
+      .repartition(4, col("o_orderkey"))
+    def commitJobs(setCols: Seq[String], bloomCols: Seq[String]): (Int, String) = {
+      val root = freshRoot("jobs")
+      val n = jobsDuring(SnapshotTable.commit(spark, root, orders,
+        statsCols = Seq("o_orderdate"), setCols = setCols, bloomCols = bloomCols))
+      (n, root)
+    }
+    commitJobs(Nil, Nil) // warm-up: the measured commits are repeats
+    val (statsOnly, _) = commitJobs(Nil, Nil)
+    val (all, root) = commitJobs(Seq("o_orderstatus"), Seq("o_orderkey"))
+    assert(all <= statsOnly,
+      s"stats+sets+blooms ran $all jobs, stats alone $statsOnly")
+    Seq("_stats.json", "_sets.json", "_bloom.json").foreach(f =>
+      assert(java.nio.file.Files.size(java.nio.file.Paths.get(root, "v=1", f)) > 0, f))
   }
 
   test("over-cap column: sets alone keep everything, bloom prunes, results identical") {

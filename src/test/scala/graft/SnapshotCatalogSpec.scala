@@ -12,7 +12,7 @@ class SnapshotCatalogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshCatalog(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-catalog-$tag").toString
+    Artifacts.exitRoot(s"graft-catalog-$tag")
 
   test("saveAsTable registers on first use; table() reads by name with time travel") {
     val cat = freshCatalog("basic")

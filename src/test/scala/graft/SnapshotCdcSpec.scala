@@ -11,7 +11,7 @@ class SnapshotCdcSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshTable(): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft-cdc").toString
+    val root = Artifacts.exitRoot("graft-cdc")
     val v1 = Tables.nation(spark, TestSpark.sf0001)
     SnapshotTable.commit(spark, root, v1)
     // v2: update nation 0's name, delete nation 1, insert key 99
@@ -56,7 +56,7 @@ class SnapshotCdcSpec extends AnyFunSuite {
   }
 
   test("identical versions produce an empty feed") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cdc-id").toString
+    val root = Artifacts.exitRoot("graft-cdc-id")
     val v = Tables.region(spark, TestSpark.sf0001)
     SnapshotTable.commit(spark, root, v)
     SnapshotTable.commit(spark, root, v)

@@ -15,7 +15,7 @@ class SnapshotCdcStreamSpec extends AnyFunSuite {
 
   /** v1 = nation (25 rows); v2 = rename key 0, delete key 1, insert 99. */
   private def seeded(): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft-cdc-stream").toString
+    val root = Artifacts.exitRoot("graft-cdc-stream")
     val v1 = Tables.nation(spark, TestSpark.sf0001)
     SnapshotTable.commit(spark, root, v1)
     val v2 = v1

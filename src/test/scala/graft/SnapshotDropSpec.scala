@@ -33,7 +33,7 @@ class SnapshotDropSpec extends AnyFunSuite {
   }
 
   test("dropValues removes partitions atomically, links the rest, keeps history") {
-    val root = Files.createTempDirectory("snapdrop").toString
+    val root = Artifacts.exitRoot("snapdrop")
     SnapshotTable.commitPartitions(spark, root,
       table(Seq((1L, "a"), (2L, "b"), (3L, "c"))), "p")
     // rewrite p=9 (new) and drop p=1 and p=2 in ONE version
@@ -56,7 +56,7 @@ class SnapshotDropSpec extends AnyFunSuite {
   }
 
   test("a drop claims its partitions: concurrent writer of a dropped value conflicts") {
-    val root = Files.createTempDirectory("snapdrop-occ").toString
+    val root = Artifacts.exitRoot("snapdrop-occ")
     SnapshotTable.commitPartitions(spark, root,
       table(Seq((1L, "a"), (2L, "b"))), "p")
     SnapshotTable.commitPartitions(spark, root,
@@ -74,7 +74,7 @@ class SnapshotDropSpec extends AnyFunSuite {
   }
 
   test("guards: drop on CREATE and overlapping dropValues are rejected") {
-    val root = Files.createTempDirectory("snapdrop-guards").toString
+    val root = Artifacts.exitRoot("snapdrop-guards")
     intercept[IllegalArgumentException] {
       SnapshotTable.commitPartitions(spark, root,
         table(Seq((1L, "a"))), "p", dropValues = Seq(2L))
@@ -88,7 +88,7 @@ class SnapshotDropSpec extends AnyFunSuite {
   }
 
   test("slow path (no partmap) drops by value too") {
-    val root = Files.createTempDirectory("snapdrop-slow").toString
+    val root = Artifacts.exitRoot("snapdrop-slow")
     // flat commit: table born WITHOUT a partmap → compose slow path
     SnapshotTable.commit(spark, root, table(Seq((1L, "a"), (2L, "b"), (3L, "c"))))
     SnapshotTable.commitPartitions(spark, root,

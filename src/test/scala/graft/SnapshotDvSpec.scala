@@ -14,7 +14,7 @@ class SnapshotDvSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshRoot(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-dv-$tag").toString
+    Artifacts.exitRoot(s"graft-dv-$tag")
 
   private def dataFiles(root: String, v: Int): Map[String, Object] = {
     val dir = java.nio.file.Paths.get(root, s"v=$v")

@@ -18,7 +18,7 @@ class SnapshotPartmapSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-pm-").toString
+    Artifacts.exitRoot("graft-pm-")
 
   private def seed(root: String) = {
     import spark.implicits._

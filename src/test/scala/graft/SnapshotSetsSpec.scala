@@ -14,7 +14,7 @@ class SnapshotSetsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshRoot(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-sets-$tag").toString
+    Artifacts.exitRoot(s"graft-sets-$tag")
 
   test("point probe opens only the files holding the key; results identical") {
     val root = freshRoot("point")

@@ -14,7 +14,7 @@ class TextIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft-ti").toString
+    Artifacts.exitRoot("graft-ti")
 
   // raw-scan reference: same tokenization, same ranking
   private def rawSearch(docs: org.apache.spark.sql.DataFrame,

@@ -14,7 +14,7 @@ class VectorIndexSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def fresh(): String =
-    java.nio.file.Files.createTempDirectory("graft-vi").toString
+    Artifacts.exitRoot("graft-vi")
 
   private def vecs(rows: (Long, Seq[Float], Int)*) =
     rows.toDF("vec_id", "embedding", "label")
@@ -98,7 +98,7 @@ class VectorIndexSpec extends AnyFunSuite {
   test("streaming upsert: exactly-once across both crash classes, stats stay folded") {
     import graft.sources.SnapshotTransaction
     val root = fresh()
-    val txn = java.nio.file.Files.createTempDirectory("graft-vi-txn").toString
+    val txn = Artifacts.exitRoot("graft-vi-txn")
     VectorIndex.init(root)
     def cents() = VectorIndex.centroids(spark, root)
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toVector).toMap
