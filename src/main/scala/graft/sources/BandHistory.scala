@@ -237,8 +237,7 @@ object BandHistory {
           val v = SnapshotTable.currentVersion(broot)
           try {
             SnapshotTable.commitPartitions(spark, broot, compacted, "slice",
-              readVersion = v, statsCols = Seq("slice"),
-              dropValues = dropVals)
+              readVersion = v, dropValues = dropVals)
             done = true
           } catch {
             case e: SnapshotTable.SnapshotConflict =>

@@ -121,21 +121,90 @@ object SnapshotTable {
     * taken next+1 meanwhile — markers need not stay contiguous,
     * headVersion is a max).
     */
-  private def publishClaimed(root: String, staging: Path, manifestTmp: Path,
-      next: Int, cleanup: () => Unit): Int =
+  private def publishClaimed(root: String, staging: Path, next: Int): Int =
     try {
       backend.publish(root, staging, next)
       backend.advancePointer(root, next)
-      Files.deleteIfExists(manifestTmp)
+      Files.deleteIfExists(claimFile(staging))
       next
     } catch {
       case e: Throwable =>
         deleteTree(Paths.get(root, s"v=$next"))
         backend.abortClaim(root, next)
-        cleanup()
+        discard(staging)
         throw e
     }
   private[sources] def markerFile(root: String, v: Int) = logDir(root).resolve(v.toString)
+
+  // ---- staging: the one way a version is assembled -------------------
+  //
+  // Every write path assembles its version the same way. [[stage]]
+  // mints a writer-unique `_staging/<uuid>` directory — no shared
+  // name, so concurrent writers never collide — and the path fills it:
+  // Spark writes new files, [[linkFrom]] hard-links a source version's
+  // files, or both. [[writeManifests]] then writes its pruning
+  // manifests by one rule. The conflict claim ([[claimFile]]) is
+  // written last, so the CAS hard-links a marker that is born with
+  // complete content. A failure anywhere leaves nothing behind.
+
+  /** The conflict-claim file of `staging`: its touched-partition
+    * manifest, which the CAS hard-links as the version's marker.
+    */
+  private[sources] def claimFile(staging: Path): Path =
+    staging.resolveSibling(s"${staging.getFileName}.manifest")
+
+  /** Mint a staging directory under `root/_staging`, fill it, and
+    * write its claim `mine`. Returns the staging directory.
+    */
+  private[sources] def stage(root: String, mine: Set[String])(
+      fill: Path => Unit): Path = {
+    val staging = Paths.get(root, "_staging", java.util.UUID.randomUUID().toString)
+    try {
+      fill(staging)
+      Files.writeString(claimFile(staging), mine.toSeq.sorted.mkString("\n"))
+      staging
+    } catch { case e: Throwable => discard(staging); throw e }
+  }
+
+  /** Delete an unpublished staging directory and its claim file. */
+  private[sources] def discard(staging: Path): Unit = {
+    deleteTree(staging); Files.deleteIfExists(claimFile(staging)); ()
+  }
+
+  /** Hard-link `files` of version directory `src` into `staging`
+    * (metadata-only: same inode, no read, no write of their bytes).
+    * `src`'s `_schema.json` is copied, not linked, so the staging path
+    * may rewrite its own. Its `_dv` is linked only when every data file
+    * is: a vector belongs to the whole file set, and a linked file
+    * without it would resurrect deleted rows. Returns the linked names.
+    */
+  private[sources] def linkFrom(src: Path, staging: Path, files: Seq[String]): Set[String] = {
+    Files.createDirectories(staging)
+    files.foreach(f => Files.createLink(staging.resolve(f), src.resolve(f)))
+    if (Files.exists(schemaFile(src))) Files.copy(schemaFile(src), schemaFile(staging))
+    if (Files.exists(dvDir(src)) && files.size == listDataFiles(src).size) {
+      Files.createDirectories(dvDir(staging))
+      listDataFiles(dvDir(src)).foreach(f =>
+        Files.createLink(dvDir(staging).resolve(f), dvDir(src).resolve(f)))
+    }
+    files.toSet
+  }
+
+  /** The stale-read check every commit path shares: a read-modify-write
+    * (`readVersion >= 0`) aborts with [[SnapshotConflict]] when any
+    * version after its read, up to `head`, touched a partition that
+    * overlaps `mine` — its inputs are stale, and retrying would drop
+    * that commit's effect. A blind write never conflicts.
+    */
+  private[sources] def checkStale(root: String, readVersion: Int, head: Int,
+      mine: Set[String], writer: String): Unit =
+    if (readVersion >= 0)
+      ((readVersion + 1) to head).find(v => overlaps(mine, touched(root, v)))
+        .foreach { v =>
+          throw new SnapshotConflict(
+            s"$writer based on v$readVersion conflicts with v$v " +
+              "(overlapping partitions); re-read and re-derive")
+        }
 
   /** The storage seam: every atomic metadata operation of the commit
     * protocol (CAS claim, publish, pointer advance, pointer read) goes
@@ -273,6 +342,10 @@ object SnapshotTable {
     * concurrent writers use [[commitPartitions]], which recomposes
     * content on rebase instead.
     *
+    * The new version keeps the table's pruning manifests: it records
+    * the columns the current version does (that `df` still has), plus
+    * `statsCols`, `setCols` and `bloomCols` (see [[writeManifests]]).
+    *
     * @param partitions  partition values this commit rewrites; empty
     *                    means "whole table" (blind overwrite)
     * @param readVersion the snapshot version the caller derived `df`
@@ -297,18 +370,16 @@ object SnapshotTable {
       if (partitions.isEmpty) Set("*") else partitions.map(escapeVal).toSet
     // Stage once — the expensive (data-sized) step happens exactly one
     // time no matter how many CAS retries the (metadata-sized) loop
-    // takes. The manifest temp is written once too: the CAS hard-links
-    // it, so the marker is born with complete content.
-    val staging = Paths.get(root, "_staging", java.util.UUID.randomUUID().toString)
-    df.write.mode("overwrite").parquet(staging.toString)
-    writeSchemaSidecar(staging, df.schema)
-    try validateConstraints(spark, root, staging)
-    catch { case e: Throwable => deleteTree(staging); throw e }
-    writeManifests(spark, staging, statsCols, setCols, setCap, bloomCols)
-    val manifestTmp = Paths.get(root, "_staging",
-      staging.getFileName.toString + ".manifest")
-    Files.writeString(manifestTmp, mine.toSeq.sorted.mkString("\n"))
-    val committed = casCommit(root, staging, manifestTmp, mine, readVersion, maxRetries)
+    // takes.
+    val base = currentVersion(root)
+    val staging = stage(root, mine) { s =>
+      df.write.mode("overwrite").parquet(s.toString)
+      writeSchemaSidecar(s, df.schema)
+      validateConstraints(spark, root, s)
+      writeManifests(spark, s, baseDir(root, base), Set.empty,
+        statsCols, setCols, setCap, bloomCols)
+    }
+    val committed = casCommit(root, staging, mine, readVersion, maxRetries)
     // enrolled routing stats refresh AFTER publish (advisory — a stats
     // failure stales the scalar, never the commit); no-op one dir
     // check for non-enrolled tables. Full-content commit → recompute
@@ -319,43 +390,28 @@ object SnapshotTable {
 
   /** The metadata half of [[commit]] — CAS-claim a version for an
     * already-staged directory and publish it. Shared by commit,
-    * [[deleteWhere]], and [[compactFiles]], which stage differently
-    * (Spark write vs hard-links) but follow one commit protocol.
+    * [[deleteWhere]] and [[restore]], which stage differently (Spark
+    * write vs hard-links) but follow one commit protocol.
     */
-  private def casCommit(root: String, staging: Path, manifestTmp: Path,
-      mine: Set[String], readVersion: Int, maxRetries: Int): Int = {
-    def cleanup(): Unit = { deleteTree(staging); Files.deleteIfExists(manifestTmp); () }
+  private def casCommit(root: String, staging: Path, mine: Set[String],
+      readVersion: Int, maxRetries: Int): Int = {
     var attempt = 0
-    while (true) {
-      val base = headVersion(root)
-      // Conflict check BEFORE claiming a version: any commit that
-      // landed after our read snapshot and overlaps our partitions
-      // makes our inputs stale.
-      if (readVersion >= 0) {
-        ((readVersion + 1) to base).find(v => overlaps(mine, touched(root, v)))
-          .foreach { v =>
-            cleanup()
-            throw new SnapshotConflict(
-              s"commit based on v$readVersion conflicts with v$v " +
-                s"(overlapping partitions); re-read and re-derive")
-          }
-      }
-      val next = base + 1
-      val claimed = backend.claim(root, next, manifestTmp)
-      if (!claimed) {
+    try {
+      while (true) {
+        val base = headVersion(root)
+        // Conflict check BEFORE claiming a version
+        checkStale(root, readVersion, base, mine, "commit")
+        // We own version base + 1 exclusively once the claim lands.
+        if (backend.claim(root, base + 1, claimFile(staging)))
+          return publishClaimed(root, staging, base + 1)
         attempt += 1
-        if (attempt >= maxRetries) {
-          cleanup()
+        if (attempt >= maxRetries)
           throw new SnapshotConflict(
             s"lost the commit race $maxRetries times at $root; giving up")
-        }
         // loop: re-read head, re-check conflicts, next slot
-      } else {
-        // We own version `next` exclusively from here on.
-        return publishClaimed(root, staging, manifestTmp, next, () => cleanup())
       }
-    }
-    -1 // unreachable
+      -1 // unreachable
+    } catch { case e: SnapshotConflict => discard(staging); throw e }
   }
 
   // ---- partition-sliced fast path: the file↔partition map ----------
@@ -371,12 +427,15 @@ object SnapshotTable {
   //  - born when commitPartitions CREATES the table (the slice is
   //    written one partition value at a time);
   //  - carried by every fast-path commit (linked files keep their
-  //    token, new files take the slice's) and by RESTORE (1:1 links);
+  //    token, new files take the slice's) and copied by RESTORE (it
+  //    links every file of the restored version);
   //  - absent after any flat write (raw commit, mergeByKey, the
-  //    slow-path compose) or OPTIMIZE (files rewritten), and IGNORED
-  //    when the prior version carries a deletion vector — linking a
-  //    file without its DV would resurrect deleted rows — all of
-  //    which fall back to the always-correct full compose.
+  //    slow-path compose), OPTIMIZE (files rewritten), a
+  //    deletion-vector DELETE or an APPEND (files linked without a
+  //    map), and IGNORED when the prior version carries a deletion
+  //    vector — linking a file without its DV would resurrect deleted
+  //    rows — all of which fall back to the always-correct full
+  //    compose.
   private def partmapFile(dir: Path) = dir.resolve("_partmap")
   private val maxPartmapValues = 64
 
@@ -410,16 +469,6 @@ object SnapshotTable {
         .mkString("\n"))
     ()
   }
-
-  /** Does an existing sidecar manifest carry lines for every requested
-    * column? Absent file or any missing column → no (recompute).
-    */
-  private def sidecarCovers(sidecar: Path, cols: Seq[String]): Boolean =
-    Files.exists(sidecar) && {
-      val present = Files.readString(sidecar).linesIterator
-        .filter(_.nonEmpty).map(_.split("\t", 3)(1)).toSet
-      cols.forall(present.contains)
-    }
 
   private[sources] def listDataFiles(dir: Path): Vector[String] = {
     val s = Files.list(dir)
@@ -519,33 +568,6 @@ object SnapshotTable {
         l.rdd.unpersist(blocking = false); ()
       case _ => ()
     }
-
-  /** Carry the per-file pruning manifests across a fast-path compose:
-    * kept (hard-linked) files keep their lines verbatim — the
-    * manifests describe immutable bytes — and the slice's new files
-    * get fresh lines, for the prior version's columns of each kind,
-    * from one manifest pass over JUST their own bytes, so manifest
-    * data skipping keeps working on partmap tables without ever
-    * rescanning the untouched partitions. New files' set lines use
-    * the CALLER's cap (prior versions' caps are not recorded; a cap
-    * difference only shifts which files carry the OVERFLOW sentinel,
-    * which pruning treats conservatively).
-    */
-  private def carrySidecars(spark: SparkSession, priorDir: Path,
-      staging: Path, keptFiles: Set[String], newFiles: Set[String],
-      setCap: Int): Unit = {
-    val prior = manifestFiles.map { f =>
-      Option.when(Files.exists(f(priorDir)))(
-        Files.readString(f(priorDir)).linesIterator.filter(_.nonEmpty).toSeq)
-    }
-    val cols = prior.map(_.toSeq.flatten.map(_.split("\t", 3)(1)).distinct)
-    val fresh = manifestPass(spark, staging, Some(newFiles),
-      cols(0), cols(1), setCap, cols(2))
-    manifestFiles.lazyZip(prior).lazyZip(fresh).foreach { (f, all, lines) =>
-      all.foreach(ls => writeLines(f(staging),
-        ls.filter(l => keptFiles.contains(l.takeWhile(_ != '\t'))) ++ lines))
-    }
-  }
 
   /** Partition-sliced read-modify-write commit — the SOUND concurrent
     * writer API for partitioned tables. `df` holds ONLY the new rows
@@ -656,10 +678,8 @@ object SnapshotTable {
   }
 
   /** Compose a partition-sliced staging directory against PUBLISHED
-    * version `base` — the staging step shared by [[commitPartitions]]
+    * version `base` — the [[stage]] fill shared by [[commitPartitions]]
     * and sliced [[TableWrite]]s in [[SnapshotTransaction.commitAll]].
-    * The caller owns the claim/publish/cleanup protocol; on any throw
-    * the caller must delete `staging`.
     */
   private[sources] def composeSliceStaging(spark: SparkSession, root: String,
       df: DataFrame, partitionCol: String, vals: Seq[Any],
@@ -667,7 +687,7 @@ object SnapshotTable {
       base: Int, staging: Path, statsCols: Seq[String],
       setCols: Seq[String], setCap: Int,
       bloomCols: Seq[String]): Unit = {
-    if (base == 0) {
+    val linked: Set[String] = if (base == 0) {
       require(dropValues.isEmpty,
         "dropValues on a CREATE commit: nothing exists to drop")
       // CREATE: write one partition value at a time so the version
@@ -681,6 +701,7 @@ object SnapshotTable {
           writeSlicePerValue(df, partitionCol, vals, staging))
       else df.write.mode("overwrite").parquet(staging.toString)
       writeSchemaSidecar(staging, df.schema)
+      Set.empty
     } else {
       val prior = read(spark, root, base)
       // names AND types must match exactly: a name-only check
@@ -717,19 +738,14 @@ object SnapshotTable {
           // ∝ touched data + |files| link syscalls, not table size
           // — the file-granularity economics the real formats get
           // from their manifests.
-          Files.createDirectories(staging)
           val keep = pm.filter { case (_, tok) => !mine.contains(tok) }
-          keep.keys.foreach(f =>
-            Files.createLink(staging.resolve(f), priorDir.resolve(f)))
+          val linked = linkFrom(priorDir, staging, keep.keys.toSeq)
           val fresh = writeSlicePerValue(aligned, partitionCol, vals, staging)
           writePartmap(staging, partitionCol, keep ++ fresh)
           // schema sidecar in the table's (prior) column order —
-          // zero-job reads of the new version and of the carry pass
+          // zero-job reads of the new version and of the manifest pass
           writeSchemaSidecar(staging, aligned.schema)
-          // pruning manifests survive the fast path too: kept
-          // files' lines carry verbatim, new files are scanned
-          carrySidecars(spark, priorDir, staging, keep.keySet,
-            fresh.keySet, setCap)
+          linked
         case _ =>
           // SLOW PATH (no partmap / DV present / token-unsafe
           // type / too many values): full compose stays correct,
@@ -743,18 +759,12 @@ object SnapshotTable {
           prior.filter(!replaced).unionByName(aligned)
             .write.mode("overwrite").parquet(staging.toString)
           writeSchemaSidecar(staging, aligned.schema)
+          Set.empty
       }
     }
-    // explicit manifest requests (same contract as commit()). A
-    // carried manifest that does not cover the REQUESTED columns
-    // is recomputed over the whole staging (a pruning-column
-    // upgrade is a data-sized event, never a silent drop); every
-    // kind that needs it shares one pass.
-    def missing(f: Path => Path, cols: Seq[String]) =
-      if (sidecarCovers(f(staging), cols)) Nil else cols
-    writeManifests(spark, staging, missing(statsFile, statsCols),
-      missing(setsFile, setCols), setCap, missing(bloomFile, bloomCols))
     validateConstraints(spark, root, staging)
+    writeManifests(spark, staging, baseDir(root, base), linked,
+      statsCols, setCols, setCap, bloomCols)
   }
 
   def commitPartitions(spark: SparkSession, root: String, df: DataFrame,
@@ -766,92 +776,70 @@ object SnapshotTable {
     Files.createDirectories(logDir(root))
     requireNoReservedColumns(df)
     val (vals, tokenSafe, mine) = slicePreamble(df, partitionCol, dropValues)
-    var attempt = 0
     var composedBase = -1 // version the current staging was composed against
     var staging: Path = null
-    var manifestTmp: Path = null
-    def cleanup(): Unit = {
-      if (staging != null) deleteTree(staging)
-      if (manifestTmp != null) { Files.deleteIfExists(manifestTmp); () }
-    }
-    while (attempt < maxRetries) {
-      val base = currentVersion(root) // compose against PUBLISHED data only
-      // conflict check spans CLAIMED head: an in-flight overlapping
-      // claim already invalidates our inputs (conservative, same rule
-      // as casCommit)
-      if (readVersion >= 0) {
-        ((readVersion + 1) to headVersion(root))
-          .find(v => overlaps(mine, touched(root, v)))
-          .foreach { v =>
-            cleanup()
-            throw new SnapshotConflict(
-              s"commit based on v$readVersion conflicts with v$v " +
-                s"(overlapping partitions); re-read and re-derive")
-          }
-      }
-      if (base != composedBase) {
-        cleanup()
-        staging = Paths.get(root, "_staging", java.util.UUID.randomUUID().toString)
-        try {
-        composeSliceStaging(spark, root, df, partitionCol, vals, dropValues,
-          tokenSafe, mine, base, staging, statsCols, setCols, setCap,
-          bloomCols)
-        manifestTmp = Paths.get(root, "_staging",
-          staging.getFileName.toString + ".manifest")
-        Files.writeString(manifestTmp, mine.toSeq.sorted.mkString("\n"))
-        composedBase = base
-        } catch {
-          // any staging-build failure (a per-value write, a sidecar
-          // scan, a constraint violation) must not leak the data-sized
-          // _staging directory
-          case e: Throwable => cleanup(); throw e
+    def cleanup(): Unit = if (staging != null) discard(staging)
+    var committed = -1
+    var attempt = 0
+    try {
+      while (committed < 0) {
+        if (attempt >= maxRetries)
+          throw new SnapshotConflict(
+            s"lost the commit race $maxRetries times at $root; giving up")
+        val base = currentVersion(root) // compose against PUBLISHED data only
+        // conflict check spans CLAIMED head: an in-flight overlapping
+        // claim already invalidates our inputs (conservative, same rule
+        // as casCommit)
+        checkStale(root, readVersion, headVersion(root), mine, "commit")
+        if (base != composedBase) {
+          cleanup()
+          staging = stage(root, mine)(composeSliceStaging(spark, root, df,
+            partitionCol, vals, dropValues, tokenSafe, mine, base, _,
+            statsCols, setCols, setCap, bloomCols))
+          composedBase = base
+        }
+        // contiguous claim: exactly composedBase + 1
+        if (backend.claim(root, composedBase + 1, claimFile(staging)))
+          committed = publishClaimed(root, staging, composedBase + 1)
+        else {
+          attempt += 1
+          // head unmoved means an in-flight claim owns next: wait, don't
+          // restage; a moved head recomposes on the next loop pass
+          if (currentVersion(root) == composedBase) Thread.sleep(50L * attempt)
         }
       }
-      // contiguous claim: exactly composedBase + 1
-      val next = composedBase + 1
-      if (backend.claim(root, next, manifestTmp)) {
-        val committed =
-          publishClaimed(root, staging, manifestTmp, next, () => cleanup())
-        // enrolled routing stats: fold the slice's counts in and the
-        // replaced partitions' old counts out — the prior version's
-        // partmap names the replaced files exactly, so the old-slice
-        // read is ∝ touched data (never a table scan) on the fast
-        // path; the DV/token-unsafe fallback filters the prior
-        // version the same way the slow compose does. Advisory: runs
-        // after publish, failures only stale the scalar.
-        if (TableStats.hasEnrollments(root)) {
-          val priorDir = Paths.get(root, s"v=$composedBase")
-          val oldSlice =
-            if (composedBase == 0) None
-            else readPartmap(priorDir, partitionCol)
-              .filter(_ => tokenSafe && !Files.exists(dvDir(priorDir))) match {
-              case Some(pm) =>
-                val replacedFiles = pm.collect {
-                  case (f, tok) if mine.contains(tok) =>
-                    priorDir.resolve(f).toString
-                }.toSeq
-                if (replacedFiles.isEmpty) None
-                else Some(spark.read.parquet(replacedFiles: _*))
-              case None =>
-                val replaced = org.apache.spark.sql.functions.coalesce(
-                  org.apache.spark.sql.functions.col(partitionCol)
-                    .isin(vals ++ dropValues: _*),
-                  org.apache.spark.sql.functions.lit(false))
-                Some(read(spark, root, composedBase).filter(replaced))
-            }
-          TableStats.maintainPartitionOverwrite(spark, root, committed,
-            df, oldSlice)
+    } catch { case e: SnapshotConflict => cleanup(); throw e }
+    // enrolled routing stats: fold the slice's counts in and the
+    // replaced partitions' old counts out — the prior version's
+    // partmap names the replaced files exactly, so the old-slice
+    // read is ∝ touched data (never a table scan) on the fast
+    // path; the DV/token-unsafe fallback filters the prior
+    // version the same way the slow compose does. Advisory: runs
+    // after publish, failures only stale the scalar.
+    if (TableStats.hasEnrollments(root)) {
+      val priorDir = Paths.get(root, s"v=$composedBase")
+      val oldSlice =
+        if (composedBase == 0) None
+        else readPartmap(priorDir, partitionCol)
+          .filter(_ => tokenSafe && !Files.exists(dvDir(priorDir))) match {
+          case Some(pm) =>
+            val replacedFiles = pm.collect {
+              case (f, tok) if mine.contains(tok) =>
+                priorDir.resolve(f).toString
+            }.toSeq
+            if (replacedFiles.isEmpty) None
+            else Some(sidecarReader(spark, priorDir).parquet(replacedFiles: _*))
+          case None =>
+            val replaced = org.apache.spark.sql.functions.coalesce(
+              org.apache.spark.sql.functions.col(partitionCol)
+                .isin(vals ++ dropValues: _*),
+              org.apache.spark.sql.functions.lit(false))
+            Some(read(spark, root, composedBase).filter(replaced))
         }
-        return committed
-      }
-      attempt += 1
-      // head unmoved means an in-flight claim owns next: wait, don't
-      // restage; a moved head recomposes on the next loop pass
-      if (currentVersion(root) == composedBase) Thread.sleep(50L * attempt)
+      TableStats.maintainPartitionOverwrite(spark, root, committed,
+        df, oldSlice)
     }
-    cleanup()
-    throw new SnapshotConflict(
-      s"lost the commit race $maxRetries times at $root; giving up")
+    committed
   }
 
   // ---- schema sidecar: zero-job cold reads ---------------------------
@@ -874,18 +862,24 @@ object SnapshotTable {
     Files.writeString(schemaFile(staging), nullable.json); ()
   }
 
+  /** `dir`'s declared schema, if it records one. */
+  private def sidecarSchema(
+      dir: Path): Option[org.apache.spark.sql.types.StructType] =
+    Option.when(Files.exists(schemaFile(dir)))(
+      org.apache.spark.sql.types.DataType.fromJson(Files.readString(schemaFile(dir)))
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+
   /** A reader of `dir`'s files that declares its `_schema.json`
-    * (inference, a Spark job, only when the sidecar is absent).
+    * (inference, a Spark job, only when the sidecar is absent). Every
+    * read of a version or staging directory goes through it.
     */
   private def sidecarReader(spark: SparkSession,
-      dir: Path): org.apache.spark.sql.DataFrameReader = {
-    val sf = schemaFile(dir)
-    if (Files.exists(sf))
-      spark.read.schema(org.apache.spark.sql.types.DataType
-        .fromJson(Files.readString(sf))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    else spark.read
-  }
+      dir: Path): org.apache.spark.sql.DataFrameReader =
+    sidecarSchema(dir).fold(spark.read)(spark.read.schema(_))
+
+  /** The directory of published version `base`, none before the first. */
+  private[sources] def baseDir(root: String, base: Int): Option[Path] =
+    Option.when(base > 0)(Paths.get(root, s"v=$base"))
 
   /** `version`, or the published head when `version <= 0`; either
     * way it must be committed: an orphan marker/directory from a
@@ -982,48 +976,27 @@ object SnapshotTable {
     val cur = currentVersion(root)
     require(cur > 0, s"no committed version at $root")
     val srcDir = Paths.get(root, s"v=$cur")
-    val withMeta = spark.read.parquet(srcDir.toString)
+    val withMeta = sidecarReader(spark, srcDir).parquet(srcDir.toString)
       .withColumn("__file", col("_metadata.file_name"))
       .withColumn("__idx", col("_metadata.row_index"))
-    val prev = dvRead(spark, srcDir)
     // evaluate the predicate on LIVE rows only (already-deleted rows
     // must not re-enter the vector as duplicates)
-    val live = withMeta.join(prev,
+    val live = withMeta.join(dvRead(spark, srcDir),
       col("__file") === col("__dv_file") && col("__idx") === col("__dv_idx"),
       "left_anti")
     val newDv = live.filter(expr(predicate))
       .select(col("__file").as("__dv_file"), col("__idx").as("__dv_idx"))
-    val staging = Paths.get(root, "_staging", java.util.UUID.randomUUID().toString)
-    Files.createDirectories(staging)
-    // cumulative vector first (a Spark job over src — reads nothing
-    // from staging), then the metadata-only data-file links
-    prev.unionAll(newDv).write.mode("overwrite")
-      .parquet(dvDir(staging).toString)
-    listDataFiles(srcDir).foreach(n =>
-      Files.createLink(staging.resolve(n), srcDir.resolve(n)))
-    // the stats manifest stays valid (same immutable files; deleted
-    // rows only widen the ranges, which is conservative for pruning)
-    if (Files.exists(statsFile(srcDir)))
-      Files.copy(statsFile(srcDir), statsFile(staging),
-        StandardCopyOption.COPY_ATTRIBUTES)
-    // value sets stay valid for the same reason (files unchanged;
-    // deleted values still listed = conservative keep)
-    if (Files.exists(setsFile(srcDir)))
-      Files.copy(setsFile(srcDir), setsFile(staging),
-        StandardCopyOption.COPY_ATTRIBUTES)
-    // token blooms likewise (r16: without the carry, a DV commit
-    // silently dropped the third skipping leg until the next OPTIMIZE)
-    if (Files.exists(bloomFile(srcDir)))
-      Files.copy(bloomFile(srcDir), bloomFile(staging),
-        StandardCopyOption.COPY_ATTRIBUTES)
-    // schema unchanged by a DV-only commit
-    if (Files.exists(schemaFile(srcDir)))
-      Files.copy(schemaFile(srcDir), schemaFile(staging),
-        StandardCopyOption.COPY_ATTRIBUTES)
-    val manifestTmp = Paths.get(root, "_staging",
-      staging.getFileName.toString + ".manifest")
-    Files.writeString(manifestTmp, "*")
-    val committed = casCommit(root, staging, manifestTmp, Set("*"), cur, maxRetries)
+    val staging = stage(root, Set("*")) { s =>
+      // every file is linked, and with them the prior vector; the new
+      // deletes join it as files of their own (a Spark job over src —
+      // it reads nothing from staging). The manifests stay valid: the
+      // files are unchanged, and a deleted row only leaves a range or
+      // a set wider than it must be, which pruning treats as a keep.
+      val linked = linkFrom(srcDir, s, listDataFiles(srcDir))
+      newDv.write.mode("append").parquet(dvDir(s).toString)
+      writeManifests(spark, s, Some(srcDir), linked, Nil, Nil, 1024, Nil)
+    }
+    val committed = casCommit(root, staging, Set("*"), cur, maxRetries)
     TableStats.maintainFull(spark, root, committed) // enrolled stats (advisory)
     committed
   }
@@ -1157,9 +1130,9 @@ object SnapshotTable {
   /** Roll the table back to `toVersion` as a NEW commit (history is
     * never rewritten — the bad versions stay time-travelable until
     * vacuum). Metadata-only: the new version hard-links the target
-    * version's data files and copies its sidecars (`_dv`, stats,
-    * sets), so restoring a 100 TB table costs |files| link
-    * operations, not a rewrite. Conflict-checked as a full-table
+    * version's data files and its `_dv`, and takes its `_partmap` and
+    * its manifests' lines, so restoring a 100 TB table costs |files|
+    * link operations, not a rewrite. Conflict-checked as a full-table
     * write against the current head.
     */
   def restore(spark: SparkSession, root: String, toVersion: Int,
@@ -1170,36 +1143,19 @@ object SnapshotTable {
     val srcDir = Paths.get(root, s"v=$toVersion")
     require(Files.exists(srcDir),
       s"version $toVersion does not exist (vacuumed)")
-    val staging = Paths.get(root, "_staging", java.util.UUID.randomUUID().toString)
-    Files.createDirectories(staging)
-    val entries = {
-      val s = Files.list(srcDir)
-      try s.iterator().asScala.toVector finally s.close()
+    val staging = stage(root, Set("*")) { s =>
+      val linked = linkFrom(srcDir, s, listDataFiles(srcDir))
+      // same files, so the file→token map still holds
+      if (Files.exists(partmapFile(srcDir)))
+        Files.copy(partmapFile(srcDir), partmapFile(s))
+      // CHECK constraints bind RESTORE too: constraints added after
+      // `toVersion` was written must not be bypassable by restoring to
+      // it — no violating version may ever become the readable head.
+      // One read-only scan of the (hard-linked, DV-applied) staged rows.
+      validateConstraints(spark, root, s)
+      writeManifests(spark, s, Some(srcDir), linked, Nil, Nil, 1024, Nil)
     }
-    entries.foreach { p =>
-      val n = p.getFileName.toString
-      if (Files.isRegularFile(p) && !n.startsWith("."))
-        Files.createLink(staging.resolve(n), p)
-      else if (Files.isDirectory(p) && n == "_dv") {
-        // link the vector files too — the restored state includes its deletes
-        Files.createDirectories(staging.resolve(n))
-        val s2 = Files.list(p)
-        try s2.iterator().asScala.filter(Files.isRegularFile(_))
-          .foreach(f => Files.createLink(
-            staging.resolve(n).resolve(f.getFileName), f))
-        finally s2.close()
-      }
-    }
-    // CHECK constraints bind RESTORE too: constraints added after
-    // `toVersion` was written must not be bypassable by restoring to
-    // it — no violating version may ever become the readable head.
-    // One read-only scan of the (hard-linked, DV-applied) staged rows.
-    try validateConstraints(spark, root, staging)
-    catch { case e: Throwable => deleteTree(staging); throw e }
-    val manifestTmp = Paths.get(root, "_staging",
-      staging.getFileName.toString + ".manifest")
-    Files.writeString(manifestTmp, "*")
-    val committed = casCommit(root, staging, manifestTmp, Set("*"), cur, maxRetries)
+    val committed = casCommit(root, staging, Set("*"), cur, maxRetries)
     TableStats.maintainFull(spark, root, committed) // enrolled stats (advisory)
     committed
   }
@@ -1315,7 +1271,7 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.{coalesce => fnCoalesce, expr, lit, not}
     val cs = constraints(root)
     if (cs.isEmpty) return
-    val df = applyDv(spark, staged, spark.read.parquet(staged.toString))
+    val df = applyDv(spark, staged, sidecarReader(spark, staged).parquet(staged.toString))
     cs.foreach { case (name, sql) =>
       val bad = df.filter(not(fnCoalesce(expr(sql), lit(false)))).count()
       if (bad > 0)
@@ -1449,7 +1405,12 @@ object SnapshotTable {
   // column ([[BloomSidecar.BloomAgg]]). |files| rows reach the driver
   // — the same small-by-construction collect contract as ParquetDml's
   // partition listing. The read declares the staged `_schema.json`,
-  // so schema inference runs no job either.
+  // so schema inference runs no job either. Which files and columns
+  // the pass covers is the one manifest rule's call
+  // ([[writeManifests]]): every file a version writes, and no file it
+  // links with its lines — so a merge, an OPTIMIZE, an append or a
+  // slice commit keeps the table's manifests, and a delete or a
+  // restore runs a pass only for a linked file that has no line.
 
   /** The manifest kinds, in the order [[manifestPass]] returns them. */
   private val manifestFiles: Seq[Path => Path] = Seq(statsFile, setsFile, bloomFile)
@@ -1463,9 +1424,8 @@ object SnapshotTable {
 
   /** Stats, value-set and bloom manifest lines (in [[manifestFiles]]
     * order) for the data files of `dir` — all of them, or just
-    * `only` (the fast path computes lines for its NEW files and
-    * carries the linked files' lines). A kind with no columns gets no
-    * lines; nothing requested runs no job.
+    * `only` (the files [[writeManifests]] has no lines for). A kind
+    * with no columns gets no lines; nothing requested runs no job.
     */
   private def manifestPass(spark: SparkSession, dir: Path,
       only: Option[Set[String]], statsCols: Seq[String],
@@ -1515,13 +1475,45 @@ object SnapshotTable {
     Files.writeString(file, lines.map(_ + "\n").mkString); ()
   }
 
-  /** Write the requested manifests over every data file of `dir`. */
-  private def writeManifests(spark: SparkSession, dir: Path,
-      statsCols: Seq[String], setCols: Seq[String], setCap: Int,
-      bloomCols: Seq[String]): Unit =
-    manifestFiles.lazyZip(Seq(statsCols, setCols, bloomCols))
-      .lazyZip(manifestPass(spark, dir, None, statsCols, setCols, setCap, bloomCols))
-      .foreach { (file, cols, lines) => if (cols.nonEmpty) writeLines(file(dir), lines) }
+  /** The one manifest rule, shared by every staging path. Per kind, a
+    * staged version's manifest columns are those of `base` (the
+    * version it was staged against) that its schema still has, plus
+    * the requested ones. A file linked from `base` keeps its lines
+    * verbatim: a manifest describes immutable bytes. Files this
+    * version wrote, and linked files with no line for a column, get
+    * theirs from one [[manifestPass]] over just those files, with the
+    * caller's `setCap` (caps are not recorded; another cap only shifts
+    * which files read OVERFLOW). Inheriting from `base` stays correct
+    * when the claim later rebases: a manifest is a pruning hint, and a
+    * missing line only keeps its file.
+    */
+  private[sources] def writeManifests(spark: SparkSession, staging: Path,
+      base: Option[Path], linked: Set[String], statsCols: Seq[String],
+      setCols: Seq[String], setCap: Int, bloomCols: Seq[String]): Unit = {
+    def key(line: String) = { val f = line.split("\t", 3); (f(0), f(1)) }
+    val inSchema: String => Boolean =
+      sidecarSchema(staging).fold((_: String) => true)(_.fieldNames.toSet)
+    val prior = manifestFiles.map(f => base.map(f).filter(Files.exists(_)).toSeq
+      .flatMap(p => Files.readString(p).linesIterator.filter(_.nonEmpty)))
+    val cols = prior.lazyZip(Seq(statsCols, setCols, bloomCols)).map((ls, requested) =>
+      (ls.map(key(_)._2).filter(inSchema) ++ requested).distinct)
+    val carried = prior.lazyZip(cols).map((ls, cs) => ls.filter { l =>
+      val (f, c) = key(l); linked(f) && cs.contains(c)
+    })
+    val files = listDataFiles(staging)
+    val need = carried.lazyZip(cols).map { (ls, cs) =>
+      val have = ls.map(key).toSet
+      (for (f <- files; c <- cs if !have((f, c))) yield (f, c)).toSet
+    }
+    val scan = need.flatten.map(_._1).toSet
+    val fresh = manifestPass(spark, staging,
+      Option.when(scan.size < files.size)(scan),
+      need(0).toSeq.map(_._2).distinct, need(1).toSeq.map(_._2).distinct,
+      setCap, need(2).toSeq.map(_._2).distinct)
+    for (i <- manifestFiles.indices if cols(i).nonEmpty)
+      writeLines(manifestFiles(i)(staging),
+        carried(i) ++ fresh(i).filter(l => need(i)(key(l))))
+  }
 
   /** Driver-side bloom slice for one column of one version directory:
     * file → (m, k, bits). Absent manifest or malformed lines read as
@@ -1610,8 +1602,8 @@ object SnapshotTable {
       val residual = preds
         .map { case (column, value) => c(column).cast("string") === value }
         .reduce(_ && _)
-      applyDv(spark, Paths.get(root, s"v=$v"),
-        spark.read.parquet(files.toSeq.sorted: _*))
+      val dir = Paths.get(root, s"v=$v")
+      applyDv(spark, dir, sidecarReader(spark, dir).parquet(files.toSeq.sorted: _*))
         .filter(residual)
     }
   }
@@ -1664,8 +1656,8 @@ object SnapshotTable {
     } else {
       // deletion vectors apply to the surviving files too (the DV
       // join keys on file_name, so a file subset is fine)
-      applyDv(spark, Paths.get(root, s"v=$v"),
-        spark.read.parquet(files: _*)).filter(typed)
+      val dir = Paths.get(root, s"v=$v")
+      applyDv(spark, dir, sidecarReader(spark, dir).parquet(files: _*)).filter(typed)
     }
   }
 
@@ -1930,26 +1922,25 @@ object SnapshotTable {
   }
 }
 
-/** One table's contribution to a cross-table transaction.
+/** One table's write inside a [[SnapshotTransaction.commitAll]].
   *
   * @param partitions  partition values this write rewrites; empty =
   *                    whole table (same contract as SnapshotTable.commit)
   * @param readVersion snapshot version the DataFrame was derived from;
   *                    -1 = blind write (never conflicts, only rebases)
-  */
-/** One table's write inside a [[SnapshotTransaction.commitAll]].
   *
   * `appendFiles = true` (r15) stages the new version as HARD LINKS of
   * the current version's data files (plus its `_dv`/`_schema.json`
   * sidecars) with only `df`'s rows written as new files — an APPEND
   * whose staging cost is ∝ batch + |files| link metadata ops, never
   * the table (the property that makes a per-micro-batch transactional
-  * sink viable at 100 TB). The linked base version becomes the
-  * write's readVersion (unless one was given), and the write declares
-  * the full table, so ANY commit landing after the link invalidates
-  * the composition and the transaction aborts with a conflict rather
-  * than publishing stale bytes. With `appendFiles = false` (default)
-  * `df` is the complete next content, as in single-table [[SnapshotTable.commit]].
+  * sink viable at 100 TB). The linked files keep their manifest lines,
+  * and only the batch's files are scanned for theirs. The linked base
+  * version becomes the write's readVersion (unless one was given), so
+  * ANY commit landing after the link invalidates the composition and
+  * the transaction aborts with a conflict rather than publishing stale
+  * bytes. With `appendFiles = false` (default) `df` is the complete
+  * next content, as in single-table [[SnapshotTable.commit]].
   *
   * `sliceCol = Some(col)` (r16) stages a PARTITION-SLICED
   * read-modify-write — the transactional twin of
@@ -1957,13 +1948,16 @@ object SnapshotTable {
   * partitions' complete new rows; untouched partitions carry forward
   * from the published head (hard links on the partmap fast path), and
   * the conflict manifest claims only the touched partition tokens.
-  * `setCols`/`setCap`/`bloomCols` request pruning sidecars
-  * exactly as in commitPartitions. Because composition reads ONLY
-  * published data, the claimed slot must be contiguous with the
-  * composed base; a concurrent claim in between aborts the whole
-  * transaction with [[SnapshotTable.SnapshotConflict]] (re-read and
-  * re-derive) rather than silently dropping the in-flight writer's
-  * rows. Mutually exclusive with `appendFiles`.
+  * Because composition reads ONLY published data, the claimed slot
+  * must be contiguous with the composed base; a concurrent claim in
+  * between aborts the whole transaction with
+  * [[SnapshotTable.SnapshotConflict]] (re-read and re-derive) rather
+  * than silently dropping the in-flight writer's rows. Mutually
+  * exclusive with `appendFiles`.
+  *
+  * Every kind keeps the table's pruning manifests by the rule of
+  * [[SnapshotTable.commit]]; `setCols`/`setCap`/`bloomCols` request
+  * more, exactly as in commitPartitions.
   */
 final case class TableWrite(root: String, df: DataFrame,
     partitions: Seq[String] = Nil, readVersion: Int = -1,
@@ -2039,66 +2033,23 @@ object SnapshotTransaction {
       "a transaction may write each table at most once")
     Files.createDirectories(Paths.get(txnDir))
     // ---- 1. stage (expensive, no locks, writer-unique names) -------
-    val staged = writes.sortBy(_.root).map { w0 =>
+    val staged = scala.collection.mutable.ArrayBuffer
+      .empty[(TableWrite, Path, Set[String], Int)]
+    def dropStagings(): Unit = staged.foreach { case (_, s, _, _) => discard(s) }
+    try writes.sortBy(_.root).foreach { w0 =>
       require(!(w0.appendFiles && w0.sliceCol.isDefined),
         s"${w0.root}: appendFiles and sliceCol are mutually exclusive")
-      Files.createDirectories(Paths.get(w0.root, "_staging"))
+      requireNoReservedColumns(w0.df)
       Files.createDirectories(Paths.get(w0.root, "_log"))
-      val staging = Paths.get(w0.root, "_staging",
-        java.util.UUID.randomUUID().toString)
-      if (w0.sliceCol.isDefined) {
-        // partition-sliced staging (r16): compose (published head minus
-        // touched partitions) ∪ df exactly like commitPartitions —
-        // partmap fast path, carried pruning sidecars, token manifest.
-        // stagedBase records the composed-against version; the claim
-        // phase enforces slot contiguity with it.
-        val pcol = w0.sliceCol.get
-        requireNoReservedColumns(w0.df)
-        val (vals, tokenSafe, mine) = slicePreamble(w0.df, pcol, Nil)
-        val base = currentVersion(w0.root)
-        try composeSliceStaging(spark, w0.root, w0.df, pcol, vals, Nil,
-          tokenSafe, mine, base, staging, Nil,
-          w0.setCols, w0.setCap, w0.bloomCols)
-        catch { case e: Throwable => deleteTree(staging); throw e }
-        val w = if (w0.readVersion < 0) w0.copy(readVersion = base) else w0
-        val manifestTmp = Paths.get(w.root, "_staging",
-          staging.getFileName.toString + ".manifest")
-        Files.writeString(manifestTmp, mine.toSeq.sorted.mkString("\n"))
-        (w, staging, manifestTmp, mine, base)
-      } else {
+      val base = currentVersion(w0.root)
+      // a sliced or appending write composes against the published
+      // head, so that is its read version (unless one was given): any
+      // commit landing after it invalidates the composition
       val w =
-        if (!w0.appendFiles) {
-          w0.df.write.mode("overwrite").parquet(staging.toString)
-          writeSchemaSidecar(staging, w0.df.schema)
-          w0
-        } else {
-          // append staging: link the current version's files (and its
-          // DV — linking data files without their deletion vector
-          // would resurrect deleted rows), then write only the batch
-          val base = currentVersion(w0.root)
-          Files.createDirectories(staging)
-          if (base > 0) {
-            val curDir = Paths.get(w0.root, s"v=$base")
-            listDataFiles(curDir).foreach(n =>
-              Files.createLink(staging.resolve(n), curDir.resolve(n)))
-            if (Files.exists(dvDir(curDir))) {
-              Files.createDirectories(dvDir(staging))
-              val s = Files.list(dvDir(curDir))
-              try s.iterator().asScala.filter(Files.isRegularFile(_))
-                .foreach(f => Files.createLink(
-                  dvDir(staging).resolve(f.getFileName), f))
-              finally s.close()
-            }
-            if (Files.exists(schemaFile(curDir)))
-              Files.copy(schemaFile(curDir), schemaFile(staging))
-          }
-          w0.df.write.mode("append").parquet(staging.toString)
-          if (!Files.exists(schemaFile(staging)))
-            writeSchemaSidecar(staging, w0.df.schema)
-          // the linked base is the version this composition is valid
-          // against — any later commit must conflict the claim
-          if (w0.readVersion < 0) w0.copy(readVersion = base) else w0
-        }
+        if (w0.readVersion < 0 && (w0.appendFiles || w0.sliceCol.isDefined))
+          w0.copy(readVersion = base)
+        else w0
+      val slice = w.sliceCol.map(pcol => (pcol, slicePreamble(w.df, pcol, Nil)))
       // escapeVal: SAME framing rule as single-table commit() — the
       // overlap check compares this set against claims written by
       // commit()/commitPartitions(), which escape; an unescaped token
@@ -2108,38 +2059,48 @@ object SnapshotTransaction {
       // written before escaping existed carry raw tokens; those only
       // under-match for values containing \ \t \n \r \x01, which no
       // pre-existing table of ours has — new tables are born escaped.)
-      val mine: Set[String] =
-        if (w.partitions.isEmpty) Set("*")
-        else w.partitions.map(escapeVal).toSet
-      val manifestTmp = Paths.get(w.root, "_staging",
-        staging.getFileName.toString + ".manifest")
-      Files.writeString(manifestTmp, mine.toSeq.sorted.mkString("\n"))
-      (w, staging, manifestTmp, mine, -1)
+      val mine: Set[String] = slice match {
+        case Some((_, (_, _, sliceMine))) => sliceMine
+        case None =>
+          if (w.partitions.isEmpty) Set("*") else w.partitions.map(escapeVal).toSet
       }
-    }
-    def dropStagings(): Unit = staged.foreach { case (_, s, m, _, _) =>
-      deleteTree(s); Files.deleteIfExists(m); ()
-    }
+      val staging = stage(w.root, mine) { s =>
+        slice match {
+          case Some((pcol, (vals, tokenSafe, _))) =>
+            // partition-sliced staging (r16): compose (published head
+            // minus touched partitions) ∪ df exactly like
+            // commitPartitions. The claim phase enforces slot
+            // contiguity with the composed-against version.
+            composeSliceStaging(spark, w.root, w.df, pcol, vals, Nil,
+              tokenSafe, mine, base, s, Nil, w.setCols, w.setCap, w.bloomCols)
+          case None =>
+            // an append links the head's files (and its DV) and writes
+            // only the batch; a full write is the complete content
+            val linked =
+              if (!w.appendFiles) Set.empty[String]
+              else baseDir(w.root, base)
+                .fold(Set.empty[String])(d => linkFrom(d, s, listDataFiles(d)))
+            w.df.write.mode("append").parquet(s.toString)
+            if (!Files.exists(schemaFile(s))) writeSchemaSidecar(s, w.df.schema)
+            writeManifests(spark, s, baseDir(w.root, base), linked,
+              Nil, w.setCols, w.setCap, w.bloomCols)
+        }
+      }
+      staged += ((w, staging, mine, if (slice.isDefined) base else -1))
+    } catch { case e: Throwable => dropStagings(); throw e }
     // ---- 2. claim a slot per table (CAS + conflict check) ----------
     val claimed = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
     def rollbackClaims(): Unit = claimed.foreach { case (root, v) =>
       backend.abortClaim(root, v)
     }
     val versions: Seq[(TableWrite, Path, Int)] =
-      try staged.map { case (w, staging, manifestTmp, mine, stagedBase) =>
+      try staged.toSeq.map { case (w, staging, mine, stagedBase) =>
         var attempt = 0
         var slot = -1
         while (slot < 0) {
           val base = headVersion(w.root)
-          if (w.readVersion >= 0) {
-            ((w.readVersion + 1) to base)
-              .find(v => overlaps(mine, touched(w.root, v)))
-              .foreach { v =>
-                throw new SnapshotConflict(
-                  s"transaction write to ${w.root} based on " +
-                    s"v${w.readVersion} conflicts with v$v")
-              }
-          }
+          checkStale(w.root, w.readVersion, base, mine,
+            s"transaction write to ${w.root}")
           val next = base + 1
           // sliced staging composed untouched partitions from the
           // PUBLISHED head it read; a claim landing anywhere but the
@@ -2154,7 +2115,7 @@ object SnapshotTransaction {
               s"sliced transaction write to ${w.root} composed against " +
                 s"v$stagedBase but the next slot is v$next (concurrent " +
                 "writer in flight); re-read and re-derive")
-          if (backend.claim(w.root, next, manifestTmp)) {
+          if (backend.claim(w.root, next, claimFile(staging))) {
             claimed += ((w.root, next))
             slot = next
           } else {
@@ -2192,8 +2153,7 @@ object SnapshotTransaction {
       backend.publish(w.root, staging, v)
       failpoint("mid-publish")
       backend.advancePointer(w.root, v)
-      Files.deleteIfExists(Paths.get(w.root, "_staging",
-        staging.getFileName.toString + ".manifest"))
+      Files.deleteIfExists(claimFile(staging))
     }
     Files.deleteIfExists(decidedRec)
     // enrolled routing stats (advisory, after publish — same contract
@@ -2236,9 +2196,7 @@ object SnapshotTransaction {
         // undecided: no data dir was ever renamed in — delete stagings
         // and dead claims, nothing was visible
         entries.foreach { case (root, v, staging) =>
-          deleteTree(staging)
-          Files.deleteIfExists(Paths.get(root, "_staging",
-            staging.getFileName.toString + ".manifest"))
+          discard(staging)
           Files.deleteIfExists(markerFile(root, v))
           ()
         }
@@ -2250,8 +2208,7 @@ object SnapshotTransaction {
           if (!Files.exists(live) && Files.exists(staging))
             Files.move(staging, live, StandardCopyOption.ATOMIC_MOVE)
           if (Files.exists(live)) advancePointer(root, v)
-          Files.deleteIfExists(Paths.get(root, "_staging",
-            staging.getFileName.toString + ".manifest"))
+          Files.deleteIfExists(claimFile(staging))
           ()
         }
         fwd += 1

@@ -154,8 +154,7 @@ object TextIndex {
         .agg(sum(col("tf")).cast("long").as("tf"),
           sort_array(flatten(collect_list(col("positions")))).as("positions"))
       Some(TableWrite(root, merged, readVersion = readV,
-        sliceCol = Some("bucket"),
-        setCols = Seq("bucket"), setCap = 8, bloomCols = Seq("token")))
+        sliceCol = Some("bucket"), setCap = 8))
     }
     // doc-length side table: same slice-merge shape keyed by doc-hash
     // bucket (a revision's length ADDS — concat semantics, like tf)
@@ -446,11 +445,12 @@ object TextIndex {
   // redelivery to skip. Read paths pre-aggregate per (token, doc), so
   // multi-row postings are invisible to search/phrase/BM25 semantics.
   //
-  // Appended versions are hard-link compositions WITHOUT the pruning
-  // sidecars or the partmap, so probe pruning degrades (never wrong —
-  // absent sidecars read as "keep") until [[optimize]] folds the
-  // per-batch rows back into one row per (token, doc) and recommits
-  // with fresh set/bloom sidecars — the LSM compaction trade, same as
+  // Appended versions are hard-link compositions that keep the pruning
+  // sidecars — linked files carry their set/bloom lines, the batch's
+  // files get fresh ones, and the first batch of an [[init]] index
+  // creates them — but not the partmap. The per-batch rows still
+  // multiply posting rows and files until [[optimize]] folds them back
+  // into one row per (token, doc) — the LSM compaction trade, same as
   // the near-dup band table's in-stream OPTIMIZE.
   //
   // Single-writer contract per root: a root is maintained EITHER by
@@ -495,7 +495,8 @@ object TextIndex {
     val marker = spark.range(1).select(lit(batchId).as("batch_id"))
     Files.writeString(multirowFlag(root), "1") // before the txn: see note
     SnapshotTransaction.commitAll(spark, txnDir, Seq(
-      TableWrite(root, postings, appendFiles = true),
+      TableWrite(root, postings, appendFiles = true,
+        setCols = Seq("bucket"), setCap = 8, bloomCols = Seq("token")),
       TableWrite(docStatsRoot(root), stats, appendFiles = true),
       TableWrite(ingestLogRoot(root), marker, appendFiles = true)))
     true
@@ -536,10 +537,12 @@ object TextIndex {
 
   /** Fold streaming-appended per-batch posting rows back into one row
     * per (token, doc) — tf summed, position segments concatenated —
-    * and recommit WITH the set/bloom pruning sidecars (one full
-    * rewrite, the OPTIMIZE cost); same fold for the doc-length table.
-    * Search results are identical before and after (the read paths
-    * pre-aggregate); only probe pruning and row counts improve.
+    * and recommit (one full rewrite, the OPTIMIZE cost); same fold for
+    * the doc-length table. The recommit keeps the index's set/bloom
+    * pruning sidecars, as every append before it did; `setCap = 8` is
+    * restated because caps are not recorded in the table. Search
+    * results are identical before and after (the read paths
+    * pre-aggregate); only row and file counts improve.
     */
   def optimize(spark: SparkSession, root: String): Int = {
     val buckets = bucketCount(root)
@@ -548,8 +551,7 @@ object TextIndex {
       .agg(sum(col("tf")).cast("long").as("tf"),
         sort_array(flatten(collect_list(col("positions")))).as("positions"))
       .repartition(buckets, col("bucket"))
-    val v = SnapshotTable.commit(spark, root, merged,
-      setCols = Seq("bucket"), setCap = 8, bloomCols = Seq("token"))
+    val v = SnapshotTable.commit(spark, root, merged, setCap = 8)
     val stats = SnapshotTable.read(spark, docStatsRoot(root))
       .groupBy(col("dbucket"), col("doc_id"))
       .agg(sum(col("dl")).cast("long").as("dl"))

@@ -153,7 +153,7 @@ object VectorIndex {
           col(idCol) === col("__new_id"), "left_anti")
         .unionByName(pinned.select(existing.columns.map(col): _*))
       val committed = SnapshotTable.commitPartitions(spark, root, merged, lc,
-        readVersion = readV, setCols = Seq(lc))
+        readVersion = readV)
       // centroid stats fold: + new rows, − replaced rows (∝ batch)
       val minus = cstatsOf(replaced, lc, ec)
         .select(col(lc), (-col("n")).as("n"),

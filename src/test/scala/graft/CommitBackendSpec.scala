@@ -58,7 +58,7 @@ class CommitBackendSpec extends AnyFunSuite {
   private val fixtures: Seq[Fixture] = Seq(FsFixture, ObjFixture)
 
   private def freshRoot(tag: String): String = {
-    val r = Files.createTempDirectory(s"graft-backend-$tag")
+    val r = Paths.get(Artifacts.exitRoot(s"graft-backend-$tag"))
     Files.createDirectories(r.resolve("_log"))
     r.toString
   }

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fixed-size per-(file, column) bloom with NO false negatives.
   * Pruning must stay an optimization: every probe's result is
   * identical to the unpruned filter, for present and absent keys,
-  * across commit paths (flat commit, partition-sliced fast path).
+  * across every write path: each keeps the table's manifests.
   */
 class SnapshotBloomSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -151,6 +151,74 @@ class SnapshotBloomSpec extends AnyFunSuite {
     // pruning effectiveness survives the carry: a single id keeps few files
     val keptNew = SnapshotTable.pruneFilesEq(spark, root, "id", "1050")
     assert(keptNew.size <= 2, s"carried table stopped pruning: ${keptNew.size}")
+  }
+
+  test("every write path keeps the table's stats, sets and blooms") {
+    import graft.sources.{SnapshotTransaction, TableWrite}
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    def rows(ids: Long*) = ids.map(i => (i % 4, i, s"new-$i")).toDF("p", "id", "s")
+    val txn = freshRoot("paths-txn")
+    // (name, write on a v1 committed with manifests, a key it touched)
+    val paths: Seq[(String, String => Unit, Long)] = Seq(
+      ("mergeByKey", r => SnapshotTable.mergeByKey(spark, r, rows(5, 1001), Seq("id")), 5L),
+      ("compactFiles", r => SnapshotTable.compactFiles(spark, r, targetFileBytes = 1), 7L),
+      ("deleteWhere", r => SnapshotTable.deleteWhere(spark, r, "id = 9"), 9L),
+      ("restore", { r =>
+        SnapshotTable.deleteWhere(spark, r, "id = 9")
+        SnapshotTable.restore(spark, r, 1)
+      }, 9L),
+      ("commitPartitions fast path", r => SnapshotTable.commitPartitions(spark, r,
+        rows(2002, 2006), "p", readVersion = 1), 2002L),
+      // a slice on another column than the partmap's takes the slow path
+      ("commitPartitions slow path", r => SnapshotTable.commitPartitions(spark, r,
+        rows(13), "id", readVersion = 1), 13L),
+      ("commitAll appendFiles", r => SnapshotTransaction.commitAll(spark, txn,
+        Seq(TableWrite(r, rows(3000), appendFiles = true))), 3000L),
+      ("sliced TableWrite", r => SnapshotTransaction.commitAll(spark, txn,
+        Seq(TableWrite(r, rows(3003, 3007), sliceCol = Some("p")))), 3003L))
+    val want = Map("_stats.json" -> "id", "_sets.json" -> "p", "_bloom.json" -> "id")
+    for ((name, write, key) <- paths) {
+      val root = freshRoot("paths")
+      SnapshotTable.commitPartitions(spark, root, rows(1L to 400L: _*), "p",
+        statsCols = Seq("id"), setCols = Seq("p"), bloomCols = Seq("id"))
+      write(root)
+      val dir = Paths.get(root, s"v=${SnapshotTable.currentVersion(root)}")
+      val files = {
+        val s = Files.list(dir)
+        try s.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSet
+        finally s.close()
+      }
+      for ((manifest, column) <- want) {
+        val named = if (!Files.exists(dir.resolve(manifest))) Set.empty
+          else Files.readString(dir.resolve(manifest)).linesIterator
+            .filter(_.nonEmpty).map(_.split("\t", 3).take(2).toSeq).toSet
+        assert(named === files.map(f => Seq(f, column)),
+          s"$name: $manifest does not name every data file for $column")
+      }
+      val point = SnapshotTable.readPoint(spark, root, "id", key.toString)
+      val full = SnapshotTable.read(spark, root).filter(col("id") === key)
+      assert(point.collect().map(_.toString).sorted.toSeq ===
+        full.collect().map(_.toString).sorted.toSeq, s"$name: readPoint($key) diverged")
+      val kept = SnapshotTable.pruneFilesEq(spark, root, "id", key.toString)
+      assert(kept.size < files.size,
+        s"$name: a point probe kept ${kept.size} of ${files.size} files")
+    }
+  }
+
+  test("building a readPoint or readPruned frame starts no Spark job") {
+    import spark.implicits._
+    val root = freshRoot("zerojob")
+    SnapshotTable.commit(spark, root,
+      (1L to 400L).map(i => (i, s"v-$i")).toDF("id", "s").repartition(4, col("id")),
+      statsCols = Seq("id"), bloomCols = Seq("id"))
+    val n = jobsDuring {
+      SnapshotTable.readPoint(spark, root, "id", "7")
+      SnapshotTable.readPruned(spark, root, "id", "7", "9")
+    }
+    assert(n === 0, s"building the frames started $n jobs")
   }
 
   test("deleting the bloom sidecar only widens reads, never changes results") {

@@ -11,7 +11,7 @@ class SnapshotLogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshRoot(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-log-$tag").toString
+    Artifacts.exitRoot(s"graft-log-$tag")
 
   import scala.jdk.CollectionConverters._
 

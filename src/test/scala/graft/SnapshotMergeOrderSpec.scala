@@ -20,7 +20,7 @@ class SnapshotMergeOrderSpec extends AnyFunSuite {
 
   test("mergeByKey with a non-leading key keeps one column order; CDC stays typed") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-mo-").toString
+    val root = Artifacts.exitRoot("graft-mo-")
     def batch(rows: (Long, Long, Double, Long)*) =
       rows.toSeq.toDF("user_id", "events", "total_value", "last_event_us")
         .withColumn("session_key",

@@ -11,7 +11,7 @@ class SnapshotMergeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshRoot(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-merge-$tag").toString
+    Artifacts.exitRoot(s"graft-merge-$tag")
 
   test("mergeByKey updates matched keys, inserts new ones, carries the rest") {
     import spark.implicits._
@@ -73,9 +73,10 @@ class SnapshotMergeSpec extends AnyFunSuite {
   test("restore cannot bypass a CHECK constraint added after the target version") {
     import spark.implicits._
     val root = freshRoot("restore-check")
+    val seedDir = freshRoot("restore-check-seed")
     Seq((1L, -5.0), (2L, 3.0)).toDF("id", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root-seed")
-    val seed = spark.read.parquet(s"$root-seed")
+      .coalesce(1).write.mode("overwrite").parquet(seedDir)
+    val seed = spark.read.parquet(seedDir)
     SnapshotTable.commit(spark, root, seed)                          // v1: has v<0
     SnapshotTable.commit(spark, root, seed.filter(col("v") >= 0))    // v2 clean
     SnapshotTable.addConstraint(root, "nonneg", "v >= 0")

@@ -14,7 +14,7 @@ class SnapshotOptimizeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshRoot(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-opt-$tag").toString
+    Artifacts.exitRoot(s"graft-opt-$tag")
 
   private def dataFileCount(root: String, v: Int): Int = {
     val dir = java.nio.file.Paths.get(root, s"v=$v")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import graft.sources.SnapshotTable
 import graft.streaming.{Event, SnapshotSink}
@@ -23,7 +22,7 @@ class SnapshotSinkSpec extends AnyFunSuite {
   test("stream of upsert batches converges to latest row per key with a version per batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("snapsink").toString
+    val root = Artifacts.exitRoot("snapsink")
 
     val input = MemoryStream[Event]
     val q = input.toDS().toDF()
@@ -71,7 +70,7 @@ class SnapshotSinkSpec extends AnyFunSuite {
 
   test("concurrent upserters serialize through conflict-retry, no lost update") {
     import spark.implicits._
-    val root = Files.createTempDirectory("snapsink-occ").toString
+    val root = Artifacts.exitRoot("snapsink-occ")
     // seed
     SnapshotSink.upsertBatch(root, "event_id", "ts")(
       Seq(Ev3(0L, t(0), 0.0)).toDF(), 0L)

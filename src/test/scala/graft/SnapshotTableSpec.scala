@@ -8,7 +8,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("commits are versioned; time travel reads exact old snapshots") {
-    val root = java.nio.file.Files.createTempDirectory("graft-snap").toString
+    val root = Artifacts.exitRoot("graft-snap")
     val base = Tables.nation(spark, TestSpark.sf0001)
 
     assert(SnapshotTable.currentVersion(root) === 0)
@@ -28,7 +28,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("old versions are immutable across later commits (byte-identical)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-snap2").toString
+    val root = Artifacts.exitRoot("graft-snap2")
     SnapshotTable.commit(spark, root, Tables.region(spark, TestSpark.sf0001))
     def bytesOfV1: Map[String, Long] = {
       val dir = java.nio.file.Paths.get(root, "v=1")
@@ -51,7 +51,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("racing writers: every commit wins a distinct version, losers retry cleanly") {
-    val root = java.nio.file.Files.createTempDirectory("graft-snap-race").toString
+    val root = Artifacts.exitRoot("graft-snap-race")
     val r = Tables.region(spark, TestSpark.sf0001)
     SnapshotTable.commit(spark, root, r) // v1 base
     // 6 concurrent blind writers race the CAS; each must land on its
@@ -78,7 +78,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("read-modify-write conflicts on overlapping partitions; disjoint rebases") {
-    val root = java.nio.file.Files.createTempDirectory("graft-snap-occ").toString
+    val root = Artifacts.exitRoot("graft-snap-occ")
     val r = Tables.region(spark, TestSpark.sf0001)
     SnapshotTable.commit(spark, root, r, partitions = Seq("p=1", "p=2")) // v1
     val readV = SnapshotTable.currentVersion(root)
@@ -104,7 +104,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("vacuum drops old versions but never the retained window") {
-    val root = java.nio.file.Files.createTempDirectory("graft-snap3").toString
+    val root = Artifacts.exitRoot("graft-snap3")
     val r = Tables.region(spark, TestSpark.sf0001)
     (1 to 4).foreach(i => SnapshotTable.commit(spark, root, r.limit(i)))
     val dropped = SnapshotTable.vacuum(root, keepLast = 2)

@@ -13,7 +13,7 @@ class SnapshotTxnSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def fresh(prefix: String): (String, String, String) = {
-    val base = java.nio.file.Files.createTempDirectory(prefix)
+    val base = java.nio.file.Paths.get(Artifacts.exitRoot(prefix))
     (base.resolve("a").toString, base.resolve("b").toString,
       base.resolve("_txn").toString)
   }

@@ -115,7 +115,8 @@ class StreamingTextIndexSpec extends AnyFunSuite {
       .groupBy(col("token"), col("doc_id")).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1).count()
     assert(dup == 0, "optimize left multi-row postings")
-    // pruning sidecars restored: a token probe keeps a strict subset
+    // pruning sidecars kept: every append carried them, and the
+    // optimize recommit keeps them too
     val dir = java.nio.file.Paths.get(root, s"v=$vOpt")
     assert(java.nio.file.Files.exists(dir.resolve("_sets.json")))
     assert(java.nio.file.Files.exists(dir.resolve("_bloom.json")))
