@@ -4,9 +4,12 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
 /** The one seam through which the library memoizes per-(session,
-  * dataset) artifacts and owns their temp roots. Two rules hold here
-  * and nowhere else:
+  * dataset) artifacts, owns their temp roots and pins DataFrames.
+  * Three rules hold here and nowhere else:
   *
   *  - Lock rule: a [[Memo]] never runs a build under a map lock. Its
   *    map only ever stores a cheap lazy holder (an O(1) `putIfAbsent`);
@@ -25,6 +28,19 @@ import scala.jdk.CollectionConverters._
   *    of both kinds when the JVM exits, so a JVM that never clears
   *    leaves no tree behind. Registration happens where the cache or
   *    root is made, so none can be missed.
+  *  - Pin rule: every DataFrame the library materializes once for
+  *    several consumers is pinned by [[pin]] or [[pinned]], and the
+  *    posture is Spark's local checkpoint: the rows go to executor
+  *    block storage and the lineage is truncated. So a lost block
+  *    cannot be recomputed; the query reading it fails. An eager pin
+  *    runs its job now, which a site needs when its rows must be
+  *    fixed before a later write (a snapshot commit, an overwrite of
+  *    the path it read); a lazy pin materializes on the first
+  *    consumer's action. A [[pinned]] scope releases the blocks when
+  *    its body returns or throws, which every write path needs (a
+  *    stream pins per micro-batch); an unscoped [[pin]] is for
+  *    memoized or returned frames, whose blocks Spark's
+  *    ContextCleaner reclaims once the frame is unreachable.
   *
   * A clear is for dataset-retirement points: a query still reading a
   * deleted root, or a build running during the clear, can fail. Plans
@@ -110,6 +126,26 @@ private[graft] object Artifacts {
     set.add(root)
     root
   }
+
+  /** `df` pinned by the pin rule; eager runs the materializing job now. */
+  def pin(df: DataFrame, eager: Boolean): DataFrame = df.localCheckpoint(eager)
+
+  /** `body` over `df` pinned by the pin rule; the blocks are released
+    * when `body` returns or throws.
+    */
+  def pinned[T](df: DataFrame, eager: Boolean)(body: DataFrame => T): T = {
+    val p = pin(df, eager)
+    try body(p) finally release(p)
+  }
+
+  // `Dataset.unpersist` only uncaches `cache()`d plans: a checkpoint's
+  // blocks belong to the RDD in the pinned plan's LogicalRDD leaf.
+  // Unpersisting a lazy pin that never materialized is a no-op.
+  private def release(pinned: DataFrame): Unit =
+    pinned.queryExecution.analyzed.foreach {
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
 
   private def delete(root: String): Unit =
     sources.SnapshotTable.deleteTree(java.nio.file.Paths.get(root))

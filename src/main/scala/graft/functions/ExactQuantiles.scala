@@ -210,8 +210,8 @@ object ExactQuantiles {
       // subplans; the r17 materializeTagged warm hook is deleted).
       // Later same-session consumers read the pinned rows; rows are
       // byte-identical either way.
-      rankedValues(df, groupCols, valueCol, maxWindowDistinct,
-        knownMaxDistinct).localCheckpoint(false)
+      graft.Artifacts.pin(rankedValues(df, groupCols, valueCol, maxWindowDistinct,
+        knownMaxDistinct), eager = false)
     }
 
   private def rankedValues(df: DataFrame, groupCols: Seq[String],

@@ -60,14 +60,11 @@ object KMeansLite {
   /** Fixed-iteration fit. Initial centroids: the k lowest-id points
     * (deterministic seed). Returns (centroids, assignment).
     *
-    * Each iteration's assignment is `localCheckpoint`ed (eager): the
-    * loop otherwise stacks join+window plans on the previous
-    * iteration's DataFrame, and past ~10 iterations Catalyst planning
-    * time (and the risk of recomputing the whole chain on a stage
-    * retry) blows up. localCheckpoint materializes to executor-local
-    * storage with no lineage — on a cluster with flaky executors,
-    * substitute `checkpoint()` on a reliable checkpoint dir; the
-    * trade-off is identical plan-wise.
+    * Each iteration's assignment is pinned eagerly: the loop
+    * otherwise stacks join+window plans on the previous iteration's
+    * DataFrame, and past ~10 iterations Catalyst planning time (and
+    * the risk of recomputing the whole chain on a stage retry) blows
+    * up.
     */
   def fit(points: DataFrame, k: Int, iterations: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): (DataFrame, DataFrame) = {
@@ -75,11 +72,11 @@ object KMeansLite {
     var centroids = points.orderBy(col(idCol)).limit(k)
       .select(row_number().over(Window.orderBy(col(idCol))).cast("int").as("cluster_id"),
         transform(col(embCol), x => x.cast("double")).as("centroid"))
-    var assigned = assign(points, centroids, idCol, embCol).localCheckpoint()
+    var assigned = graft.Artifacts.pin(assign(points, centroids, idCol, embCol), eager = true)
     var i = 1
     while (i < iterations) {
       centroids = updateCentroids(assigned, embCol)
-      assigned = assign(points, centroids, idCol, embCol).localCheckpoint()
+      assigned = graft.Artifacts.pin(assign(points, centroids, idCol, embCol), eager = true)
       i += 1
     }
     (centroids, assigned)

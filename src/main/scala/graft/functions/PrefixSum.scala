@@ -31,9 +31,9 @@ import org.apache.spark.sql.functions._
   * Nothing is collected to the driver and no action runs while the
   * plan is built; everything after the range exchange fuses into the
   * caller's action. What construction still costs is the lazy
-  * checkpoint's `toRdd`: under AQE it materializes the range sampling
-  * and shuffle-map stages (`Dataset.localCheckpoint(false)` plans the
-  * subtree), the same for grouped and global orders.
+  * pin's `toRdd`: under AQE it materializes the range sampling and
+  * shuffle-map stages (a lazy pin plans the subtree), the same for
+  * grouped and global orders.
   *
   * Partials size: with no groups they are at most one row per shuffle
   * partition by construction, so the global offsets are broadcast (the
@@ -101,10 +101,9 @@ object PrefixSum {
     val spark = df.sparkSession
     val pid = "__ps_pid"
     val buckets = spark.sessionState.conf.numShufflePartitions
-    val parted = df
+    val parted = graft.Artifacts.pin(df
       .repartitionByRange(buckets, (groupCols.map(col) ++ sortCols): _*)
-      .withColumn(pid, spark_partition_id())
-      .localCheckpoint(false)
+      .withColumn(pid, spark_partition_id()), eager = false)
 
     // Pass 1: per-(pid, group) partials.
     val slice = (pid +: groupCols).map(col)
@@ -270,7 +269,7 @@ object PrefixSum {
     known match {
       case Some(safe) => route(df, safe)
       case None =>
-        val pinned = df.localCheckpoint()
+        val pinned = graft.Artifacts.pin(df, eager = true)
         val safe = windowSafe(pinned, groupCols, maxWindowDistinct)
         if (tag != null)
           routeCache.put((df.sparkSession, tag, maxWindowDistinct), safe)

@@ -118,14 +118,14 @@ object Aggregations extends QueryModule {
   private[graft] def priceQuantilePanel(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     priceQuantileCache.get((s, d))(
-      graft.functions.ExactQuantiles.cont(
+      graft.Artifacts.pin(graft.functions.ExactQuantiles.cont(
         Tables.lineitem(s, d), Seq("l_returnflag"), "l_extendedprice",
         Seq(0.05 -> "p05", 0.25 -> "q25", 0.5 -> "q50", 0.75 -> "q75",
           0.9 -> "p90", 0.95 -> "p95", 0.99 -> "q99"),
         tag = s"$d#lineitem.l_returnflag.l_extendedprice",
         knownMaxDistinct = graft.functions.ExactQuantiles
           .knownMaxDistinctForSource(d, "lineitem", Seq("l_returnflag"),
-            "l_extendedprice")).localCheckpoint(false))
+            "l_extendedprice")), eager = false))
 
   private[graft] def approxPercentileRaw(
       s: org.apache.spark.sql.SparkSession, d: String) =

@@ -683,7 +683,7 @@ object Analytics extends QueryModule {
       // the three rank columns rejoin 1:1 on custkey — |customers| ×
       // 2-long tables, broadcast at bench scale, degrading to hash
       // joins at corpus scale (the 64m size-driven posture).
-      val pinned = base.localCheckpoint(false)
+      val pinned = graft.Artifacts.pin(base, eager = false)
       def ranked(rn: String, n: Option[String],
           ord: org.apache.spark.sql.Column*) =
         PrefixSum.attach(pinned, Nil, ord, rank = Some(rn), countTotal = n)

@@ -114,7 +114,7 @@ object Dedup extends QueryModule {
   private def shingleTableWarm(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     shCache.get((s, d))(
-      shingleTable(s, d)
+      graft.Artifacts.pin(shingleTable(s, d)
         // 128-BIT hashed shingle SET alongside the strings (r18,
         // VERDICT r17 item 4): the verify intersects ~200-element
         // arrays per candidate pair, and integer equality/hashing is
@@ -128,8 +128,8 @@ object Dedup extends QueryModule {
         // expects ~10⁻¹⁵. The DuckDB oracle computes over the raw
         // strings and hash-pins the hashed path at every graded scale.
         .withColumn("shash", call_function(
-          graft.functions.expressions.HashPairs128.name, col("shingles")))
-        .localCheckpoint(false))
+          graft.functions.expressions.HashPairs128.name, col("shingles"))),
+        eager = false))
 
   /** The shingle projection over any (doc_id, text) input — factored
     * so the streaming ingest sink can shingle a micro-batch.
@@ -173,7 +173,7 @@ object Dedup extends QueryModule {
 
   private def bandSignaturesPlan(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    bandSignaturesOf(shingleTable(s, d)).localCheckpoint(false)
+    graft.Artifacts.pin(bandSignaturesOf(shingleTable(s, d)), eager = false)
 
   /** The banding transform alone, over any (doc_id, shingles) input —
     * factored out so the incremental path can band JUST a batch slice
@@ -329,7 +329,7 @@ object Dedup extends QueryModule {
 
   private def verifiedPairs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    pairsCache.get((s, d))(minhashPairs(s, d).localCheckpoint(false))
+    pairsCache.get((s, d))(graft.Artifacts.pin(minhashPairs(s, d), eager = false))
 
   /** Force the one-time shared artifacts (LSH signatures + verified
     * pairs, both eager checkpoints) so a bench harness can charge the
@@ -406,12 +406,11 @@ object Dedup extends QueryModule {
       // endpoints) needs a shuffle on doc_id anyway, so that shuffle
       // performs propagation round 1 for free. least(doc1, min(doc2))
       // because the symmetric edge list lists every endpoint as doc1.
-      var labels = edges
+      var labels = graft.Artifacts.pin(edges
         .groupBy(col("doc1"))
         .agg(min(col("doc2")).as("nbr_min"))
         .select(col("doc1").as("doc_id"),
-          least(col("doc1"), col("nbr_min")).as("label"))
-        .localCheckpoint(false)
+          least(col("doc1"), col("nbr_min")).as("label")), eager = false)
       // sum over an empty label table is NULL — a re-seeded corpus
       // with zero near-dup edges must yield an empty result, not an
       // NPE (coalesce also materializes the lazy checkpoints)
@@ -425,11 +424,11 @@ object Dedup extends QueryModule {
           .join(labels, edges("doc2") === labels("doc_id"))
           .groupBy(edges("doc1").as("doc_id"))
           .agg(min(col("label")).as("nbr_min"))
-        labels = labels.as("l")
+        labels = graft.Artifacts.pin(labels.as("l")
           .join(nbrMin.as("n"), Seq("doc_id"), "left")
           .select(col("doc_id"),
-            least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-          .localCheckpoint(false)
+            least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label")),
+          eager = false)
         val s2 = labelSum()
         converged = s2 == lastSum
         lastSum = s2
@@ -542,7 +541,7 @@ object Dedup extends QueryModule {
 
   private[graft] def simhashFpWarm(s: org.apache.spark.sql.SparkSession,
       d: String, width: Int): org.apache.spark.sql.DataFrame =
-    fpCache.get((s, d, width))(simhashFp(s, d, width).localCheckpoint(false))
+    fpCache.get((s, d, width))(graft.Artifacts.pin(simhashFp(s, d, width), eager = false))
 
   private[graft] def simhashFp(s: org.apache.spark.sql.SparkSession,
       d: String, width: Int = 16): org.apache.spark.sql.DataFrame = {
@@ -640,12 +639,6 @@ object Dedup extends QueryModule {
       // probe and match sides of the self-join read ONE
       // materialization — built once per session, in warm — instead
       // of re-deriving the token aggregation twice per invocation.
-      // NOTE (100-TB
-      // fault tolerance): localCheckpoint stores blocks on
-      // executor-local storage only — non-recoverable on executor
-      // loss. Fine for a single-JVM bench; a clustered deployment
-      // should persist(MEMORY_AND_DISK) or checkpoint to durable
-      // storage instead (ADVICE r8).
       val fpCol = s"simhash$width"
       val fp = simhashFpWarm(s, d, width)
       val probes = fp
@@ -836,13 +829,12 @@ object Dedup extends QueryModule {
         (instr(lit(simhashHex), substr(col("h"), lit(p + 1), lit(1))) - 1).as(s"d$p"))
       val sums = for { p <- 0 until w; j <- 0 until 4 } yield
         sum(shiftright(col(s"d$p"), j).bitwiseAND(lit(1)) * 2 - 1).as(s"s${p}_$j")
-      tok.select(col("doc_id") +: digits: _*)
+      graft.Artifacts.pin(tok.select(col("doc_id") +: digits: _*)
         .groupBy(col("doc_id")).agg(sums.head, sums.tail: _*)
         .select(col("doc_id") +: (0 until 4).map(j =>
           (0 until w).map(p =>
             when(col(s"s${p}_$j") > 0, lit(1L << p)).otherwise(lit(0L)))
-            .reduce(_ + _).as(s"band$j")): _*)
-        .localCheckpoint(false)
+            .reduce(_ + _).as(s"band$j")): _*), eager = false)
     }
 
   val dedupSimhashAdaptive = QueryDef(
@@ -1128,14 +1120,14 @@ object Dedup extends QueryModule {
     // never a corpus artifact, so the IncrementalProbe flat-slope
     // contract is unchanged.
     val batch = batchBandCache.get((s, d, splitId)) {
-      bandSignaturesOf(shingleTable(s, d).filter(col("doc_id") >= splitId))
-        .localCheckpoint(false)
+      graft.Artifacts.pin(
+        bandSignaturesOf(shingleTable(s, d).filter(col("doc_id") >= splitId)),
+        eager = false)
     }
     // lazy checkpoint: cand feeds the output AND both candidate-id
     // sets below — without it the band probe would re-run 3×
-    val cand = graft.sources.BandHistory
-      .candidates(s, root, batch, beforeBatchId = 1L)
-      .localCheckpoint(false)
+    val cand = graft.Artifacts.pin(graft.sources.BandHistory
+      .candidates(s, root, batch, beforeBatchId = 1L), eager = false)
     // Jaccard verify tokenizes ONLY candidate docs: the candidate-id
     // set (tiny) joins `documents` first and the shingle projection
     // runs on the joined rows — per-day verify cost is
@@ -1276,15 +1268,14 @@ object Dedup extends QueryModule {
       d: String): org.apache.spark.sql.DataFrame =
     spansCache.get((s, d)) {
       graft.functions.expressions.WordNgrams.register(s)
-      Tables.documents(s, d)
+      graft.Artifacts.pin(Tables.documents(s, d)
         .select(col("doc_id"), TF.tokens(col("text")).as("toks"))
         .select(col("doc_id"),
           posexplode(call_function(
             graft.functions.expressions.WordNgrams.name, col("toks"), lit(5))))
         .select(col("doc_id"), (col("pos") + 1).as("start"),
           xxhash64(col("col")).as("shh1"),
-          xxhash64(lit(1L), col("col")).as("shh2"))
-        .localCheckpoint(false)
+          xxhash64(lit(1L), col("col")).as("shh2")), eager = false)
     }
 
   val dedupSpans = QueryDef(

@@ -63,10 +63,9 @@ object Graphs extends QueryModule {
       // the lazy variant would defer materialization to the first
       // action, letting two concurrently-launched first queries each
       // run the fact-sized edge aggregation before the cache warms
-      und.crossJoin(stats)
+      graft.Artifacts.pin(und.crossJoin(stats)
         .filter(col("w") * col("ne") > col("tw"))
-        .select(col("a"), col("b"), col("w"))
-        .localCheckpoint()
+        .select(col("a"), col("b"), col("w")), eager = true)
     }
 
   /** Oracle CTE producing the identical `kept(a, b)` edge set. The

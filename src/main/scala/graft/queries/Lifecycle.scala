@@ -598,7 +598,10 @@ object Lifecycle extends QueryModule {
     (s, d) => {
       val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val running = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val sess = Tables.events(s, d)
+      // pinned lazily: the session table feeds both the count/mean
+      // aggregate and the percentile pipeline below — the
+      // window-heavy sessionize must not run twice
+      val sess = graft.Artifacts.pin(Tables.events(s, d)
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("prev_us", lag(col("us"), 1).over(byUser))
         .withColumn("new_sess",
@@ -607,11 +610,7 @@ object Lifecycle extends QueryModule {
         .withColumn("session_id", sum(col("new_sess")).over(running))
         .groupBy(col("user_id"), col("session_id"))
         .agg(count(lit(1)).as("n_events"),
-          (max(col("us")) - min(col("us"))).as("duration_us"))
-        // checkpoint (lazy): the session table feeds both the count/
-        // mean aggregate and the percentile pipeline below — the
-        // window-heavy sessionize must not run twice
-        .localCheckpoint(false)
+          (max(col("us")) - min(col("us"))).as("duration_us")), eager = false)
       // global duration percentiles via ExactQuantiles (r11): exact
       // integer µs durations pre-aggregate to their distinct-value
       // domain; nothing buffers per task (was the value-buffering
@@ -687,10 +686,9 @@ object Lifecycle extends QueryModule {
       // static exchange reuse does not dedupe across the union
       // branches). Same construction-pays-one-job contract as
       // Dedup.verifiedPairs / Tables.eventsByDate.
-      val edges = e0.select(col("src"), col("dst"), col("w"))
+      val edges = graft.Artifacts.pin(e0.select(col("src"), col("dst"), col("w"))
         .unionAll(e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-        .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-        .localCheckpoint()
+        .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")), eager = true)
       val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
       val ew = edges.join(outw, "src")
       val nodes = edges.select(col("src").as("v")).distinct()
@@ -876,11 +874,10 @@ object Lifecycle extends QueryModule {
         .withColumn("rn_b", row_number().over(wBkt))
         .withColumn("start_us", min(col("us")).over(wBktAll))
         .withColumn("end_us", max(col("us")).over(wBktAll))
-      val candFull = pre.filter(col("rn_b") <= 3)
+      val candFull = graft.Artifacts.pin(pre.filter(col("rn_b") <= 3)
         .select(col("user_id"), col("day"), col("bucket_sess"),
           col("us"), col("event_id"), col("event_type"), col("rn_b"),
-          col("start_us"), col("end_us"))
-        .localCheckpoint(false)
+          col("start_us"), col("end_us")), eager = false)
       val cand = candFull
         .select(col("user_id"), col("day"), col("bucket_sess"),
           col("us"), col("event_id"), col("event_type"))
@@ -966,10 +963,9 @@ object Lifecycle extends QueryModule {
         .agg((min(col("us")) - min(col("s_us"))).as("lag_us"))
       // lazy checkpoint: the joined cohort feeds both the rate
       // aggregate and the percentile pipeline (built once, not twice)
-      val cohort = perUser.join(
+      val cohort = graft.Artifacts.pin(perUser.join(
           lagged.select(col("user_id").as("u2"), col("lag_us")),
-          col("user_id") === col("u2"), "left")
-        .localCheckpoint(false)
+          col("user_id") === col("u2"), "left"), eager = false)
       // lag percentiles via ExactQuantiles (r11): exact integer µs
       // lags over the CONVERTED cohort (percentile() ignored nulls;
       // the explicit filter is the same population), pre-aggregated
@@ -1215,11 +1211,10 @@ object Lifecycle extends QueryModule {
   val crossSell = QueryDef(
     "q_cross_sell",
     (s, d) => {
-      val sets = Tables.lineitem(s, d)
+      val sets = graft.Artifacts.pin(Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"))
         .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("parts"))
-        .localCheckpoint()
+        .agg(collect_set(col("l_partkey")).as("parts")), eager = true)
       val nOrders = sets.agg(count(lit(1)).cast("long").as("n_total"))
       val pc = sets.select(explode(col("parts")).as("l_partkey"))
         .groupBy(col("l_partkey")).agg(count(lit(1)).as("n_part"))

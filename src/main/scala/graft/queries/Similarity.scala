@@ -691,13 +691,12 @@ object Similarity extends QueryModule {
       // self-joins): both sides of the self-join below read ONE
       // materialization of the |labels|-row stats result instead of
       // re-running the count + posexplode balance pass twice
-      val chosenDims = balance.join(cnt, "label")
+      val chosenDims = graft.Artifacts.pin(balance.join(cnt, "label")
         .withColumn("dr", row_number().over(wDim))
         .filter(col("dr") <= col("bits"))
         .groupBy(col("label"))
         .agg(transform(array_sort(collect_list(struct(col("dr"), col("dim")))),
-          x => x.getField("dim")).as("ds"))
-        .localCheckpoint(false)
+          x => x.getField("dim")).as("ds")), eager = false)
       val keyed = e.join(broadcast(chosenDims), Seq("label"), "left")
         .withColumn("bkey", coalesce(
           array_join(transform(col("ds"),

@@ -108,13 +108,13 @@ object BandHistory {
     */
   def append(spark: SparkSession, root: String, bands: DataFrame,
       batchId: Long, maxConflictRetries: Int = 20): Unit = {
-    val sliced = bands
+    val slicedPlan = bands
       .select(col("doc_id"), col("band"), col("sig"))
       .withColumn("batch_id", lit(batchId))
       .withColumn("bkt", bktOf(col("band"), col("sig")))
       .withColumn("slice", lit(batchId * Buckets) + col("bkt"))
-      .localCheckpoint() // three consumers: sat math, bkt set, commit
-    try {
+    // three consumers: sat math, bkt set, commit
+    graft.Artifacts.pinned(slicedPlan, eager = true) { sliced =>
       val batchCounts = sliced.groupBy(col("band"), col("sig"), col("bkt"))
         .agg(count(lit(1)).as("__bh_bn"))
       // buckets already saturated need no sizing (and must not be
@@ -126,26 +126,27 @@ object BandHistory {
         .collect().map(_.getInt(0)).toSet // ≤ Buckets values: metadata
       val histCounts = prunedBands(spark, root, bktSet, batchId)
         .groupBy(col("band"), col("sig")).agg(count(lit(1)).as("__bh_hn"))
-      val newSat = fresh
+      val satDelta = fresh
         .join(histCounts, Seq("band", "sig"), "left")
         .filter(coalesce(col("__bh_hn"), lit(0L)) + col("__bh_bn") > BucketCap)
         .select(col("band"), col("sig"))
         .withColumn("batch_id", lit(batchId))
-        // EAGER checkpoint (ADVICE r13): the sat delta must be a pure
-        // function of history < batchId, so its rows are materialized
-        // BEFORE the bands commit advances the table — a lazy
-        // checkpoint would only pin at the post-commit isEmpty action,
-        // leaving correctness resting on prunedBands having resolved
-        // an immutable version-pinned file list eagerly. The input is
-        // candidate-sized (≤ batch buckets × cap), so the extra job is
-        // metadata-cheap.
-        .localCheckpoint()
-      commitWithRetry(spark, bandsRoot(root), sliced, "slice",
-        maxConflictRetries, statsCols = Seq("slice"))
-      if (!newSat.isEmpty)
-        commitWithRetry(spark, satRoot(root), newSat, "batch_id",
-          maxConflictRetries)
-    } finally SnapshotTable.freeLocalCheckpoint(sliced)
+      // EAGER pin (ADVICE r13): the sat delta must be a pure function
+      // of history < batchId, so its rows are materialized BEFORE the
+      // bands commit advances the table — a lazy pin would only
+      // materialize at the post-commit isEmpty action, leaving
+      // correctness resting on prunedBands having resolved an
+      // immutable version-pinned file list eagerly. The input is
+      // candidate-sized (≤ batch buckets × cap), so the extra job is
+      // metadata-cheap.
+      graft.Artifacts.pinned(satDelta, eager = true) { newSat =>
+        commitWithRetry(spark, bandsRoot(root), sliced, "slice",
+          maxConflictRetries, statsCols = Seq("slice"))
+        if (!newSat.isEmpty)
+          commitWithRetry(spark, satRoot(root), newSat, "batch_id",
+            maxConflictRetries)
+      }
+    }
   }
 
   /** Bucket-capped LSH candidate pairs of `batchBands` (doc_id, band,
@@ -157,12 +158,13 @@ object BandHistory {
     */
   def candidates(spark: SparkSession, root: String, batchBands: DataFrame,
       beforeBatchId: Long): DataFrame = {
-    val b = batchBands
+    val batch = batchBands
       .select(col("doc_id"), col("band"), col("sig"))
       .withColumn("bkt", bktOf(col("band"), col("sig")))
       .join(broadcast(sat(spark, root, beforeBatchId)),
         Seq("band", "sig"), "left_anti")
-      .localCheckpoint(false) // bkt stats collect + join probe
+    // bkt stats collect + join probe
+    val b = graft.Artifacts.pin(batch, eager = false)
     // ONE action yields both probe inputs: the touched-bucket set
     // (file pruning) and the batch row count (broadcast decision) —
     // the r13 shape ran two jobs over the checkpointed batch
@@ -223,10 +225,9 @@ object BandHistory {
     val sealedRows = all.filter(col("slice") <= hi)
     // one materialization feeds the drop-list collect and the commit
     // (and survives OCC recomposition retries)
-    val compacted = sealedRows
-      .withColumn("slice", col("bkt").cast("long") - Buckets)
-      .localCheckpoint()
-    try {
+    graft.Artifacts.pinned(
+        sealedRows.withColumn("slice", col("bkt").cast("long") - Buckets),
+        eager = true) { compacted =>
       if (!compacted.isEmpty) {
         val dropVals = sealedRows.filter(col("slice") >= 0)
           .select(col("slice")).distinct()
@@ -247,7 +248,7 @@ object BandHistory {
           }
         }
       }
-    } finally SnapshotTable.freeLocalCheckpoint(compacted)
+    }
   }
 
   // ---- per-(root, version) snapshot-machinery memos -----------------

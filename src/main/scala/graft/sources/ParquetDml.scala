@@ -28,9 +28,7 @@ import org.apache.spark.sql.functions._
   * no time travel — that is what Delta/Iceberg/Hudi add on top of
   * exactly this rewrite. The read-then-overwrite hazard (Spark cannot
   * overwrite a path it is lazily reading) is broken here with an
-  * eager localCheckpoint of the rewritten slice; on a cluster where
-  * executors may die mid-write, stage to a temp directory and rename
-  * instead — same plan, different durability.
+  * eager pin of the rewritten slice.
   */
 object ParquetDml {
 
@@ -85,11 +83,10 @@ object ParquetDml {
         .filter(!coalesce(cond, lit(false)))         // survivors only
       // dynamic overwrite only rewrites partitions PRESENT in the
       // output — a fully-deleted partition would survive as stale
-      // files. Materialize the survivor set first (localCheckpoint:
-      // also guards against reading the directory we are overwriting),
+      // files. Materialize the survivor set first (an eager pin: also
+      // guards against reading the directory we are overwriting),
       // then drop now-empty partition directories explicitly.
-      val keptM = kept.localCheckpoint()
-      try {
+      graft.Artifacts.pinned(kept, eager = true) { keptM =>
         val surviving = keptM.select(partitionCol).distinct().collect()
           .map(_.get(0)).toSet
         if (surviving.nonEmpty) dynamicOverwrite(keptM, path, partitionCol)
@@ -98,7 +95,7 @@ object ParquetDml {
         affected.filterNot(surviving).foreach { v =>
           fs.delete(new org.apache.hadoop.fs.Path(path, partitionDirName(partitionCol, v)), true)
         }
-      } finally SnapshotTable.freeLocalCheckpoint(keptM)
+      }
     }
   }
 
@@ -129,13 +126,9 @@ object ParquetDml {
           case None    => col(c)
         }
       }: _*)
-      // materialize before overwriting the path being read (see delete);
-      // free the checkpoint blocks after — a foreachBatch caller runs
-      // this per micro-batch, and unfreed blocks accumulate in
-      // executor storage until the RDD is GC'd
-      val rewrittenM = rewritten.localCheckpoint()
-      try dynamicOverwrite(rewrittenM, path, partitionCol)
-      finally SnapshotTable.freeLocalCheckpoint(rewrittenM)
+      // materialize before overwriting the path being read (see delete)
+      graft.Artifacts.pinned(rewritten, eager = true)(
+        dynamicOverwrite(_, path, partitionCol))
     }
   }
 
@@ -182,9 +175,8 @@ object ParquetDml {
       val merged = survivors.select(t.columns.map(col).toSeq: _*)
         .unionByName(source.select(t.columns.map(col).toSeq: _*))
       // materialize before overwriting the path being read (see delete)
-      val mergedM = merged.localCheckpoint()
-      try dynamicOverwrite(mergedM, path, partitionCol)
-      finally SnapshotTable.freeLocalCheckpoint(mergedM)
+      graft.Artifacts.pinned(merged, eager = true)(
+        dynamicOverwrite(_, path, partitionCol))
     }
   }
 }

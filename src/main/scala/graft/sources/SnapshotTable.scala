@@ -488,16 +488,21 @@ object SnapshotTable {
     * dir design could do neither). Returns the partmap entries.
     */
   private def writeSlicePerValue(df: DataFrame, partitionCol: String,
+      vals: Seq[Any], staging: Path): Map[String, String] =
+    // materialize the slice ONCE: each per-value job filters the
+    // pinned blocks instead of re-running the slice's whole lineage
+    // (an expensive upstream query would otherwise execute up to
+    // |vals| times)
+    if (vals.length > 1) graft.Artifacts.pinned(df, eager = false)(
+      writeValues(_, partitionCol, vals, staging))
+    else writeValues(df, partitionCol, vals, staging)
+
+  private def writeValues(src: DataFrame, partitionCol: String,
       vals: Seq[Any], staging: Path): Map[String, String] = {
     import org.apache.spark.sql.functions.{col, lit}
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    // materialize the slice ONCE: each per-value job filters the
-    // checkpointed blocks instead of re-running the slice's whole
-    // lineage (an expensive upstream query would otherwise execute
-    // up to |vals| times)
-    val src = if (vals.length > 1) df.localCheckpoint(false) else df
-    val sc = df.sparkSession.sparkContext
+    val sc = src.sparkSession.sparkContext
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(8, math.max(1, vals.length)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -543,31 +548,8 @@ object SnapshotTable {
           catch { case _: Throwable => () }
         }
         throw e
-    } finally {
-      pool.shutdown()
-      // only the checkpoint WE minted: when vals has one element src
-      // IS df, and df's own blocks may be a caller-owned checkpoint
-      // (the streaming sink re-reads its slice across OCC retries)
-      if (src ne df) freeLocalCheckpoint(src)
-    }
+    } finally pool.shutdown()
   }
-
-  /** Release the executor-storage blocks behind a `localCheckpoint`ed
-    * DataFrame. `Dataset.unpersist` only uncaches `cache()`d plans;
-    * checkpoint blocks belong to the underlying RDD inside the
-    * returned plan's LogicalRDD leaf and otherwise live until the
-    * ContextCleaner GCs the RDD — on a long-running stream that
-    * checkpoints per micro-batch they accumulate and pressure
-    * executor storage memory. Safe on any DataFrame: non-LogicalRDD
-    * plans are untouched, and unpersisting a never-materialized lazy
-    * checkpoint is a no-op.
-    */
-  private[graft] def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
 
   /** Partition-sliced read-modify-write commit — the SOUND concurrent
     * writer API for partitioned tables. `df` holds ONLY the new rows
@@ -873,7 +855,7 @@ object SnapshotTable {
     * (inference, a Spark job, only when the sidecar is absent). Every
     * read of a version or staging directory goes through it.
     */
-  private def sidecarReader(spark: SparkSession,
+  private[sources] def sidecarReader(spark: SparkSession,
       dir: Path): org.apache.spark.sql.DataFrameReader =
     sidecarSchema(dir).fold(spark.read)(spark.read.schema(_))
 
@@ -942,12 +924,17 @@ object SnapshotTable {
       version: Int = -1): DataFrame =
     dvRead(spark, Paths.get(root, s"v=${committedVersion(root, version)}"))
 
-  private def dvRead(spark: SparkSession, dir: Path): DataFrame =
-    if (Files.exists(dvDir(dir)))
-      spark.read.schema(dvSchema).parquet(dvDir(dir).toString)
+  // the files inside `_dv`, not the directory: Spark's listing treats
+  // an underscore-named root as hidden (it warns, then reads it anyway)
+  private def dvRead(spark: SparkSession, dir: Path): DataFrame = {
+    val files =
+      if (Files.exists(dvDir(dir))) listDataFiles(dvDir(dir)) else Vector.empty
+    if (files.nonEmpty)
+      spark.read.schema(dvSchema).parquet(files.map(dvDir(dir).resolve(_).toString): _*)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         dvSchema)
+  }
 
   private def applyDv(spark: SparkSession, dir: Path, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
@@ -1266,12 +1253,19 @@ object SnapshotTable {
     * DV-carrying version) is applied first so only visible rows are
     * judged.
     */
-  private def validateConstraints(spark: SparkSession, root: String,
-      staged: Path): Unit = {
+  private[sources] def validateConstraints(spark: SparkSession, root: String,
+      staged: Path): Unit =
+    checkConstraints(root)(
+      applyDv(spark, staged, sidecarReader(spark, staged).parquet(staged.toString)))
+
+  /** [[validateConstraints]] over `rows`, built only when `root` has a
+    * constraint.
+    */
+  private[sources] def checkConstraints(root: String)(rows: => DataFrame): Unit = {
     import org.apache.spark.sql.functions.{coalesce => fnCoalesce, expr, lit, not}
     val cs = constraints(root)
     if (cs.isEmpty) return
-    val df = applyDv(spark, staged, sidecarReader(spark, staged).parquet(staged.toString))
+    val df = rows
     cs.foreach { case (name, sql) =>
       val bad = df.filter(not(fnCoalesce(expr(sql), lit(false)))).count()
       if (bad > 0)
@@ -2082,6 +2076,11 @@ object SnapshotTransaction {
                 .fold(Set.empty[String])(d => linkFrom(d, s, listDataFiles(d)))
             w.df.write.mode("append").parquet(s.toString)
             if (!Files.exists(schemaFile(s))) writeSchemaSidecar(s, w.df.schema)
+            // the linked files were valid when published: an append
+            // judges only the files it wrote
+            if (!w.appendFiles) validateConstraints(spark, w.root, s)
+            else checkConstraints(w.root)(sidecarReader(spark, s).parquet(
+              listDataFiles(s).filterNot(linked).map(s.resolve(_).toString): _*))
             writeManifests(spark, s, baseDir(w.root, base), linked,
               Nil, w.setCols, w.setCap, w.bloomCols)
         }

@@ -88,13 +88,8 @@ object TableStats {
       else SnapshotTable.read(spark, sroot)
         .unionByName(deltaCounts)
         .groupBy(keys.map(col): _*).agg(sum(col("__ts_n")).as("__ts_n"))
-    // one materialization feeds the commit and both scalar aggregates
-    val pinned = merged.localCheckpoint()
-    try {
-      SnapshotTable.commit(spark, sroot, pinned)
-      finishScalars(spark, tableRoot, sroot, name, keys, groupPrefix,
-        pinned, tableVersion)
-    } finally SnapshotTable.freeLocalCheckpoint(pinned)
+    commitCounts(spark, tableRoot, sroot, keys, groupPrefix, merged,
+      tableVersion)
   }
 
   /** Recompute the stat from the monitored table's full current
@@ -111,43 +106,45 @@ object TableStats {
     val sroot = statsRoot(tableRoot, name)
     val counts = SnapshotTable.read(spark, tableRoot)
       .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__ts_n"))
-    val pinned = counts.localCheckpoint()
-    try {
-      SnapshotTable.commit(spark, sroot, pinned)
-      finishScalars(spark, tableRoot, sroot, name, keys, groupPrefix,
-        pinned, tableVersion)
-    } finally SnapshotTable.freeLocalCheckpoint(pinned)
+    commitCounts(spark, tableRoot, sroot, keys, groupPrefix, counts,
+      tableVersion)
   }
 
-  private def finishScalars(spark: SparkSession, tableRoot: String,
-      sroot: String, name: String, keys: Seq[String], groupPrefix: Int,
-      counts: DataFrame, tableVersion: Int): Stat = {
-    // the stat key is the GROUP (prefix keys when a value domain is
-    // tracked, else the full key list): max rows per group = the
-    // router's hot-key scalar; rows of the counts table per group =
-    // the quantile guard's distinct-count scalar. One aggregate
-    // yields both (when groupPrefix == 0 the per-group sum degenerates
-    // to __ts_n itself, so max(sum) == max(__ts_n)).
-    val gk = (if (groupPrefix > 0) keys.take(groupPrefix) else keys).map(col)
-    val r = counts
-      .groupBy(gk: _*)
-      .agg(sum(col("__ts_n")).as("__ts_s"), count(lit(1)).as("__ts_d"))
-      .agg(max(col("__ts_s")), max(col("__ts_d")), sum(col("__ts_s")))
-      .head()
-    val maxKey = if (r.isNullAt(0)) 0L else r.getLong(0)
-    val maxDistinct =
-      if (groupPrefix == 0) None
-      else Some(if (r.isNullAt(1)) 0L else r.getLong(1))
-    // total rows ride the same aggregate for free — the join router's
-    // scalar (JoinRouter.rowCountForSource: zero-job build-size routing)
-    val total = if (r.isNullAt(2)) 0L else r.getLong(2)
-    val v =
-      if (tableVersion > 0) tableVersion
-      else SnapshotTable.currentVersion(tableRoot)
-    val stat = Stat(v, keys, groupPrefix, maxKey, maxDistinct, Some(total))
-    writeScalar(sroot, stat)
-    stat
-  }
+  /** Commit the per-key `counts` to the stat's table, then derive and
+    * write its scalars: one eager pin feeds the commit and the scalar
+    * aggregate.
+    */
+  private def commitCounts(spark: SparkSession, tableRoot: String,
+      sroot: String, keys: Seq[String], groupPrefix: Int,
+      counts: DataFrame, tableVersion: Int): Stat =
+    graft.Artifacts.pinned(counts, eager = true) { pinned =>
+      SnapshotTable.commit(spark, sroot, pinned)
+      // the stat key is the GROUP (prefix keys when a value domain is
+      // tracked, else the full key list): max rows per group = the
+      // router's hot-key scalar; rows of the counts table per group =
+      // the quantile guard's distinct-count scalar. One aggregate
+      // yields both (when groupPrefix == 0 the per-group sum degenerates
+      // to __ts_n itself, so max(sum) == max(__ts_n)).
+      val gk = (if (groupPrefix > 0) keys.take(groupPrefix) else keys).map(col)
+      val r = pinned
+        .groupBy(gk: _*)
+        .agg(sum(col("__ts_n")).as("__ts_s"), count(lit(1)).as("__ts_d"))
+        .agg(max(col("__ts_s")), max(col("__ts_d")), sum(col("__ts_s")))
+        .head()
+      val maxKey = if (r.isNullAt(0)) 0L else r.getLong(0)
+      val maxDistinct =
+        if (groupPrefix == 0) None
+        else Some(if (r.isNullAt(1)) 0L else r.getLong(1))
+      // total rows ride the same aggregate for free — the join router's
+      // scalar (JoinRouter.rowCountForSource: zero-job build-size routing)
+      val total = if (r.isNullAt(2)) 0L else r.getLong(2)
+      val v =
+        if (tableVersion > 0) tableVersion
+        else SnapshotTable.currentVersion(tableRoot)
+      val stat = Stat(v, keys, groupPrefix, maxKey, maxDistinct, Some(total))
+      writeScalar(sroot, stat)
+      stat
+    }
 
   // ---- enrollment: stats as ENGINE behavior, not caller convention --
   //
@@ -288,12 +285,8 @@ object TableStats {
         .unionByName(deltaCounts)
         .groupBy(keys.map(col): _*).agg(sum(col("__ts_n")).as("__ts_n"))
         .filter(col("__ts_n") > 0L)
-    val pinned = merged.localCheckpoint()
-    try {
-      SnapshotTable.commit(spark, sroot, pinned)
-      finishScalars(spark, tableRoot, sroot, name, keys, groupPrefix,
-        pinned, tableVersion)
-    } finally SnapshotTable.freeLocalCheckpoint(pinned)
+    commitCounts(spark, tableRoot, sroot, keys, groupPrefix, merged,
+      tableVersion)
   }
 
   /** The stored scalars, IF they describe the monitored table's

@@ -135,57 +135,56 @@ object TextIndex {
         "space. Rebuild into a FRESH root past it")
     val cols = Seq(col("bucket"), col("token"), col("doc_id"), col("tf"),
       col("positions"))
-    val fresh = postingsOf(newDocs, idCol, textCol, buckets)
+    val postings = postingsOf(newDocs, idCol, textCol, buckets)
       .withColumn("positions",
         transform(col("positions"), p => p + lit(readV * SegmentStride)))
-      .localCheckpoint() // the touched-bucket list and the merge read one plan
-    val touched = fresh.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    // a zero-token batch still falls through: its docs must reach the
-    // doc-stats merge below (they count toward BM25's N and avgdl)
-    val postingsWrite = if (touched.isEmpty) None else {
-      val existing = touched
-        .map(b => SnapshotTable.readPoint(spark, root, "bucket", b.toString,
-          version = readV))
-        .reduce(_ unionAll _)
-        .select(cols: _*)
-      val merged = existing.unionAll(fresh.select(cols: _*))
-        .groupBy(col("bucket"), col("token"), col("doc_id"))
-        .agg(sum(col("tf")).cast("long").as("tf"),
-          sort_array(flatten(collect_list(col("positions")))).as("positions"))
-      Some(TableWrite(root, merged, readVersion = readV,
-        sliceCol = Some("bucket"), setCap = 8))
+    // the touched-bucket list and the merge read one plan
+    graft.Artifacts.pinned(postings, eager = true) { fresh =>
+      val touched = fresh.select("bucket").distinct()
+        .collect().map(_.getInt(0)).toSeq
+      // a zero-token batch still falls through: its docs must reach the
+      // doc-stats merge below (they count toward BM25's N and avgdl)
+      val postingsWrite = if (touched.isEmpty) None else {
+        val existing = touched
+          .map(b => SnapshotTable.readPoint(spark, root, "bucket", b.toString,
+            version = readV))
+          .reduce(_ unionAll _)
+          .select(cols: _*)
+        val merged = existing.unionAll(fresh.select(cols: _*))
+          .groupBy(col("bucket"), col("token"), col("doc_id"))
+          .agg(sum(col("tf")).cast("long").as("tf"),
+            sort_array(flatten(collect_list(col("positions")))).as("positions"))
+        Some(TableWrite(root, merged, readVersion = readV,
+          sliceCol = Some("bucket"), setCap = 8))
+      }
+      // doc-length side table: same slice-merge shape keyed by doc-hash
+      // bucket (a revision's length ADDS — concat semantics, like tf)
+      val sRoot = docStatsRoot(root)
+      val sReadV = SnapshotTable.currentVersion(sRoot)
+      graft.Artifacts.pinned(docStatsOf(newDocs, idCol, textCol, buckets),
+          eager = true) { freshStats =>
+        val touchedS = freshStats.select("dbucket").distinct()
+          .collect().map(_.getInt(0)).toSeq
+        val statsWrite = if (touchedS.isEmpty) None else {
+          val existingS = touchedS
+            .map(b => SnapshotTable.readPoint(spark, sRoot, "dbucket", b.toString,
+              version = sReadV))
+            .reduce(_ unionAll _)
+            .select(col("dbucket"), col("doc_id"), col("dl"))
+          val mergedS = existingS
+            .unionAll(freshStats.select(col("dbucket"), col("doc_id"), col("dl")))
+            .groupBy(col("dbucket"), col("doc_id"))
+            .agg(sum(col("dl")).cast("long").as("dl"))
+          Some(TableWrite(sRoot, mergedS, readVersion = sReadV,
+            sliceCol = Some("dbucket")))
+        }
+        val writes = Seq(postingsWrite, statsWrite).flatten
+        if (writes.isEmpty) readV
+        else SnapshotTransaction
+          .commitAll(spark, appendTxnDir(root), writes)
+          .getOrElse(root, readV)
+      }
     }
-    // doc-length side table: same slice-merge shape keyed by doc-hash
-    // bucket (a revision's length ADDS — concat semantics, like tf)
-    val sRoot = docStatsRoot(root)
-    val sReadV = SnapshotTable.currentVersion(sRoot)
-    val freshStats = docStatsOf(newDocs, idCol, textCol, buckets)
-      .localCheckpoint()
-    val touchedS = freshStats.select("dbucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val statsWrite = if (touchedS.isEmpty) None else {
-      val existingS = touchedS
-        .map(b => SnapshotTable.readPoint(spark, sRoot, "dbucket", b.toString,
-          version = sReadV))
-        .reduce(_ unionAll _)
-        .select(col("dbucket"), col("doc_id"), col("dl"))
-      val mergedS = existingS
-        .unionAll(freshStats.select(col("dbucket"), col("doc_id"), col("dl")))
-        .groupBy(col("dbucket"), col("doc_id"))
-        .agg(sum(col("dl")).cast("long").as("dl"))
-      Some(TableWrite(sRoot, mergedS, readVersion = sReadV,
-        sliceCol = Some("dbucket")))
-    }
-    val writes = Seq(postingsWrite, statsWrite).flatten
-    val v =
-      if (writes.isEmpty) readV
-      else SnapshotTransaction
-        .commitAll(spark, appendTxnDir(root), writes)
-        .getOrElse(root, readV)
-    SnapshotTable.freeLocalCheckpoint(fresh)
-    SnapshotTable.freeLocalCheckpoint(freshStats)
-    v
   }
 
   /** Corpus surgery (r16, VERDICT r15 item 2): REMOVE documents from

@@ -135,36 +135,35 @@ object VectorIndex {
     val lc = labelCol(root)
     val ec = embCol(root)
     val readV = SnapshotTable.currentVersion(root)
-    val pinned = newVectors.localCheckpoint()
-    val touched = pinned.select(lc).distinct().collect().map(_.get(0)).toSeq
-    val v = if (touched.isEmpty) readV else {
-      val existing = touched
-        .map(l => SnapshotTable.readPoint(spark, root, lc, l.toString,
-          version = readV))
-        .reduce(_ unionAll _)
-      // replaced rows pinned BEFORE the commit: their stats must
-      // subtract from the centroid side table
-      val replaced = existing
-        .join(pinned.select(col(idCol).as("__new_id")),
-          col(idCol) === col("__new_id"), "left_semi")
-        .localCheckpoint()
-      val merged = existing
-        .join(pinned.select(col(idCol).as("__new_id")),
-          col(idCol) === col("__new_id"), "left_anti")
-        .unionByName(pinned.select(existing.columns.map(col): _*))
-      val committed = SnapshotTable.commitPartitions(spark, root, merged, lc,
-        readVersion = readV)
-      // centroid stats fold: + new rows, − replaced rows (∝ batch)
-      val minus = cstatsOf(replaced, lc, ec)
-        .select(col(lc), (-col("n")).as("n"),
-          transform(col("sums"), s => -s).as("sums"))
-      mergeCstats(spark, root,
-        cstatsOf(pinned, lc, ec).unionByName(minus), lc)
-      SnapshotTable.freeLocalCheckpoint(replaced)
-      committed
+    graft.Artifacts.pinned(newVectors, eager = true) { pinned =>
+      val touched = pinned.select(lc).distinct().collect().map(_.get(0)).toSeq
+      if (touched.isEmpty) readV else {
+        val existing = touched
+          .map(l => SnapshotTable.readPoint(spark, root, lc, l.toString,
+            version = readV))
+          .reduce(_ unionAll _)
+        val replacedRows = existing
+          .join(pinned.select(col(idCol).as("__new_id")),
+            col(idCol) === col("__new_id"), "left_semi")
+        // replaced rows pinned BEFORE the commit: their stats must
+        // subtract from the centroid side table
+        graft.Artifacts.pinned(replacedRows, eager = true) { replaced =>
+          val merged = existing
+            .join(pinned.select(col(idCol).as("__new_id")),
+              col(idCol) === col("__new_id"), "left_anti")
+            .unionByName(pinned.select(existing.columns.map(col): _*))
+          val committed = SnapshotTable.commitPartitions(spark, root, merged, lc,
+            readVersion = readV)
+          // centroid stats fold: + new rows, − replaced rows (∝ batch)
+          val minus = cstatsOf(replaced, lc, ec)
+            .select(col(lc), (-col("n")).as("n"),
+              transform(col("sums"), s => -s).as("sums"))
+          mergeCstats(spark, root,
+            cstatsOf(pinned, lc, ec).unionByName(minus), lc)
+          committed
+        }
+      }
     }
-    SnapshotTable.freeLocalCheckpoint(pinned)
-    v
   }
 
   /** Remove vectors (corpus surgery after a dedup/decontamination
@@ -217,56 +216,52 @@ object VectorIndex {
     if (lastAppliedBatch(spark, root) >= batchId) return false
     val lc = labelCol(root)
     val ec = embCol(root)
-    val pinned = newVectors.localCheckpoint()
-    val touched = pinned.select(lc).distinct().collect().map(_.get(0)).toSeq
-    val marker = spark.range(1).select(lit(batchId).as("batch_id"))
-    if (touched.isEmpty) {
-      // empty batch: still record the marker for replay-skip
-      SnapshotTransaction.commitAll(spark, txnDir,
-        Seq(TableWrite(ingestLogRoot(root), marker, appendFiles = true)))
-      SnapshotTable.freeLocalCheckpoint(pinned)
-      return true
-    }
-    val first = SnapshotTable.currentVersion(root) == 0
-    val (merged, cstats) =
-      if (first) (pinned, cstatsOf(pinned, lc, ec))
-      else {
-        val readV = SnapshotTable.currentVersion(root)
-        val existing = touched
-          .map(l => SnapshotTable.readPoint(spark, root, lc, l.toString,
-            version = readV))
-          .reduce(_ unionAll _)
-        val replaced = existing
-          .join(pinned.select(col(idCol).as("__new_id")),
-            col(idCol) === col("__new_id"), "left_semi")
-        val minus = cstatsOf(replaced, lc, ec)
-          .select(col(lc), (-col("n")).as("n"),
-            transform(col("sums"), s => -s).as("sums"))
-        val deltas = cstatsOf(pinned, lc, ec).unionByName(minus)
-        val foldedCstats = SnapshotTable.read(spark, cstatsRoot(root))
-          .unionByName(deltas)
-          .select(col(lc), col("n"), posexplode(col("sums")))
-          .groupBy(col(lc), col("pos"))
-          .agg(sum(col("col")).as("s"), sum(col("n")).as("__nsum"))
-          .groupBy(col(lc))
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("s")))),
-            x => x.getField("s")).as("sums"),
-            max(col("__nsum")).as("n"))
-          .filter(col("n") > 0)
-          .select(col(lc), col("n"), col("sums"))
-        val m = existing
-          .join(pinned.select(col(idCol).as("__new_id")),
-            col(idCol) === col("__new_id"), "left_anti")
-          .unionByName(pinned.select(existing.columns.map(col): _*))
-        (m, foldedCstats)
+    graft.Artifacts.pinned(newVectors, eager = true) { pinned =>
+      val touched = pinned.select(lc).distinct().collect().map(_.get(0)).toSeq
+      val marker = spark.range(1).select(lit(batchId).as("batch_id"))
+      // an empty batch still records the marker for replay-skip
+      val writes = if (touched.isEmpty) Nil else {
+        val first = SnapshotTable.currentVersion(root) == 0
+        val (merged, cstats) =
+          if (first) (pinned, cstatsOf(pinned, lc, ec))
+          else {
+            val readV = SnapshotTable.currentVersion(root)
+            val existing = touched
+              .map(l => SnapshotTable.readPoint(spark, root, lc, l.toString,
+                version = readV))
+              .reduce(_ unionAll _)
+            val replaced = existing
+              .join(pinned.select(col(idCol).as("__new_id")),
+                col(idCol) === col("__new_id"), "left_semi")
+            val minus = cstatsOf(replaced, lc, ec)
+              .select(col(lc), (-col("n")).as("n"),
+                transform(col("sums"), s => -s).as("sums"))
+            val deltas = cstatsOf(pinned, lc, ec).unionByName(minus)
+            val foldedCstats = SnapshotTable.read(spark, cstatsRoot(root))
+              .unionByName(deltas)
+              .select(col(lc), col("n"), posexplode(col("sums")))
+              .groupBy(col(lc), col("pos"))
+              .agg(sum(col("col")).as("s"), sum(col("n")).as("__nsum"))
+              .groupBy(col(lc))
+              .agg(transform(
+                array_sort(collect_list(struct(col("pos"), col("s")))),
+                x => x.getField("s")).as("sums"),
+                max(col("__nsum")).as("n"))
+              .filter(col("n") > 0)
+              .select(col(lc), col("n"), col("sums"))
+            val m = existing
+              .join(pinned.select(col(idCol).as("__new_id")),
+                col(idCol) === col("__new_id"), "left_anti")
+              .unionByName(pinned.select(existing.columns.map(col): _*))
+            (m, foldedCstats)
+          }
+        Seq(TableWrite(root, merged, sliceCol = Some(lc), setCols = Seq(lc)),
+          TableWrite(cstatsRoot(root), cstats))
       }
-    SnapshotTransaction.commitAll(spark, txnDir, Seq(
-      TableWrite(root, merged, sliceCol = Some(lc), setCols = Seq(lc)),
-      TableWrite(cstatsRoot(root), cstats),
-      TableWrite(ingestLogRoot(root), marker, appendFiles = true)))
-    SnapshotTable.freeLocalCheckpoint(pinned)
-    true
+      SnapshotTransaction.commitAll(spark, txnDir,
+        writes :+ TableWrite(ingestLogRoot(root), marker, appendFiles = true))
+      true
+    }
   }
 
   /** foreachBatch-ready sink: heals crashed predecessors, applies each
@@ -325,14 +320,15 @@ object VectorIndex {
     val q = queries.select(col(idCol).as("query_id"), col(embCol).as("query_emb"))
     val wProbe = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("cent_cos").desc, col(lc))
-    val probes = q.crossJoin(broadcast(centroids(spark, root)))
+    val probePlan = q.crossJoin(broadcast(centroids(spark, root)))
       .select(col("query_id"), col("query_emb"), col(lc),
         VF.cosine(col("query_emb"), col("centroid")).cast("float")
           .as("cent_cos"))
       .withColumn("probe_rank", row_number().over(wProbe))
       .filter(col("probe_rank") <= nprobe)
       .select(col("query_id"), col("query_emb"), col(lc))
-      .localCheckpoint() // the driver-side cell list and the rerank share it
+    // the driver-side cell list and the rerank share one materialization
+    val probes = graft.Artifacts.pin(probePlan, eager = true)
     val labels = probes.select(lc).distinct().collect().map(_.get(0)).toSeq
     val cands = candidates(spark, root, labels)
       .select(col(idCol).as("neighbor_id"), col(lc), col(embCol).as("cand_emb"))

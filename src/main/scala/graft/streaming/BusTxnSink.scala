@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Artifacts
 import graft.sources.{SnapshotTable, SnapshotTransaction, TableWrite}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -86,8 +87,7 @@ object BusTxnSink {
         }
       }
     }
-    val slice = batch.withColumn("batch_id", lit(batchId)).localCheckpoint()
-    try {
+    Artifacts.pinned(batch.withColumn("batch_id", lit(batchId)), eager = true) { slice =>
       val hasBusOffsets = batch.columns.contains("partition") &&
         batch.columns.contains("offset")
       val (n, ranges): (Long, String) =
@@ -108,6 +108,6 @@ object BusTxnSink {
         TableWrite(dataRoot(root), slice, appendFiles = true),
         TableWrite(offsetsRoot(root), offsetRow, appendFiles = true)))
       ()
-    } finally SnapshotTable.freeLocalCheckpoint(slice)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Artifacts
 import graft.functions.{TextFunctions => TF}
 import graft.queries.Dedup
 import graft.sources.{BandHistory, SnapshotTable}
@@ -69,23 +70,25 @@ object NearDupSink {
         maxConflictRetries)
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val slice = batch.select(col("doc_id"), col("text"))
+    val slicePlan = batch.select(col("doc_id"), col("text"))
       .withColumn("batch_id", lit(batchId))
-      .localCheckpoint()
-    try {
-      val bands = Dedup.bandDocs(slice.select(col("doc_id"), col("text")))
-        .localCheckpoint()
-      try {
-        val pairs: Option[DataFrame] =
-          if (SnapshotTable.currentVersion(bandsRoot(root)) == 0) None
-          else {
-            // capped candidates via the production history band table:
-            // broadcast anti-join against the saturated-bucket set,
-            // then a bucket-pruned file read of batches < this one
-            // (replay: never self-pair) — no history-wide window
-            val cand = BandHistory
-              .candidates(spark, root, bands, beforeBatchId = batchId)
-              .localCheckpoint(false)
+    Artifacts.pinned(slicePlan, eager = true) { slice =>
+      Artifacts.pinned(Dedup.bandDocs(slice.select(col("doc_id"), col("text"))),
+          eager = true) { bands =>
+        def commitBatch(pairs: Option[DataFrame]): Unit = {
+          commitSlice(root, docsRoot(root), slice, maxConflictRetries)
+          BandHistory.append(spark, root, bands, batchId, maxConflictRetries)
+          pairs.foreach(p => commitSlice(root, pairsRoot(root), p, maxConflictRetries))
+        }
+        if (SnapshotTable.currentVersion(bandsRoot(root)) == 0) commitBatch(None)
+        else {
+          // capped candidates via the production history band table:
+          // broadcast anti-join against the saturated-bucket set, then
+          // a bucket-pruned file read of batches < this one (replay:
+          // never self-pair) — no history-wide window
+          val candPlan = BandHistory
+            .candidates(spark, root, bands, beforeBatchId = batchId)
+          Artifacts.pinned(candPlan, eager = false) { cand =>
             val histDocs = SnapshotTable.read(spark, docsRoot(root))
               .filter(col("batch_id") < batchId)
             def candShingles(src: DataFrame, idName: String, shName: String) =
@@ -100,16 +103,13 @@ object NearDupSink {
                 round(TF.jaccard(col("sh1"), col("sh2")), 4).as("jaccard"))
               .filter(col("jaccard") >= 0.1)
               .withColumn("batch_id", lit(batchId))
-              .localCheckpoint() // materialize BEFORE the band table advances
-            Some(verified).filter(!_.isEmpty)
+            // eager: materialize BEFORE the band table advances
+            Artifacts.pinned(verified, eager = true)(p =>
+              commitBatch(Some(p).filter(!_.isEmpty)))
           }
-        try {
-          commitSlice(root, docsRoot(root), slice, maxConflictRetries)
-          BandHistory.append(spark, root, bands, batchId, maxConflictRetries)
-          pairs.foreach(p => commitSlice(root, pairsRoot(root), p, maxConflictRetries))
-        } finally pairs.foreach(SnapshotTable.freeLocalCheckpoint)
-      } finally SnapshotTable.freeLocalCheckpoint(bands)
-    } finally SnapshotTable.freeLocalCheckpoint(slice)
+        }
+      }
+    }
   }
 
   /** One batch_id-partition commit with the streaming conflict-retry

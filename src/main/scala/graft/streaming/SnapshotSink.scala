@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Artifacts
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -13,8 +14,8 @@ import org.apache.spark.sql.functions._
   * Per micro-batch:
   *   1. collapse the batch to its LATEST row per key (`orderCol`
   *      descending, row_number = 1 — re-delivered and intra-batch
-  *      duplicate keys collapse here), localCheckpointed once so OCC
-  *      retries never re-read the (ephemeral) batch source;
+  *      duplicate keys collapse here), pinned once so OCC retries
+  *      never re-read the (ephemeral) batch source;
   *   2. merge-by-key against the current snapshot: rows whose key the
   *      batch names are replaced, all others carried forward;
   *   3. commit as a read-modify-write of the version that was merged
@@ -45,15 +46,10 @@ object SnapshotSink {
     val spark = batch.sparkSession
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(orderCol).desc)
-    val latest = batch
+    val newest = batch
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-      .localCheckpoint()
-    // free the checkpoint blocks once the batch lands (or aborts):
-    // per-batch checkpoints otherwise accumulate in executor storage
-    // until the RDD is GC'd — on a long-running stream that is an
-    // unbounded storage-memory leak
-    try {
+    Artifacts.pinned(newest, eager = true) { latest =>
       var attempt = 0
       var done = false
       while (!done) {
@@ -69,7 +65,7 @@ object SnapshotSink {
           // loop: mergeByKey re-reads the new head and re-merges
         }
       }
-    } finally SnapshotTable.freeLocalCheckpoint(latest)
+    }
   }
 
   /** Streaming DYNAMIC PARTITION OVERWRITE sink — the transactional
@@ -97,13 +93,9 @@ object SnapshotSink {
       maxConflictRetries: Int = 20)(batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    // localCheckpoint once: OCC retries must never re-read the
-    // (ephemeral) micro-batch source
-    val slice = batch.localCheckpoint()
-    // unpersist in finally: same unbounded per-batch storage leak as
-    // upsertBatch — blocks must be freed when the batch lands, not
-    // when the ContextCleaner eventually GCs the RDD
-    try {
+    // pinned once: OCC retries must never re-read the (ephemeral)
+    // micro-batch source
+    Artifacts.pinned(batch, eager = true) { slice =>
       var attempt = 0
       var done = false
       while (!done) {
@@ -125,6 +117,6 @@ object SnapshotSink {
           // loop: recompose against the head that beat us
         }
       }
-    } finally SnapshotTable.freeLocalCheckpoint(slice)
+    }
   }
 }

@@ -24,9 +24,9 @@ class AvroCompactionPipelineSpec extends AnyFunSuite {
   }
 
   test("Avro landing → streamed snapshot ingest → OPTIMIZE: exactly once, pruned, stats-bearing") {
-    val landing = java.nio.file.Files.createTempDirectory("graft-avro-land").toString
-    val table = java.nio.file.Files.createTempDirectory("graft-avro-tbl").toString + "/docs"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-avro-ck").toString
+    val landing = Artifacts.exitRoot("graft-avro-land")
+    val table = Artifacts.exitRoot("graft-avro-tbl") + "/docs"
+    val ckpt = Artifacts.exitRoot("graft-avro-ck")
     TableStats.enroll(table, "name", Seq("name"))
 
     // generation A (id, name) and generation B (+score) land BEFORE
@@ -36,8 +36,7 @@ class AvroCompactionPipelineSpec extends AnyFunSuite {
 
     def ingest(batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
       if (batch.isEmpty) return
-      val slice = batch.withColumn("batch_id", lit(batchId)).localCheckpoint()
-      try {
+      Artifacts.pinned(batch.withColumn("batch_id", lit(batchId)), eager = true) { slice =>
         var done = false
         var attempt = 0
         while (!done) {
@@ -51,7 +50,7 @@ class AvroCompactionPipelineSpec extends AnyFunSuite {
               attempt += 1; if (attempt > 10) throw e
           }
         }
-      } finally SnapshotTable.freeLocalCheckpoint(slice)
+      }
     }
 
     def run(): Unit = {

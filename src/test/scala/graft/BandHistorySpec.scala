@@ -48,7 +48,7 @@ class BandHistorySpec extends AnyFunSuite {
 
   test("candidates match the windowed reference across growing history") {
     val rnd = new scala.util.Random(717L)
-    val root = Files.createTempDirectory("bandhist").toString
+    val root = Artifacts.exitRoot("bandhist")
     // three appends; sigPool small enough that buckets saturate only
     // by ACCUMULATION (per band per batch ≈ 40/6 ≈ 6.7 rows/bucket —
     // under the cap; two batches in ≈ 13.3 — over it)
@@ -67,7 +67,7 @@ class BandHistorySpec extends AnyFunSuite {
 
   test("a bucket crossing the cap only via accumulation is excluded after, not before") {
     import spark.implicits._
-    val root = Files.createTempDirectory("bandhist-acc").toString
+    val root = Artifacts.exitRoot("bandhist-acc")
     def bucketRows(ids: Range) =
       ids.map(i => (i.toLong, 0, "hot")).toDF("doc_id", "band", "sig")
     // 6 rows in batch 0, 6 more in batch 1: size 6 → 12 across appends
@@ -83,7 +83,7 @@ class BandHistorySpec extends AnyFunSuite {
 
   test("append is replay-idempotent for bands and sat") {
     val rnd = new scala.util.Random(99L)
-    val root = Files.createTempDirectory("bandhist-replay").toString
+    val root = Artifacts.exitRoot("bandhist-replay")
     val b0 = syntheticBands(rnd, 0 until 40, sigPool = 8) // saturates
     val b1 = syntheticBands(rnd, 40 until 50, sigPool = 8)
     BandHistory.append(spark, root, b0, 0L)
@@ -98,7 +98,7 @@ class BandHistorySpec extends AnyFunSuite {
 
   test("optimize consolidates sealed batches, shrinks files, changes no probe result") {
     val rnd = new scala.util.Random(42L)
-    val root = Files.createTempDirectory("bandhist-opt").toString
+    val root = Artifacts.exitRoot("bandhist-opt")
     val b0 = syntheticBands(rnd, 0 until 30, sigPool = 8)
     val b1 = syntheticBands(rnd, 30 until 60, sigPool = 8)
     val b2 = syntheticBands(rnd, 60 until 70, sigPool = 8)
@@ -136,7 +136,7 @@ class BandHistorySpec extends AnyFunSuite {
 
   test("probe opens only hit-bucket files and plans no Window over history") {
     val rnd = new scala.util.Random(5L)
-    val root = Files.createTempDirectory("bandhist-prune").toString
+    val root = Artifacts.exitRoot("bandhist-prune")
     // wide history: many distinct sigs → many bkt slices on disk
     BandHistory.append(spark, root,
       syntheticBands(rnd, 0 until 200, sigPool = 5000), 0L)

@@ -27,7 +27,7 @@ class BusTxnSinkSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1))).toSeq
 
   test("normal batches + replay: idempotent, version history one commit per batch") {
-    val root = java.nio.file.Files.createTempDirectory("graft-bustxn").toString
+    val root = Artifacts.exitRoot("graft-bustxn")
     BusTxnSink.ingestBatch(root)(busBatch(0 until 4, "b0"), 0L)
     BusTxnSink.ingestBatch(root)(busBatch(4 until 7, "b1"), 1L)
     assert(BusTxnSink.lastCommittedBatch(spark, root) === 1L)
@@ -43,7 +43,7 @@ class BusTxnSinkSpec extends AnyFunSuite {
   }
 
   test("crash BEFORE decision: rollback, redelivery lands the batch exactly once") {
-    val root = java.nio.file.Files.createTempDirectory("graft-bustxn-pre").toString
+    val root = Artifacts.exitRoot("graft-bustxn-pre")
     BusTxnSink.ingestBatch(root)(busBatch(0 until 3, "b0"), 0L)
 
     SnapshotTransaction.failpoint =
@@ -66,7 +66,7 @@ class BusTxnSinkSpec extends AnyFunSuite {
   }
 
   test("crash MID-PUBLISH (decided): roll-forward, redelivery skips — no duplication") {
-    val root = java.nio.file.Files.createTempDirectory("graft-bustxn-mid").toString
+    val root = Artifacts.exitRoot("graft-bustxn-mid")
     BusTxnSink.ingestBatch(root)(busBatch(0 until 3, "b0"), 0L)
 
     SnapshotTransaction.failpoint =
@@ -93,8 +93,8 @@ class BusTxnSinkSpec extends AnyFunSuite {
     val log = "bus_txn_e2e"
     InMemoryLog.create(log, 2)
     (0 until 12).foreach(i => InMemoryLog.append(log, s"k$i", s"v$i", i % 2))
-    val root = java.nio.file.Files.createTempDirectory("graft-bustxn-e2e").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-bustxn-ckpt").toString
+    val root = Artifacts.exitRoot("graft-bustxn-e2e")
+    val ckpt = Artifacts.exitRoot("graft-bustxn-ckpt")
 
     def run(): Unit = {
       val q = spark.readStream.format("gbus").option("log", log)

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * be invisible to results: a cleared session re-derives each artifact
   * identically. This is the long-lived-service contract (VERDICT r5
   * #7): the memos bound a Verify/Bench run's rework, not a service's
-  * memory, and a clear leaves no temp root behind.
+  * memory, and a clear leaves no temp root behind. The suite also
+  * holds the pin seam: only `Artifacts` pins or releases a DataFrame,
+  * and a write that fails releases what it pinned.
   */
 class CachesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -120,6 +122,50 @@ class CachesSpec extends AnyFunSuite {
     val m = Artifacts.memo[String, String]()
     assert(m.get("A")(m.get("B")("b") + "a") == "ba")
     assert(m.peek("B").contains("b"))
+  }
+
+  test("a write whose commit fails releases its pins") {
+    import spark.implicits._
+    import sources.{SnapshotTable, TextIndex, VectorIndex}
+    def pinsLeft(write: => Any): Set[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      intercept[SnapshotTable.ConstraintViolation](write)
+      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    }
+    val vi = Artifacts.exitRoot("graft-pins-vi")
+    VectorIndex.build(spark, Seq((1L, Seq(1f, 0f), 0), (2L, Seq(0f, 1f), 1))
+      .toDF("vec_id", "embedding", "label"), vi)
+    SnapshotTable.addConstraint(vi, "small_ids", "vec_id < 100")
+    // vec 1 is replaced (a second pin), vec 100 fails the constraint
+    val vLeft = pinsLeft(VectorIndex.upsert(spark,
+      Seq((1L, Seq(0.5f, 0.5f), 0), (100L, Seq(0.9f, 0.1f), 0))
+        .toDF("vec_id", "embedding", "label"), vi))
+    val ti = Artifacts.exitRoot("graft-pins-ti")
+    TextIndex.build(spark, Seq((1L, "red fish")).toDF("doc_id", "text"), ti)
+    SnapshotTable.addConstraint(ti, "small_ids", "doc_id < 100")
+    val tLeft = pinsLeft(TextIndex.append(spark,
+      Seq((100L, "blue fish")).toDF("doc_id", "text"), ti))
+    assert(vLeft.isEmpty && tLeft.isEmpty,
+      s"pinned RDDs left by VectorIndex.upsert: $vLeft, by TextIndex.append: $tLeft")
+  }
+
+  test("only Artifacts pins a DataFrame or releases its blocks") {
+    import scala.jdk.CollectionConverters._
+    val src = java.nio.file.Paths.get("src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(src), s"no sources at ${src.toAbsolutePath}")
+    val walk = java.nio.file.Files.walk(src)
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    // a hand-written release (a `try … finally` one included) has to
+    // call `unpersist` or the old `freeLocalCheckpoint` helper
+    val banned =
+      """\.(localCheckpoint|checkpoint|unpersist)\(|freeLocalCheckpoint""".r
+    val hits = files.filter(_.getFileName.toString != "Artifacts.scala").flatMap { f =>
+      banned.findAllIn(java.nio.file.Files.readString(f)).map(m => s"$f: $m")
+    }
+    assert(files.size > 50, s"only ${files.size} sources found under $src")
+    if (hits.nonEmpty) fail(s"pin or release outside Artifacts:\n${hits.mkString("\n")}")
   }
 
   test("a JVM that exits without a clear deletes its temp roots and events layout") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import graft.sources.ParquetDml
 import graft.streaming.Event
@@ -27,7 +26,7 @@ class ForeachBatchUpsertSpec extends AnyFunSuite {
   test("foreachBatch + ParquetDml.merge converges re-delivered events to exactly-once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("fbmerge").toFile.getAbsolutePath + "/events_tbl"
+    val dir = Artifacts.exitRoot("fbmerge") + "/events_tbl"
     // seed the table so merge has a target (one row that will be
     // UPDATED by the stream: same event_id, older value)
     Seq(Ev2(1L, t(0), 1L, "click", -1.0))

@@ -38,6 +38,32 @@ class SnapshotTxnSpec extends AnyFunSuite {
     assert(SnapshotTable.read(spark, b, version = 1).count() === 5L) // time travel intact
   }
 
+  test("a transaction checks CHECK constraints on full and appended writes") {
+    val (a, b, txn) = fresh("graft-txn-check")
+    SnapshotTransaction.commitAll(spark, txn,
+      Seq(TableWrite(a, nation), TableWrite(b, region)))
+    SnapshotTable.addConstraint(a, "small_keys", "n_nationkey < 100")
+    val shifted = nation.withColumn("n_nationkey", col("n_nationkey") + 100)
+    intercept[SnapshotTable.ConstraintViolation] {
+      SnapshotTransaction.commitAll(spark, txn,
+        Seq(TableWrite(a, shifted), TableWrite(b, region)))
+    }
+    intercept[SnapshotTable.ConstraintViolation] {
+      SnapshotTransaction.commitAll(spark, txn, Seq(
+        TableWrite(a, shifted.limit(1), appendFiles = true),
+        TableWrite(b, region.limit(2))))
+    }
+    assert(SnapshotTable.currentVersion(a) === 1)
+    assert(SnapshotTable.currentVersion(b) === 1)
+    // an append judges only the rows it adds: the linked files were
+    // valid when published, even against a constraint added later
+    SnapshotTable.addConstraint(a, "positive_keys", "n_nationkey > 0")
+    val v = SnapshotTransaction.commitAll(spark, txn,
+      Seq(TableWrite(a, nation.filter(col("n_nationkey") === 5), appendFiles = true)))
+    assert(v === Map(a -> 2))
+    assert(SnapshotTable.read(spark, a).count() === 26L)
+  }
+
   test("conflict on one table aborts the whole transaction cleanly") {
     val (a, b, txn) = fresh("graft-txn-conflict")
     SnapshotTransaction.commitAll(spark, txn,

@@ -38,7 +38,7 @@ class StreamingNearDupSpec extends AnyFunSuite {
   test("cross-batch near-dups found, replay converges, history files hard-link") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("neardup").toString
+    val root = Artifacts.exitRoot("neardup")
 
     val input = MemoryStream[(Long, String)]
     val q = input.toDS().toDF("doc_id", "text")
@@ -110,7 +110,7 @@ class StreamingNearDupSpec extends AnyFunSuite {
 
   test("in-stream optimize consolidates history and pairs still converge") {
     import spark.implicits._
-    val root = Files.createTempDirectory("neardup-opt").toString
+    val root = Artifacts.exitRoot("neardup-opt")
     val ingest = NearDupSink.ingestBatch(root, optimizeEvery = 2) _
     ingest(Seq((1L, textA), (2L, textB)).toDF("doc_id", "text"), 0L)
     ingest(Seq((3L, textC)).toDF("doc_id", "text"), 1L)
@@ -130,7 +130,7 @@ class StreamingNearDupSpec extends AnyFunSuite {
 
   test("a batch with no history pairs commits docs+bands and no pairs table rows") {
     import spark.implicits._
-    val root = Files.createTempDirectory("neardup-none").toString
+    val root = Artifacts.exitRoot("neardup-none")
     NearDupSink.ingestBatch(root)(Seq((1L, textA)).toDF("doc_id", "text"), 0L)
     NearDupSink.ingestBatch(root)(Seq((2L, textB)).toDF("doc_id", "text"), 1L)
     assert(SnapshotTable.read(spark, NearDupSink.docsRoot(root)).count() === 2L)

@@ -17,8 +17,8 @@ class StreamingTextIndexSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def fresh(tag: String): (String, String) = (
-    java.nio.file.Files.createTempDirectory(s"graft-sti-$tag").toString,
-    java.nio.file.Files.createTempDirectory(s"graft-sti-txn-$tag").toString)
+    Artifacts.exitRoot(s"graft-sti-$tag"),
+    Artifacts.exitRoot(s"graft-sti-txn-$tag"))
 
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
 
@@ -163,7 +163,7 @@ class StreamingTextIndexSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val (root, txn) = fresh("stream")
     TextIndex.init(root, buckets = 8)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sti-ckpt").toString
+    val ckpt = Artifacts.exitRoot("graft-sti-ckpt")
     // the packaged sink: self-healing recover + exactly-once ingest +
     // in-stream OPTIMIZE every 2nd batch
     def start(input: MemoryStream[(Long, String)]) =

@@ -46,7 +46,7 @@ class TableStatsIngestSpec extends AnyFunSuite {
   }
 
   test("enrolled stat is maintained by commitPartitions ingest, exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-enroll").toString
+    val dir = Artifacts.exitRoot("graft-enroll")
     val root = s"$dir/events.parquet"
     TableStats.enroll(root, "user_id", Seq("user_id"))
 
@@ -79,7 +79,7 @@ class TableStatsIngestSpec extends AnyFunSuite {
   }
 
   test("auto query over a stats-bearing table: zero probe jobs, same rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-enroll-q").toString
+    val dir = Artifacts.exitRoot("graft-enroll-q")
     val root = s"$dir/events.parquet"
     TableStats.enroll(root, "user_id", Seq("user_id"))
     SnapshotTable.commitPartitions(spark, root, eventsBatch(Seq(1L -> 40, 2L -> 15), 0L), "batch_id")
@@ -115,7 +115,7 @@ class TableStatsIngestSpec extends AnyFunSuite {
   }
 
   test("stats failure or staleness never blocks the commit or the query") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-enroll-bad").toString
+    val dir = Artifacts.exitRoot("graft-enroll-bad")
     val root = s"$dir/t.parquet"
     // enroll on a column the data does NOT have: maintenance fails
     // (advisory), the commit itself must land
@@ -129,7 +129,7 @@ class TableStatsIngestSpec extends AnyFunSuite {
   }
 
   test("quantile guard consumes the enrolled two-scalar stat: job-free source lookup") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-enroll-q2").toString
+    val dir = Artifacts.exitRoot("graft-enroll-q2")
     val root = s"$dir/lineitem.parquet"
     // two-scalar enrollment: group prefix 1 over (user_id, v) tracks
     // BOTH the hot-key rows and the per-group distinct-value count

@@ -17,7 +17,7 @@ class TableStatsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshRoot(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-tstats-$tag").toString
+    Artifacts.exitRoot(s"graft-tstats-$tag")
 
   private def batch(users: Seq[(Long, Int)], offset: Long) = {
     import spark.implicits._
