@@ -14,11 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * .charNgrams / .shingles3/5) evaluate an interpreted lambda per
   * output element (~1 µs each: higher-order functions are
   * CodegenFallback), which made n-gram construction the dominant cost
-  * of every shingle pipeline (LangIdProbe: 1.6 s just to build the
-  * corpus's 1.5M bigrams at sf0.1). These kernels run the loop as
-  * compiled JVM code invoked once per ROW from within whole-stage
-  * codegen — identical output, order, and duplicates, so every DuckDB
-  * oracle is unchanged.
+  * of every shingle pipeline (1.6 s just to build the corpus's 1.5M
+  * bigrams at sf0.1: NOTES.md, "Dev-probe measurements"). These
+  * kernels run the loop as compiled JVM code invoked once per ROW from
+  * within whole-stage codegen — identical output, order, and
+  * duplicates, so every DuckDB oracle is unchanged.
   *
   * Edge semantics: fewer than n chars/tokens → EMPTY array, matching
   * DuckDB's ascending generate_series (the HOF twin's descending

@@ -162,7 +162,8 @@ object Dedup extends QueryModule {
     * from two digests. At 100 TB signature computation stays
     * embarrassingly parallel; only the tiny signature table ever
     * shuffles, and the checkpoint is the documented "materialize the
-    * signature table once" pattern (MinhashProfile: 6.6s → 3.7s).
+    * signature table once" pattern (6.6 s → 3.7 s at sf0.1: NOTES.md,
+    * "Dev-probe measurements").
     */
   private val sigCache = graft.Artifacts.memo[
     (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
@@ -349,7 +350,7 @@ object Dedup extends QueryModule {
     // the incremental query's persisted history band table (ingest
     // cost of the production pipeline that owns it, same contract as
     // eventsByDate's layout write)
-    warmIncrementalHistory(s, d, 400L)
+    incrementalHistoryRoot(s, d, 400L)
     // NOT warmed (r18, VERDICT r17 item 1): the batch band slice
     // (batchBandCache), the per-width simhash fingerprint tables
     // (fpCache) and the positional span table (spansCache) are
@@ -1099,10 +1100,11 @@ object Dedup extends QueryModule {
     * batch never reads the full-corpus signature artifact, and no
     * history-wide window/shuffle runs per batch — the probe opens only
     * the hash-bucket files its batch hits and each surviving bucket
-    * holds ≤ 10 rows. Measured (tools/IncrementalProbe, BASELINE r13):
-    * fixed-batch cost flat across growing histories.
+    * holds ≤ 10 rows. Measured: fixed-batch cost flat across growing
+    * histories (BASELINE.md, "Incremental near-dup with the production
+    * band table (BandHistory)"); BandHistorySpec pins the shape.
     */
-  private[graft] def minhashIncrementalPairs(
+  private def minhashIncrementalPairs(
       s: org.apache.spark.sql.SparkSession, d: String,
       splitId: Long)
       : org.apache.spark.sql.DataFrame = {
@@ -1117,8 +1119,8 @@ object Dedup extends QueryModule {
     // banding on every probe invocation charged ingest work to the
     // query (measured: 1.06 s of the 3.5 s at sf0.1). Stays strictly
     // batch-proportional — the memo holds a batch-sized checkpoint,
-    // never a corpus artifact, so the IncrementalProbe flat-slope
-    // contract is unchanged.
+    // never a corpus artifact, so the flat-slope contract (BASELINE.md,
+    // "BandHistory probe intercept") is unchanged.
     val batch = batchBandCache.get((s, d, splitId)) {
       graft.Artifacts.pin(
         bandSignaturesOf(shingleTable(s, d).filter(col("doc_id") >= splitId)),
@@ -1171,7 +1173,8 @@ object Dedup extends QueryModule {
 
   /** Batch-side band signatures per (session, dataset, split) — the
     * banding the ingest pipeline runs once per arriving batch (r17);
-    * batch-sized checkpoint, materialized in [[warm]].
+    * batch-sized checkpoint, built by its first consumer (not warmed:
+    * see [[warm]]).
     */
   private val batchBandCache = graft.Artifacts.memo[
     (org.apache.spark.sql.SparkSession, String, Long),
@@ -1185,14 +1188,6 @@ object Dedup extends QueryModule {
       graft.sources.BandHistory.append(s, root, hist, batchId = 0L)
       root
     }
-
-  /** Materialize the persisted history band table outside any timed
-    * region. tools/IncrementalProbe is the only intended caller.
-    */
-  private[graft] def warmIncrementalHistory(
-      s: org.apache.spark.sql.SparkSession, d: String, splitId: Long): Unit = {
-    incrementalHistoryRoot(s, d, splitId); ()
-  }
 
   val dedupMinhashIncremental = QueryDef(
     "q_dedup_minhash_incremental",

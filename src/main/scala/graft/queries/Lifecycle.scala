@@ -1375,7 +1375,8 @@ object Lifecycle extends QueryModule {
     * harmonic over retail price. geo = exp(avg(ln x)), harmonic =
     * n / Σ(1/x) — both double sums whose summation order differs
     * between engines; round(,6) then float-cast absorbs the ulp band
-    * (the q_stats convention), validated at 3 SFs + RepeatCheck.
+    * (the q_stats convention), validated at 3 SFs and 6 identical
+    * repeated runs (NOTES.md, "What rounds 6–7 did", item 8).
     * One shuffle on the ~25-brand key; windows nowhere.
     */
   val harmonicGeo = QueryDef(

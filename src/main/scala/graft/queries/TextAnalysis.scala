@@ -232,7 +232,8 @@ object TextAnalysis extends QueryModule {
       // stays one map-side codegen stage at any corpus size.
       // native kernel: raw (with-duplicates) bigram list — the
       // interpreted transform∘sequence twin was the query's dominant
-      // cost (LangIdProbe: 1.6s of string building at sf0.1)
+      // cost (1.6 s of string building at sf0.1: NOTES.md,
+      // "Dev-probe measurements")
       graft.functions.expressions.CharNgrams.register(s)
       def bigrams(c: org.apache.spark.sql.Column) = call_function(
         graft.functions.expressions.CharNgrams.name, c, lit(2))
@@ -867,8 +868,8 @@ object TextAnalysis extends QueryModule {
       // tokens bound to an attribute before shingling: inline
       // shingles5(tokens(text)) re-runs the split+filter for every
       // element_at inside the (interpreted) transform lambda — ~15×
-      // slower on this corpus (ContamProbe: 5.8s → 0.4s for the
-      // train-side explode at sf0.1)
+      // slower on this corpus (5.8 s → 0.4 s for the train-side
+      // explode at sf0.1: NOTES.md, "Dev-probe measurements")
       graft.functions.expressions.WordNgrams.register(s)
       def grams(df: org.apache.spark.sql.DataFrame) = df
         .select(col("doc_id"), TF.tokens(col("text")).as("toks"))

@@ -1871,12 +1871,18 @@ object SnapshotTable {
 
   /** The full published feed as a batch DataFrame (commit_version is
     * the partition column — filter on it for a version range and the
-    * scan prunes to those directories).
+    * scan prunes to those directories). The scan names each
+    * `commit_version=N` directory under a `_cdc` base path: Spark's
+    * hidden-name check warns "All paths were ignored" on an
+    * underscore-named root path, and a name with `=` passes it.
     */
   def readChanges(spark: SparkSession, root: String): DataFrame = {
-    require(publishedChangeVersions(root).nonEmpty,
+    val versions = publishedChangeVersions(root)
+    require(versions.nonEmpty,
       s"no published change batches at $root — call publishChanges first")
-    spark.read.parquet(cdcDir(root).toString)
+    val dir = cdcDir(root)
+    spark.read.option("basePath", dir.toString)
+      .parquet(versions.map(v => dir.resolve(s"commit_version=$v").toString): _*)
   }
 
   /** Continuous CDC tail: a streaming DataFrame over the published

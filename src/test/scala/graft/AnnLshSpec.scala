@@ -100,7 +100,7 @@ class AnnLshSpec extends AnyFunSuite {
     // On this 500-vector fixture: 4 planes → ~31-row buckets, measured
     // recall 0.75; 8 planes → ~2.4-row buckets, recall ~0. The spec
     // locks the tradeoff direction and a margin-below-measured floor at
-    // the recall-friendly setting (see LshRecallProbe for the sweep).
+    // the recall-friendly setting (NOTES.md, "Dev-probe measurements").
     val r4 = recallAt10(4)
     val r8 = recallAt10(8)
     assert(r4 >= 0.5, s"4-plane recall@10 collapsed: $r4")

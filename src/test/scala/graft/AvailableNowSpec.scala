@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
@@ -16,7 +16,7 @@ class AvailableNowSpec extends AnyFunSuite {
 
   /** Write `df` as a single parquet part-file named `name` in dir. */
   private def addFile(df: org.apache.spark.sql.DataFrame, dir: Path, name: String): Unit = {
-    val stage = Files.createTempDirectory("graft-an-stage")
+    val stage = Paths.get(Artifacts.exitRoot("graft-an-stage"))
     df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
     val part = Files.list(stage).filter(_.toString.endsWith(".parquet"))
       .findFirst().get()
@@ -25,9 +25,9 @@ class AvailableNowSpec extends AnyFunSuite {
 
   test("AvailableNow drains present files in bounded chunks, then stops; " +
       "a second run with the same checkpoint is exactly-once") {
-    val src = Files.createTempDirectory("graft-an-src")
-    val sink = Files.createTempDirectory("graft-an-sink").toString
-    val ckpt = Files.createTempDirectory("graft-an-ckpt").toString
+    val src = Paths.get(Artifacts.exitRoot("graft-an-src"))
+    val sink = Artifacts.exitRoot("graft-an-sink")
+    val ckpt = Artifacts.exitRoot("graft-an-ckpt")
 
     val orders = Tables.orders(spark, TestSpark.sf0001).localCheckpoint()
     val total = orders.count()
@@ -58,16 +58,16 @@ class AvailableNowSpec extends AnyFunSuite {
 
   test("a catch-up against a not-yet-populated source no-ops instead of crashing; " +
       "an explicit schema starts a (trivially empty) bounded run") {
-    val src = Files.createTempDirectory("graft-an-empty")
-    val sink = Files.createTempDirectory("graft-an-esink").toString
-    val ckpt1 = Files.createTempDirectory("graft-an-eckpt1").toString
+    val src = Paths.get(Artifacts.exitRoot("graft-an-empty"))
+    val sink = Artifacts.exitRoot("graft-an-esink")
+    val ckpt1 = Artifacts.exitRoot("graft-an-eckpt1")
 
     // no schema, no files → the nightly cron's "nothing to do" path
     assert(EventStreams.backfillAvailableNow(spark, src.toString, sink, ckpt1).isEmpty,
       "empty source without a schema must no-op")
 
     // explicit schema → the stream starts, drains zero files, stops
-    val ckpt2 = Files.createTempDirectory("graft-an-eckpt2").toString
+    val ckpt2 = Artifacts.exitRoot("graft-an-eckpt2")
     val schema = Tables.orders(spark, TestSpark.sf0001).schema
     val q = EventStreams.backfillAvailableNow(
       spark, src.toString, sink, ckpt2, schema = Some(schema))

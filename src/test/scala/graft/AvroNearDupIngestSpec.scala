@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.{SnapshotTable, Sources}
 import graft.streaming.NearDupSink
 import org.apache.spark.sql.functions._
@@ -23,9 +21,9 @@ class AvroNearDupIngestSpec extends AnyFunSuite {
 
   test("avro landing dir → streaming near-dup ingest finds cross-file dups") {
     import spark.implicits._
-    val landing = Files.createTempDirectory("avro_landing").toString
-    val ckpt = Files.createTempDirectory("avro_landing_ckpt").toString
-    val root = Files.createTempDirectory("avro_neardup").toString
+    val landing = Artifacts.exitRoot("avro_landing")
+    val ckpt = Artifacts.exitRoot("avro_landing_ckpt")
+    val root = Artifacts.exitRoot("avro_neardup")
 
     def dropFile(rows: Seq[(Long, String)]): Unit =
       Sources.writeAvro(rows.toDF("doc_id", "text").coalesce(1), landing, mode = "append")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path}
 import java.sql.{Date, Timestamp}
 
 import scala.jdk.CollectionConverters._
@@ -23,11 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class AvroSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmpDir(tag: String): String = {
-    val d: Path = Files.createTempDirectory(s"gavro_$tag")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmpDir(tag: String): String = Artifacts.exitRoot(s"gavro_$tag")
 
   private val fullSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),

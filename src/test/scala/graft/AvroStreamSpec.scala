@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.Sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class AvroStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(tag: String): String = {
-    val d = Files.createTempDirectory(s"gavro_stream_$tag")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmp(tag: String): String = Artifacts.exitRoot(s"gavro_stream_$tag")
 
   private def drop(dir: String, from: Int, until: Int): Unit =
     Sources.writeAvro(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.bus.InMemoryLog
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,11 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class BusSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(tag: String): String = {
-    val d = Files.createTempDirectory(s"gbus_$tag")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmp(tag: String): String = Artifacts.exitRoot(s"gbus_$tag")
 
   test("exactly-once across restart; per-partition order preserved") {
     val log = "bus_once"

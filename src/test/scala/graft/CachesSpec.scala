@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * #7): the memos bound a Verify/Bench run's rework, not a service's
   * memory, and a clear leaves no temp root behind. The suite also
   * holds the pin seam: only `Artifacts` pins or releases a DataFrame,
-  * and a write that fails releases what it pinned.
+  * and a write that fails releases what it pinned. And the session
+  * seam: only `Graft.session` builds a SparkSession, so every tool runs
+  * the engine's configuration, and suites take temp dirs from
+  * `Artifacts.exitRoot`, which deletes them at JVM exit.
   */
 class CachesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -149,14 +152,18 @@ class CachesSpec extends AnyFunSuite {
       s"pinned RDDs left by VectorIndex.upsert: $vLeft, by TextIndex.append: $tLeft")
   }
 
-  test("only Artifacts pins a DataFrame or releases its blocks") {
+  /** Every `.scala` file under `dir` (relative to the project root). */
+  private def scalaFiles(dir: java.nio.file.Path): List[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
+    assert(java.nio.file.Files.isDirectory(dir), s"no sources at ${dir.toAbsolutePath}")
+    val walk = java.nio.file.Files.walk(dir)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  test("only Artifacts pins a DataFrame or releases its blocks") {
     val src = java.nio.file.Paths.get("src", "main", "scala")
-    assert(java.nio.file.Files.isDirectory(src), s"no sources at ${src.toAbsolutePath}")
-    val walk = java.nio.file.Files.walk(src)
-    val files =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
+    val files = scalaFiles(src)
     // a hand-written release (a `try … finally` one included) has to
     // call `unpersist` or the old `freeLocalCheckpoint` helper
     val banned =
@@ -166,6 +173,24 @@ class CachesSpec extends AnyFunSuite {
     }
     assert(files.size > 50, s"only ${files.size} sources found under $src")
     if (hits.nonEmpty) fail(s"pin or release outside Artifacts:\n${hits.mkString("\n")}")
+  }
+
+  test("only Graft.session builds a session; suites make temp dirs through Artifacts") {
+    def holding(dir: java.nio.file.Path, needle: String, allowed: Set[String]) =
+      scalaFiles(dir).filter(f => !allowed(f.getFileName.toString) &&
+        java.nio.file.Files.readString(f).contains(needle))
+    // each needle is split so that this file does not match it
+    val builders = holding(java.nio.file.Paths.get("src"), "SparkSession" + ".builder",
+      Set("Graft.scala", "ExtensionsSpec.scala"))
+    // the four fuzz, drift and race suites delete their tables in afterAll
+    val tempDirs = holding(java.nio.file.Paths.get("src", "test"), "createTemp" + "Directory",
+      Set("SnapshotFuzzSpec.scala", "SnapshotPruneFuzzSpec.scala",
+        "SnapshotRaceFuzzSpec.scala", "SnapshotSchemaDriftSpec.scala"))
+    def section(what: String, files: Seq[java.nio.file.Path]) =
+      if (files.isEmpty) Nil else s"${files.size} files $what:" +: files.map(_.toString)
+    val report = section("build their own SparkSession", builders) ++
+      section("make temp dirs outside Artifacts.exitRoot", tempDirs)
+    if (report.nonEmpty) fail(report.mkString("\n"))
   }
 
   test("a JVM that exits without a clear deletes its temp roots and events layout") {

@@ -33,8 +33,7 @@ class CboReorderSpec extends AnyFunSuite {
     * Stats make the (a⋈c)-first order obviously cheaper.
     */
   private lazy val tables: Unit = {
-    val warehouse =
-      java.nio.file.Files.createTempDirectory("graft-cbo-").toString
+    val warehouse = Artifacts.exitRoot("graft-cbo-")
     base.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$warehouse'")
     val li = Tables.lineitem(base, TestSpark.sf0001)
     li.select(col("l_orderkey").as("k_a"), col("l_partkey").as("j_a"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,7 +20,7 @@ class EventsEncodingSpec extends AnyFunSuite {
     assert(native.schema("ts").dataType === TimestampType)
 
     // legacy twin: ts as int64 nanoseconds (what nanosAsLong surfaces)
-    val legacyDir = Files.createTempDirectory("graft-events-legacy").toString
+    val legacyDir = Artifacts.exitRoot("graft-events-legacy")
     native
       .withColumn("ts", (unix_micros(col("ts")) * 1000L).cast(LongType))
       .write.mode("overwrite").parquet(s"$legacyDir/events.parquet")

@@ -25,7 +25,7 @@ class IncrementalViewSpec extends AnyFunSuite {
   }
 
   test("sum/count view maintained from per-commit deltas equals recompute") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ivm").toString
+    val root = Artifacts.exitRoot("graft-ivm")
     val base = Tables.orders(spark, TestSpark.sf0001)
     SnapshotTable.commit(spark, root, base)
     var view = sumView(SnapshotTable.read(spark, root, 1), keys, value)
@@ -56,7 +56,7 @@ class IncrementalViewSpec extends AnyFunSuite {
   }
 
   test("empty change batch leaves the view unchanged") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ivm2").toString
+    val root = Artifacts.exitRoot("graft-ivm2")
     val base = Tables.region(spark, TestSpark.sf0001)
     SnapshotTable.commit(spark, root, base)
     SnapshotTable.commit(spark, root, base)
@@ -70,7 +70,7 @@ class IncrementalViewSpec extends AnyFunSuite {
     // composition proof: a deleteWhere commit rewrites no data file,
     // yet its vector flows through the change feed as ordinary delete
     // rows, so the maintained view stays ≡ recompute
-    val root = java.nio.file.Files.createTempDirectory("graft-ivm-dv").toString
+    val root = Artifacts.exitRoot("graft-ivm-dv")
     val base = Tables.orders(spark, TestSpark.sf0001)
     SnapshotTable.commit(spark, root, base)
     var view = sumView(SnapshotTable.read(spark, root, 1), keys, value)

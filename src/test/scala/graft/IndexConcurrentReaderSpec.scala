@@ -20,8 +20,7 @@ class IndexConcurrentReaderSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def fresh(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+  private def fresh(tag: String): String = Artifacts.exitRoot(s"graft-$tag")
 
   test("text: pinned BM25 is bit-identical across ingest, delete, optimize") {
     val root = fresh("ti-reader")
@@ -84,9 +83,6 @@ class IndexConcurrentReaderSpec extends AnyFunSuite {
     // unchanged by the fold itself
     assert(TextIndex.searchRanked(spark, root, terms, 10).collect().toSeq ==
       TextIndex.searchRanked(spark, root, terms, 10, at = pinC).collect().toSeq)
-
-    SnapshotTable.deleteTree(java.nio.file.Paths.get(root))
-    SnapshotTable.deleteTree(java.nio.file.Paths.get(txn))
   }
 
   test("vector: pinned candidates are bit-identical across upsert and delete") {
@@ -118,7 +114,5 @@ class IndexConcurrentReaderSpec extends AnyFunSuite {
     assert(probe(v2) == at2, "pinned reader moved across a concurrent delete")
     val head = probe(SnapshotTable.currentVersion(root))
     assert(!head.exists(_._1 == 1L), "deleted vector still probes at head")
-
-    SnapshotTable.deleteTree(java.nio.file.Paths.get(root))
   }
 }

@@ -86,8 +86,7 @@ class JoinRouterSpec extends AnyFunSuite {
 
   test("enrolled snapshot-table stats answer the row count with zero jobs") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-jr-stats").toString + "/t.parquet"
+    val root = Artifacts.exitRoot("graft-jr-stats") + "/t.parquet"
     val df = (1L to 500L).map(i => (i % 7, i)).toDF("k", "v")
     graft.sources.TableStats.enroll(root, "k", Seq("k"))
     graft.sources.SnapshotTable.commit(spark, root, df)

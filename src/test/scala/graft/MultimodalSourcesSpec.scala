@@ -69,7 +69,7 @@ class MultimodalSourcesSpec extends AnyFunSuite {
   }
 
   test("csv and json sources round-trip a table slice") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-src").toString
+    val tmp = Artifacts.exitRoot("graft-src")
     val slice = Tables.nation(spark, TestSpark.sf0001)
     val schema = slice.schema
 
@@ -85,7 +85,7 @@ class MultimodalSourcesSpec extends AnyFunSuite {
   }
 
   test("orc source/sink round-trip with partition layout") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-orc").toString
+    val tmp = Artifacts.exitRoot("graft-orc")
     val slice = Tables.orders(spark, TestSpark.sf0001)
     Sources.writeOrc(slice, s"$tmp/orders_orc", partitionBy = Seq("o_orderstatus"))
     val back = Sources.orc(spark, s"$tmp/orders_orc")
@@ -101,7 +101,7 @@ class MultimodalSourcesSpec extends AnyFunSuite {
   }
 
   test("xml source/sink round-trip (Spark 4 built-in)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-xml").toString
+    val tmp = Artifacts.exitRoot("graft-xml")
     // XML has no timestamp-precision contract like parquet; use the
     // integer/string dim table for an exact round-trip
     val slice = Tables.nation(spark, TestSpark.sf0001)
@@ -115,7 +115,7 @@ class MultimodalSourcesSpec extends AnyFunSuite {
   }
 
   test("line-text source reads a raw corpus one line per row") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-txt").toString
+    val tmp = Artifacts.exitRoot("graft-txt")
     val docs = Tables.documents(spark, TestSpark.sf0001).limit(50)
       .select(regexp_replace(col("text"), "[\\r\\n]", " ").as("value"))
     docs.write.mode("overwrite").text(s"$tmp/corpus")
@@ -129,7 +129,7 @@ class MultimodalSourcesSpec extends AnyFunSuite {
   }
 
   test("binaryFile source ingests raw files with glob pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bin")
+    val dir = java.nio.file.Paths.get(Artifacts.exitRoot("graft-bin"))
     def put(name: String, bytes: Array[Byte]): Unit =
       java.nio.file.Files.write(dir.resolve(name), bytes)
     put("a.img", Array[Byte](1, 2, 3, 4))
@@ -161,7 +161,7 @@ class MultimodalSourcesSpec extends AnyFunSuite {
       StructField("k", LongType), StructField("part", StringType)))
     val df = Sources.inMemory(spark,
       Seq(Row(1L, "a"), Row(2L, "b"), Row(3L, "a")), schema)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sink").toString
+    val tmp = Artifacts.exitRoot("graft-sink")
     Sources.writeParquet(df, s"$tmp/out", partitionBy = Seq("part"))
     val back = spark.read.parquet(s"$tmp/out")
     assert(back.count() === 3)

@@ -91,7 +91,7 @@ class NullSemanticsSpec extends AnyFunSuite {
       (40L, nanos(80), 4L, "view", 1.0, "{}"),
       (41L, nanos(100), 4L, "purchase", 1.0, "{}"),
       (42L, nanos(120), 4L, "click", 1.0, "{}"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-asof").toString
+    val tmp = Artifacts.exitRoot("graft-asof")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val out = SparkEntry.queries("q_join_asof_nearest")(spark, tmp)

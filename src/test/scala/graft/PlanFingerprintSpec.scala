@@ -16,14 +16,33 @@ import org.scalatest.funsuite.AnyFunSuite
   *    small relative to facts but far above any auto threshold.
   *    Removing a hint flips the join to SortMergeJoin here and fails.
   *
-  * Regenerate after an intentional plan change:
-  * `sbt "Test/runMain graft.FingerprintDump"`.
+  * Regenerate after an intentional plan change: run
+  * `sbt "testOnly graft.PlanFingerprintSpec"`; a mismatch prints every
+  * actual fingerprint as a paste-ready `"q" -> Map(...)` line.
   */
 class PlanFingerprintSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def fingerprint(name: String): Map[String, Int] =
-    FingerprintDump.fingerprint(spark, name, TestSpark.sf0001)
+  private val markers = Seq(
+    "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin", "CartesianProduct",
+    "Exchange hashpartitioning", "Exchange rangepartitioning",
+    "BroadcastExchange", "TakeOrderedAndProject", "WindowGroupLimit",
+    "ExistenceJoin")
+
+  /** Marker counts in the static (AQE off) physical plan at sf0.001. */
+  private def fingerprint(name: String): Map[String, Int] = {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val p = SparkEntry.queries(name)(spark, TestSpark.sf0001)
+        .queryExecution.executedPlan.toString
+      markers.map(m => m -> m.r.findAllIn(p).size).filter(_._2 > 0).toMap
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  private def pinLine(name: String, fp: Map[String, Int]): String =
+    fp.toSeq.sorted.map { case (k, v) => s""""$k" -> $v""" }
+      .mkString(s""""$name" -> Map(""", ", ", "),")
 
   private def withNoAutoBroadcast[T](f: => T): T = {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -92,11 +111,12 @@ class PlanFingerprintSpec extends AnyFunSuite {
   )
 
   test("plan fingerprints are unchanged (default planner)") {
-    val diffs = expectedDefault.toSeq.sortBy(_._1).flatMap { case (name, want) =>
-      val got = fingerprint(name)
-      if (got == want) None else Some(s"$name:\n  want $want\n  got  $got")
+    val got = expectedDefault.keys.toSeq.sorted.map(n => n -> fingerprint(n))
+    val diffs = got.collect { case (name, fp) if fp != expectedDefault(name) =>
+      s"$name:\n  want ${expectedDefault(name)}\n  got  $fp"
     }
-    assert(diffs.isEmpty, diffs.mkString("\n"))
+    if (diffs.nonEmpty)
+      fail((diffs ++ ("actual pins:" +: got.map((pinLine _).tupled))).mkString("\n"))
   }
 
   test("explicit broadcast hints survive with auto-broadcast disabled") {

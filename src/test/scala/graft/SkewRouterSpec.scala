@@ -116,7 +116,7 @@ class SkewRouterSpec extends AnyFunSuite {
     * derives a day column).
     */
   test("auto queries route plain vs 2level from the seeded stat, per family") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-skewroute")
+    val dir = java.nio.file.Paths.get(Artifacts.exitRoot("graft-skewroute"))
     java.nio.file.Files.createSymbolicLink(
       dir.resolve("events.parquet"),
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"))

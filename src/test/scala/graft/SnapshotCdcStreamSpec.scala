@@ -87,4 +87,36 @@ class SnapshotCdcStreamSpec extends AnyFunSuite {
       assert(view.exceptAll(fresh).isEmpty && fresh.exceptAll(view).isEmpty)
     } finally q.stop()
   }
+
+  test("reading and tailing the feed logs no ignored-path warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val root = seeded()
+    SnapshotTable.publishChanges(spark, root, Seq("n_nationkey"))
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("cdc-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        warnings.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource").asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try {
+      assert(SnapshotTable.readChanges(spark, root).count() === 29L)
+      val q = SnapshotTable.streamChanges(spark, root)
+        .writeStream.format("memory").queryName("cdc_quiet").start()
+      try q.processAllAvailable() finally q.stop()
+      assert(spark.table("cdc_quiet").count() === 29L)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    val ignored = warnings.toArray.map(_.toString).filter(_.contains("paths were ignored"))
+    if (ignored.nonEmpty) fail(ignored.mkString("\n"))
+  }
 }

@@ -102,7 +102,7 @@ class StreamingCapstoneSpec extends AnyFunSuite {
 
   test("killed-and-resumed chain: sessionize → snapshot upsert → view ≡ batch twin") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-capstone-").toString
+    val dir = Artifacts.exitRoot("graft-capstone-")
     val srcDir = s"$dir/src"
     val chk = s"$dir/chk"
     val viewChk = s"$dir/viewchk"

@@ -28,7 +28,7 @@ class StreamingFileSinkSpec extends AnyFunSuite {
   test("tumblingCounts parquet sink: append emits closed windows; checkpoint resumes") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_tumbling")
+    val dir = Artifacts.exitRoot("graft_sink_tumbling")
     val out = s"$dir/out"
     val chk = s"$dir/chk"
     val input = MemoryStream[Ev]
@@ -68,7 +68,7 @@ class StreamingFileSinkSpec extends AnyFunSuite {
   test("dedupEvents parquet sink round-trip drops duplicates durably") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_dedup")
+    val dir = Artifacts.exitRoot("graft_sink_dedup")
     val input = MemoryStream[Ev]
     val q = EventStreams.dedupEvents(input.toDF())
       .writeStream.format("parquet")

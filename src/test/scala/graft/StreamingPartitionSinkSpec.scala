@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import graft.sources.SnapshotTable
 import graft.streaming.{Event, SnapshotSink}
@@ -22,7 +21,7 @@ class StreamingPartitionSinkSpec extends AnyFunSuite {
   test("micro-batches overwrite only the partitions they carry; replay converges") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("snappart").toString
+    val root = Artifacts.exitRoot("snappart")
 
     // partition key = user_id (the per-entity shard of a re-stated feed)
     val input = MemoryStream[Event]
@@ -64,7 +63,7 @@ class StreamingPartitionSinkSpec extends AnyFunSuite {
 
   test("concurrent batches on disjoint partitions both survive") {
     import spark.implicits._
-    val root = Files.createTempDirectory("snappart-race").toString
+    val root = Artifacts.exitRoot("snappart-race")
     // seed both partitions
     SnapshotSink.overwritePartitionsBatch(root, "user_id")(
       Seq(Event(1, t(0), 1, "click", 1.0), Event(2, t(0), 2, "view", 2.0)).toDF(), 0L)

@@ -27,8 +27,8 @@ class StreamingViewSpec extends AnyFunSuite {
   }
 
   test("streamed change feed maintains a versioned view ≡ recompute") {
-    val tableRoot = java.nio.file.Files.createTempDirectory("graft-sv-base").toString
-    val viewRoot = java.nio.file.Files.createTempDirectory("graft-sv-view").toString
+    val tableRoot = Artifacts.exitRoot("graft-sv-base")
+    val viewRoot = Artifacts.exitRoot("graft-sv-view")
     val base = Tables.orders(spark, TestSpark.sf0001)
 
     SnapshotTable.commit(spark, tableRoot, base)

@@ -16,7 +16,7 @@ class ZOrderSpec extends AnyFunSuite {
   private val files = 16
 
   private def commitLayout(tag: String, zordered: Boolean): String = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-z-$tag").toString
+    val root = Artifacts.exitRoot(s"graft-z-$tag")
     val base = Tables.orders(spark, TestSpark.sf001)
       .withColumn("o_days",
         datediff(col("o_orderdate").cast("date"),

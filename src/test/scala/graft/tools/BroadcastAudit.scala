@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.util.concurrent.{Callable, Executors}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -18,12 +17,12 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
   * rows, data-proportional sides grow with the corpus.
   *
   * Usage: `sbt "Test/runMain graft.tools.BroadcastAudit <dirA> <dirB>
-  * [q_name,...]"` — runs every registered query at both dirs under
-  * the bench session configs with the noop-sink write action (count
-  * prunes subtrees, hiding their broadcasts), walks the FINAL
-  * post-AQE executed plan (query stages + subqueries), and reports
-  * each query's largest broadcast at both scales. FLAGGED = grew
-  * >4x AND exceeds 100k rows at dirB.
+  * [q_name,...]"` — runs every registered query at both dirs in the
+  * engine's session (`Graft.session`), each through its own plan
+  * (`PlanOf.runFinal`: a count would prune subtrees, hiding their
+  * broadcasts), walks the FINAL post-AQE executed plan (query stages
+  * + subqueries), and reports each query's largest broadcast at both
+  * scales. FLAGGED = grew >4x AND exceeds 100k rows at dirB.
   */
 object BroadcastAudit {
   /** Max numOutputRows over every broadcast exchange in the final
@@ -49,23 +48,12 @@ object BroadcastAudit {
     (walk(root) :+ 0L).max
   }
 
-  private def session(cpus: String): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-    .config("spark.scheduler.mode", "FAIR")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   def main(args: Array[String]): Unit = {
     val dirA = args(0); val dirB = args(1)
     val filter: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     val conc = sys.env.getOrElse("SPARK_GRAFT_AUDIT_CONC", "4").toInt
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     val selected = filter.fold(graft.SparkEntry.queries)(f =>
       graft.SparkEntry.queries.view.filterKeys(f).toMap).toSeq.sortBy(_._1)
@@ -77,9 +65,7 @@ object BroadcastAudit {
         name -> pool.submit(new Callable[Long] {
           override def call(): Long =
             try {
-              val df = fn(spark, dir)
-              df.write.format("noop").mode("overwrite").save()
-              maxBroadcastRows(df.queryExecution.executedPlan)
+              maxBroadcastRows(PlanOf.runFinal(fn(spark, dir)))
             } catch {
               case e: Throwable =>
                 System.err.println(s"[audit] $name at $dir FAILED: $e"); -1L

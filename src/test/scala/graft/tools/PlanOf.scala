@@ -1,32 +1,36 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{SparkPlan, SQLExecution}
 
 /** Dev tool: print the FINAL (post-AQE) executed plan of one
-  * registered query at any dataset dir, after running it with the
-  * bench session configs. `sbt "Test/runMain graft.tools.PlanOf
-  * <query> <dir>"` — PlanDump covers sf0.001 with default configs;
-  * this answers "what plan did the bench actually run at scale".
+  * registered query at any dataset dir, after running it in the
+  * engine's session (`Graft.session`, the one Bench and Verify use).
+  * `sbt "Test/runMain graft.tools.PlanOf <query> <dir>"` answers
+  * "what plan did the bench actually run at this scale".
   */
 object PlanOf {
+  /** Run `df` through its own QueryExecution and return the final
+    * executed plan. An action such as count or a write plans a new
+    * query around `df`, which leaves `df`'s adaptive plan unexecuted
+    * (isFinalPlan=false) and its metrics empty.
+    */
+  def runFinal(df: DataFrame): SparkPlan = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("dev-tool")) {
+      qe.executedPlan.execute().foreach(_ => ())
+    }
+    qe.executedPlan
+  }
+
   def main(args: Array[String]): Unit = {
     val name = args(0); val dir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
-    val df = graft.SparkEntry.queries(name)(spark, dir)
-    df.count()
+    val plan = runFinal(graft.SparkEntry.queries(name)(spark, dir))
     println(f"[planof] $name ran in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    println(df.queryExecution.executedPlan.toString)
+    println(plan.toString)
     spark.stop()
   }
 }
