@@ -40,10 +40,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - bytes per row: [[hashRelationRowBytes]], a conservative
   *    UnsafeHashedRelation estimate (per-entry map + row overhead
   *    plus the projected fields);
-  *  - budget: `spark.graft.join.buildMemFraction` (default 0.04) ×
-  *    executor heap ÷ task slots. Heap defaults to this JVM's
-  *    Runtime.maxMemory (local mode: the one shared JVM; on a cluster
-  *    set `spark.graft.join.executorMemBytes` to the executor size).
+  *  - budget: [[BuildMemFraction]] (a constant 0.04) × executor heap
+  *    ÷ task slots. Heap defaults to this JVM's Runtime.maxMemory
+  *    (local mode: the one shared JVM; on a cluster set
+  *    `spark.graft.join.executorMemBytes` to the executor size).
   *    `spark.graft.join.buildBytesPerTaskMax` overrides the whole
   *    derivation with an absolute per-task budget (also the spec's
   *    deterministic routing lever).
@@ -102,8 +102,10 @@ object JoinRouter {
   private def confLong(spark: SparkSession, key: String): Option[Long] =
     spark.conf.getOption(key).map(_.toLong)
 
-  private def confDouble(spark: SparkSession, key: String): Option[Double] =
-    spark.conf.getOption(key).map(_.toDouble)
+  /** Share of the executor heap per task slot that one unspillable
+    * hash build may take (see object doc).
+    */
+  private val BuildMemFraction = 0.04
 
   /** The per-task unspillable-build budget in bytes (see object doc). */
   def buildBudgetBytesPerTask(spark: SparkSession): Long =
@@ -111,9 +113,7 @@ object JoinRouter {
       val heap = confLong(spark, "spark.graft.join.executorMemBytes")
         .getOrElse(Runtime.getRuntime.maxMemory())
       val slots = math.max(1, spark.sparkContext.defaultParallelism)
-      val fraction = confDouble(spark, "spark.graft.join.buildMemFraction")
-        .getOrElse(0.04)
-      (heap * fraction / slots).toLong
+      (heap * BuildMemFraction / slots).toLong
     }
 
   /** True when a SHUFFLE_HASH build of `totalRows` rows shaped like

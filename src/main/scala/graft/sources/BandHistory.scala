@@ -107,7 +107,7 @@ object BandHistory {
     * metadata-sized commits. No history-wide shuffle, window, or scan.
     */
   def append(spark: SparkSession, root: String, bands: DataFrame,
-      batchId: Long, maxConflictRetries: Int = 20): Unit = {
+      batchId: Long): Unit = {
     val slicedPlan = bands
       .select(col("doc_id"), col("band"), col("sig"))
       .withColumn("batch_id", lit(batchId))
@@ -140,11 +140,10 @@ object BandHistory {
       // candidate-sized (≤ batch buckets × cap), so the extra job is
       // metadata-cheap.
       graft.Artifacts.pinned(satDelta, eager = true) { newSat =>
-        commitWithRetry(spark, bandsRoot(root), sliced, "slice",
-          maxConflictRetries, statsCols = Seq("slice"))
+        SnapshotTable.restatePartitions(spark, bandsRoot(root), sliced, "slice",
+          statsCols = Seq("slice"))
         if (!newSat.isEmpty)
-          commitWithRetry(spark, satRoot(root), newSat, "batch_id",
-            maxConflictRetries)
+          SnapshotTable.restatePartitions(spark, satRoot(root), newSat, "batch_id")
       }
     }
   }
@@ -216,8 +215,8 @@ object BandHistory {
     * same watermark rewrites the same consolidated slices and finds
     * nothing left to drop.
     */
-  def optimize(spark: SparkSession, root: String, sealedBelowBatchId: Long,
-      maxConflictRetries: Int = 20): Unit = {
+  def optimize(spark: SparkSession, root: String,
+      sealedBelowBatchId: Long): Unit = {
     val broot = bandsRoot(root)
     val hi = sealedBelowBatchId * Buckets - 1
     if (SnapshotTable.currentVersion(broot) == 0 || hi < 0) return
@@ -232,21 +231,8 @@ object BandHistory {
         val dropVals = sealedRows.filter(col("slice") >= 0)
           .select(col("slice")).distinct()
           .collect().map(_.getLong(0)).toSeq // ≤ batches×Buckets: metadata
-        var attempt = 0
-        var done = false
-        while (!done) {
-          val v = SnapshotTable.currentVersion(broot)
-          try {
-            SnapshotTable.commitPartitions(spark, broot, compacted, "slice",
-              readVersion = v, dropValues = dropVals)
-            done = true
-          } catch {
-            case e: SnapshotTable.SnapshotConflict =>
-              attempt += 1
-              if (attempt >= maxConflictRetries) throw e
-              Thread.sleep(math.min(1000L, 50L * attempt))
-          }
-        }
+        SnapshotTable.restatePartitions(spark, broot, compacted, "slice",
+          dropValues = dropVals)
       }
     }
   }
@@ -374,29 +360,6 @@ object BandHistory {
             case None => true
           }
         case _ => true // multi-value or stats-less file: keep
-      }
-    }
-  }
-
-  /** One partition-sliced commit with the streaming conflict-retry
-    * loop (same contract as SnapshotSink.overwritePartitionsBatch).
-    */
-  private def commitWithRetry(spark: SparkSession, tableRoot: String,
-      df: DataFrame, partitionCol: String, maxConflictRetries: Int,
-      statsCols: Seq[String] = Nil): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val v = SnapshotTable.currentVersion(tableRoot)
-      try {
-        SnapshotTable.commitPartitions(spark, tableRoot, df, partitionCol,
-          readVersion = if (v == 0) -1 else v, statsCols = statsCols)
-        done = true
-      } catch {
-        case e: SnapshotTable.SnapshotConflict =>
-          attempt += 1
-          if (attempt >= maxConflictRetries) throw e
-          Thread.sleep(math.min(1000L, 50L * attempt))
       }
     }
   }

@@ -99,6 +99,56 @@ object SnapshotTable {
     */
   final class SnapshotConflict(msg: String) extends RuntimeException(msg)
 
+  /** Runs of a read-modify-write under [[retrying]] before its last
+    * conflict propagates.
+    */
+  private val ConflictAttempts = 20
+
+  /** Slot claims one commit takes before it gives up on the race
+    * (casCommit, commitPartitions and commitAll's claim phase).
+    */
+  private[sources] val ClaimAttempts = 10
+
+  /** The one conflict-retry policy of the snapshot writers: run the
+    * read-modify-write `body`, and re-run it whenever it throws
+    * [[SnapshotConflict]] — the body re-reads the new head and
+    * re-derives, which is what the conflict asks for. After
+    * [[ConflictAttempts]] runs the last conflict propagates; any
+    * other exception passes through at once.
+    *
+    * Each re-run backs off `min(1000, 50 × attempt)` ms first: a
+    * commit throws the conflict BEFORE any heavy work, so an
+    * in-flight overlapping claim (a writer between claim and
+    * publish) would otherwise burn every attempt in milliseconds and
+    * kill a streaming query where a short wait succeeds.
+    */
+  private[graft] def retrying[T](body: => T): T = {
+    def run(attempt: Int): T =
+      try body
+      catch {
+        case _: SnapshotConflict if attempt < ConflictAttempts =>
+          Thread.sleep(math.min(1000L, 50L * attempt))
+          run(attempt + 1)
+      }
+    run(1)
+  }
+
+  /** Re-state the partitions of `partitionCol` that `df` carries (and
+    * drop `dropValues`) as a read-modify-write of the current head,
+    * under [[retrying]]: each attempt re-reads the head and
+    * recomposes through [[commitPartitions]]. The streaming sinks'
+    * partition-sliced commit. Returns the committed version.
+    */
+  private[graft] def restatePartitions(spark: SparkSession, root: String,
+      df: DataFrame, partitionCol: String, statsCols: Seq[String] = Nil,
+      dropValues: Seq[Any] = Nil): Int =
+    retrying {
+      val v = currentVersion(root)
+      commitPartitions(spark, root, df, partitionCol,
+        readVersion = if (v == 0) -1 else v, statsCols = statsCols,
+        dropValues = dropValues)
+    }
+
   private def logDir(root: String) = Paths.get(root, "_log")
 
   /** The DV machinery stamps `__file`/`__idx` helper columns and joins
@@ -355,7 +405,7 @@ object SnapshotTable {
     */
   def commit(spark: SparkSession, root: String, df: DataFrame,
       partitions: Seq[String] = Nil, readVersion: Int = -1,
-      maxRetries: Int = 10, statsCols: Seq[String] = Nil,
+      statsCols: Seq[String] = Nil,
       setCols: Seq[String] = Nil, setCap: Int = 1024,
       bloomCols: Seq[String] = Nil): Int = {
     Files.createDirectories(logDir(root))
@@ -379,7 +429,7 @@ object SnapshotTable {
       writeManifests(spark, s, baseDir(root, base), Set.empty,
         statsCols, setCols, setCap, bloomCols)
     }
-    val committed = casCommit(root, staging, mine, readVersion, maxRetries)
+    val committed = casCommit(root, staging, mine, readVersion)
     // enrolled routing stats refresh AFTER publish (advisory — a stats
     // failure stales the scalar, never the commit); no-op one dir
     // check for non-enrolled tables. Full-content commit → recompute
@@ -394,7 +444,7 @@ object SnapshotTable {
     * write vs hard-links) but follow one commit protocol.
     */
   private def casCommit(root: String, staging: Path, mine: Set[String],
-      readVersion: Int, maxRetries: Int): Int = {
+      readVersion: Int): Int = {
     var attempt = 0
     try {
       while (true) {
@@ -405,9 +455,9 @@ object SnapshotTable {
         if (backend.claim(root, base + 1, claimFile(staging)))
           return publishClaimed(root, staging, base + 1)
         attempt += 1
-        if (attempt >= maxRetries)
+        if (attempt >= ClaimAttempts)
           throw new SnapshotConflict(
-            s"lost the commit race $maxRetries times at $root; giving up")
+            s"lost the commit race $ClaimAttempts times at $root; giving up")
         // loop: re-read head, re-check conflicts, next slot
       }
       -1 // unreachable
@@ -581,7 +631,7 @@ object SnapshotTable {
     * never skipping an in-flight claim), because composition can only
     * read published data: skipping would publish a version that lacks
     * the in-flight writer's rows. A dead writer's orphan claim at
-    * head+1 therefore blocks this path until `maxRetries` (the
+    * head+1 therefore blocks this path for [[ClaimAttempts]] claims (the
     * conservative trade documented on the class; recover by
     * [[abortClaim]]-ing the orphan after forensics).
     *
@@ -751,7 +801,7 @@ object SnapshotTable {
 
   def commitPartitions(spark: SparkSession, root: String, df: DataFrame,
       partitionCol: String, readVersion: Int = -1,
-      maxRetries: Int = 10, statsCols: Seq[String] = Nil,
+      statsCols: Seq[String] = Nil,
       setCols: Seq[String] = Nil, setCap: Int = 1024,
       dropValues: Seq[Any] = Nil,
       bloomCols: Seq[String] = Nil): Int = {
@@ -765,9 +815,9 @@ object SnapshotTable {
     var attempt = 0
     try {
       while (committed < 0) {
-        if (attempt >= maxRetries)
+        if (attempt >= ClaimAttempts)
           throw new SnapshotConflict(
-            s"lost the commit race $maxRetries times at $root; giving up")
+            s"lost the commit race $ClaimAttempts times at $root; giving up")
         val base = currentVersion(root) // compose against PUBLISHED data only
         // conflict check spans CLAIMED head: an in-flight overlapping
         // claim already invalidates our inputs (conservative, same rule
@@ -957,8 +1007,7 @@ object SnapshotTable {
     * read-modify-write against the version the predicate was
     * evaluated on. Returns the new version.
     */
-  def deleteWhere(spark: SparkSession, root: String, predicate: String,
-      maxRetries: Int = 10): Int = {
+  def deleteWhere(spark: SparkSession, root: String, predicate: String): Int = {
     import org.apache.spark.sql.functions.{col, expr}
     val cur = currentVersion(root)
     require(cur > 0, s"no committed version at $root")
@@ -983,7 +1032,7 @@ object SnapshotTable {
       newDv.write.mode("append").parquet(dvDir(s).toString)
       writeManifests(spark, s, Some(srcDir), linked, Nil, Nil, 1024, Nil)
     }
-    val committed = casCommit(root, staging, Set("*"), cur, maxRetries)
+    val committed = casCommit(root, staging, Set("*"), cur)
     TableStats.maintainFull(spark, root, committed) // enrolled stats (advisory)
     committed
   }
@@ -1006,7 +1055,7 @@ object SnapshotTable {
     * the merge is shuffle-free.
     */
   def mergeByKey(spark: SparkSession, root: String, source: DataFrame,
-      keyCols: Seq[String], maxRetries: Int = 10): Int = {
+      keyCols: Seq[String]): Int = {
     import org.apache.spark.sql.functions.{col, count, lit}
     require(keyCols.nonEmpty, "mergeByKey needs at least one key column")
     val dups = source.groupBy(keyCols.map(col): _*)
@@ -1109,7 +1158,7 @@ object SnapshotTable {
           .select(curDf.columns.map(col): _*)
           .unionByName(srcFull, allowMissingColumns = true)
       }
-    commit(spark, root, merged, readVersion = cur, maxRetries = maxRetries)
+    commit(spark, root, merged, readVersion = cur)
   }
 
   // ---- RESTORE -----------------------------------------------------
@@ -1122,8 +1171,7 @@ object SnapshotTable {
     * link operations, not a rewrite. Conflict-checked as a full-table
     * write against the current head.
     */
-  def restore(spark: SparkSession, root: String, toVersion: Int,
-      maxRetries: Int = 10): Int = {
+  def restore(spark: SparkSession, root: String, toVersion: Int): Int = {
     val cur = currentVersion(root)
     require(toVersion > 0 && toVersion <= cur,
       s"cannot restore to v$toVersion (latest is $cur)")
@@ -1142,7 +1190,7 @@ object SnapshotTable {
       validateConstraints(spark, root, s)
       writeManifests(spark, s, Some(srcDir), linked, Nil, Nil, 1024, Nil)
     }
-    val committed = casCommit(root, staging, Set("*"), cur, maxRetries)
+    val committed = casCommit(root, staging, Set("*"), cur)
     TableStats.maintainFull(spark, root, committed) // enrolled stats (advisory)
     committed
   }
@@ -1194,7 +1242,7 @@ object SnapshotTable {
     */
   def compactFiles(spark: SparkSession, root: String,
       targetFileBytes: Long = 128L << 20, rebalance: Boolean = false,
-      statsCols: Seq[String] = Nil, maxRetries: Int = 10): Int = {
+      statsCols: Seq[String] = Nil): Int = {
     val cur = currentVersion(root)
     require(cur > 0, s"no committed version at $root")
     val dir = Paths.get(root, s"v=$cur")
@@ -1202,8 +1250,7 @@ object SnapshotTable {
     val nOut = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     val live = read(spark, root, cur)
     val packed = if (rebalance) live.repartition(nOut) else live.coalesce(nOut)
-    commit(spark, root, packed, readVersion = cur,
-      maxRetries = maxRetries, statsCols = statsCols)
+    commit(spark, root, packed, readVersion = cur, statsCols = statsCols)
   }
 
   // ---- CHECK constraints -------------------------------------------
@@ -1509,22 +1556,27 @@ object SnapshotTable {
         carried(i) ++ fresh(i).filter(l => need(i)(key(l))))
   }
 
+  /** One manifest's lines split on tabs — `file, column, payload…` —
+    * keeping only `column`'s lines when one is given. One read of the
+    * file; an absent manifest has no lines, and callers skip lines of
+    * the wrong shape, so absent or malformed both mean "keep the file".
+    */
+  private def manifestLines(manifest: Path,
+      column: Option[String] = None): Iterator[Array[String]] =
+    if (!Files.exists(manifest)) Iterator.empty
+    else Files.readString(manifest).linesIterator.map(_.split('\t'))
+      .filter(l => l.length > 1 && column.forall(_ == l(1)))
+
   /** Driver-side bloom slice for one column of one version directory:
     * file → (m, k, bits). Absent manifest or malformed lines read as
     * "no filter" (callers keep those files conservatively).
     */
   private def loadBlooms(dir: Path,
-      column: String): Map[String, (Int, Int, Array[Long])] = {
-    val bf = bloomFile(dir)
-    if (!Files.exists(bf)) Map.empty
-    else Files.readString(bf).linesIterator.flatMap { line =>
-      line.split('\t') match {
-        case Array(f, cName, payload) if cName == column =>
-          BloomSidecar.decode(payload).map(f -> _)
-        case _ => None
-      }
+      column: String): Map[String, (Int, Int, Array[Long])] =
+    manifestLines(bloomFile(dir), Some(column)).flatMap {
+      case Array(f, _, payload) => BloomSidecar.decode(payload).map(f -> _)
+      case _ => None
     }.toMap
-  }
 
   /** Files of version `v` that can hold rows with `column = value`
     * according to the value-set manifest. Files with OVERFLOW, no
@@ -1542,16 +1594,10 @@ object SnapshotTable {
       case Some((m, k, bits)) => BloomSidecar.mightContain(bits, m, k, value)
       case None => true // no filter for this file: keep
     }
-    val sf = setsFile(dir)
-    if (!Files.exists(sf))
-      return all.filter(bloomKeep).map(n => s"$root/v=$v/$n")
     val sets: Map[String, String] =
-      Files.readString(sf).linesIterator.flatMap { line =>
-        line.split('\t') match {
-          case Array(f, cName, payload) if cName == column => Some(f -> payload)
-          case Array(f, cName) if cName == column => Some(f -> "") // empty set
-          case _ => None
-        }
+      manifestLines(setsFile(dir), Some(column)).collect {
+        case Array(f, _, payload) => f -> payload
+        case Array(f, _) => f -> "" // empty set
       }.toMap
     all.filter { f =>
       sets.get(f) match {
@@ -1663,18 +1709,10 @@ object SnapshotTable {
   def statsTable(spark: SparkSession, root: String, version: Int = -1): DataFrame = {
     import spark.implicits._
     val dir = Paths.get(root, s"v=${committedVersion(root, version)}")
-    val sf = statsFile(dir)
-    val rows: Seq[(String, String, String, String, Long)] =
-      if (!Files.exists(sf)) Nil
-      else Files.readString(sf).linesIterator.flatMap { line =>
-        line.split('\t') match {
-          case Array(f, c, mnV, mxV) =>
-            val sz = try Files.size(dir.resolve(f)) catch { case _: Exception => -1L }
-            Some((f, c, unescapeVal(mnV), unescapeVal(mxV), sz))
-          case _ => None
-        }
-      }.toSeq
-    rows.toDF("file", "column", "min", "max", "bytes")
+    manifestLines(statsFile(dir)).collect { case Array(f, c, mnV, mxV) =>
+      val sz = try Files.size(dir.resolve(f)) catch { case _: Exception => -1L }
+      (f, c, unescapeVal(mnV), unescapeVal(mxV), sz)
+    }.toSeq.toDF("file", "column", "min", "max", "bytes")
   }
 
   /** Driver-only stats-manifest slice: file → (min, max) for one
@@ -1686,18 +1724,10 @@ object SnapshotTable {
     * conservatively).
     */
   private[sources] def statsRanges(root: String, column: String,
-      version: Int): Map[String, (String, String)] = {
-    val dir = Paths.get(root, s"v=$version")
-    val sf = statsFile(dir)
-    if (!Files.exists(sf)) Map.empty
-    else Files.readString(sf).linesIterator.flatMap { line =>
-      line.split('\t') match {
-        case Array(f, c, mnV, mxV) if c == column =>
-          Some(f -> (unescapeVal(mnV), unescapeVal(mxV)))
-        case _ => None
-      }
+      version: Int): Map[String, (String, String)] =
+    manifestLines(statsFile(Paths.get(root, s"v=$version")), Some(column)).collect {
+      case Array(f, _, mnV, mxV) => f -> (unescapeVal(mnV), unescapeVal(mxV))
     }.toMap
-  }
 
   // ---- change data feed --------------------------------------------
 
@@ -2027,7 +2057,7 @@ object SnapshotTransaction {
     * slot race fails.
     */
   def commitAll(spark: SparkSession, txnDir: String,
-      writes: Seq[TableWrite], maxRetries: Int = 10): Map[String, Int] = {
+      writes: Seq[TableWrite]): Map[String, Int] = {
     require(writes.nonEmpty, "empty transaction")
     require(writes.map(_.root).distinct.size == writes.size,
       "a transaction may write each table at most once")
@@ -2125,9 +2155,9 @@ object SnapshotTransaction {
             slot = next
           } else {
             attempt += 1
-            if (attempt >= maxRetries)
+            if (attempt >= ClaimAttempts)
               throw new SnapshotConflict(
-                s"lost the claim race $maxRetries times at ${w.root}")
+                s"lost the claim race $ClaimAttempts times at ${w.root}")
           }
         }
         (w, staging, slot)

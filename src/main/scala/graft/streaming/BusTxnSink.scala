@@ -36,10 +36,13 @@ import org.apache.spark.sql.functions._
   * (cost ∝ batch + |files| metadata ops, never the table); the
   * offsets table is |batches| tiny rows; the replay-guard read is
   * one aggregate over it. foreachBatch serializes batches per query,
-  * so the append's link-base never moves underneath it — and if an
+  * so the append's link-base never moves underneath it. If an
   * external writer does land a commit in between, the transaction
-  * CONFLICTS and the engine retries the batch rather than publishing
-  * stale bytes.
+  * CONFLICTS rather than publishing stale bytes: nothing retries it —
+  * commitAll's [[SnapshotTable.SnapshotConflict]] propagates out of
+  * foreachBatch and stops the streaming query. On restart the batch
+  * is delivered again and lands through the path above, and the
+  * replay guard keeps it exactly-once.
   */
 object BusTxnSink {
 

@@ -62,12 +62,10 @@ object NearDupSink {
     * watermark contract). Keeps the band table's file count bounded
     * by Buckets + N×Buckets instead of growing with stream lifetime.
     */
-  def ingestBatch(root: String, maxConflictRetries: Int = 20,
-      optimizeEvery: Int = 0)
+  def ingestBatch(root: String, optimizeEvery: Int = 0)
       (batch: DataFrame, batchId: Long): Unit = {
     if (optimizeEvery > 0 && batchId > 0 && batchId % optimizeEvery == 0)
-      BandHistory.optimize(batch.sparkSession, root, batchId,
-        maxConflictRetries)
+      BandHistory.optimize(batch.sparkSession, root, batchId)
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val slicePlan = batch.select(col("doc_id"), col("text"))
@@ -76,9 +74,10 @@ object NearDupSink {
       Artifacts.pinned(Dedup.bandDocs(slice.select(col("doc_id"), col("text"))),
           eager = true) { bands =>
         def commitBatch(pairs: Option[DataFrame]): Unit = {
-          commitSlice(root, docsRoot(root), slice, maxConflictRetries)
-          BandHistory.append(spark, root, bands, batchId, maxConflictRetries)
-          pairs.foreach(p => commitSlice(root, pairsRoot(root), p, maxConflictRetries))
+          SnapshotTable.restatePartitions(spark, docsRoot(root), slice, "batch_id")
+          BandHistory.append(spark, root, bands, batchId)
+          pairs.foreach(p =>
+            SnapshotTable.restatePartitions(spark, pairsRoot(root), p, "batch_id"))
         }
         if (SnapshotTable.currentVersion(bandsRoot(root)) == 0) commitBatch(None)
         else {
@@ -108,28 +107,6 @@ object NearDupSink {
               commitBatch(Some(p).filter(!_.isEmpty)))
           }
         }
-      }
-    }
-  }
-
-  /** One batch_id-partition commit with the streaming conflict-retry
-    * loop (same contract as SnapshotSink.overwritePartitionsBatch).
-    */
-  private def commitSlice(root: String, tableRoot: String, df: DataFrame,
-      maxConflictRetries: Int): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val v = SnapshotTable.currentVersion(tableRoot)
-      try {
-        SnapshotTable.commitPartitions(df.sparkSession, tableRoot, df,
-          "batch_id", readVersion = if (v == 0) -1 else v)
-        done = true
-      } catch {
-        case e: SnapshotTable.SnapshotConflict =>
-          attempt += 1
-          if (attempt >= maxConflictRetries) throw e
-          Thread.sleep(math.min(1000L, 50L * attempt))
       }
     }
   }

@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   *      batch names are replaced, all others carried forward;
   *   3. commit as a read-modify-write of the version that was merged
   *      against. If a concurrent writer lands first, the commit
-  *      aborts with [[SnapshotTable.SnapshotConflict]] and the loop
-  *      re-reads and re-merges — the foreachBatch twin of the
-  *      multi-writer contract SnapshotTxnSpec pins for batch writers.
+  *      aborts with [[SnapshotTable.SnapshotConflict]] and
+  *      [[SnapshotTable.retrying]] re-reads and re-merges — the
+  *      foreachBatch twin of the multi-writer contract
+  *      SnapshotTxnSpec pins for batch writers.
   *
   * Exactly-once table contents from an at-least-once source: a
   * replayed batch re-merges the same keys to the same values, so the
@@ -40,8 +41,8 @@ object SnapshotSink {
   /** A foreachBatch handler: `stream.writeStream.foreachBatch(
     * SnapshotSink.upsertBatch(root, "k", "ts") _)`.
     */
-  def upsertBatch(root: String, keyCol: String, orderCol: String,
-      maxConflictRetries: Int = 20)(batch: DataFrame, batchId: Long): Unit = {
+  def upsertBatch(root: String, keyCol: String, orderCol: String)
+      (batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val w = Window.partitionBy(col(keyCol))
@@ -50,21 +51,10 @@ object SnapshotSink {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
     Artifacts.pinned(newest, eager = true) { latest =>
-      var attempt = 0
-      var done = false
-      while (!done) {
-        // one merge semantics for batch and streaming: the table op
-        // does keyed replace-or-insert as a read-modify-write commit
-        try {
-          SnapshotTable.mergeByKey(spark, root, latest, Seq(keyCol))
-          done = true
-        } catch {
-          case e: SnapshotTable.SnapshotConflict =>
-            attempt += 1
-            if (attempt >= maxConflictRetries) throw e
-          // loop: mergeByKey re-reads the new head and re-merges
-        }
-      }
+      // one merge semantics for batch and streaming: the table op
+      // does keyed replace-or-insert as a read-modify-write commit,
+      // and each retry re-reads the new head and re-merges
+      SnapshotTable.retrying(SnapshotTable.mergeByKey(spark, root, latest, Seq(keyCol)))
     }
   }
 
@@ -89,34 +79,14 @@ object SnapshotSink {
     * per-source, per-hour shards) commit concurrently — that contract
     * is exactly what SnapshotRaceFuzzSpec proves under races.
     */
-  def overwritePartitionsBatch(root: String, partitionCol: String,
-      maxConflictRetries: Int = 20)(batch: DataFrame, batchId: Long): Unit = {
+  def overwritePartitionsBatch(root: String, partitionCol: String)
+      (batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     // pinned once: OCC retries must never re-read the (ephemeral)
     // micro-batch source
     Artifacts.pinned(batch, eager = true) { slice =>
-      var attempt = 0
-      var done = false
-      while (!done) {
-        val v = SnapshotTable.currentVersion(root)
-        try {
-          SnapshotTable.commitPartitions(spark, root, slice, partitionCol,
-            readVersion = if (v == 0) -1 else v)
-          done = true
-        } catch {
-          case e: SnapshotTable.SnapshotConflict =>
-            attempt += 1
-            if (attempt >= maxConflictRetries) throw e
-            // back off before recomposing: commitPartitions throws the
-            // conflict BEFORE any heavy work, so an in-flight
-            // overlapping claim (writer between claim and publish)
-            // would otherwise burn every retry in milliseconds and
-            // kill the streaming query where a short wait succeeds
-            Thread.sleep(math.min(1000L, 50L * attempt))
-          // loop: recompose against the head that beat us
-        }
-      }
+      SnapshotTable.restatePartitions(spark, root, slice, partitionCol)
     }
   }
 }

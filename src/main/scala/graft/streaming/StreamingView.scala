@@ -27,13 +27,11 @@ object StreamingView {
     * `SnapshotTable.streamChanges(spark, tableRoot).writeStream
     *   .foreachBatch(StreamingView.maintainSumView(viewRoot, keys, value) _)`.
     */
-  def maintainSumView(viewRoot: String, keys: Seq[String], valueCol: String,
-      maxConflictRetries: Int = 20)(batch: DataFrame, batchId: Long): Unit = {
+  def maintainSumView(viewRoot: String, keys: Seq[String], valueCol: String)
+      (batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    var attempt = 0
-    var done = false
-    while (!done) {
+    SnapshotTable.retrying {
       val cur = SnapshotTable.currentVersion(viewRoot)
       val base =
         if (cur == 0)
@@ -43,14 +41,7 @@ object StreamingView {
             batch.drop("_change_type").filter(lit(false)), keys, valueCol)
         else SnapshotTable.read(spark, viewRoot, cur)
       val next = IncrementalView.applySumDeltas(base, batch, keys, valueCol)
-      try {
-        SnapshotTable.commit(spark, viewRoot, next, readVersion = cur)
-        done = true
-      } catch {
-        case e: SnapshotTable.SnapshotConflict =>
-          attempt += 1
-          if (attempt >= maxConflictRetries) throw e
-      }
+      SnapshotTable.commit(spark, viewRoot, next, readVersion = cur)
     }
   }
 }

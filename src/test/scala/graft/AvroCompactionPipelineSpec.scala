@@ -37,19 +37,8 @@ class AvroCompactionPipelineSpec extends AnyFunSuite {
     def ingest(batch: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
       if (batch.isEmpty) return
       Artifacts.pinned(batch.withColumn("batch_id", lit(batchId)), eager = true) { slice =>
-        var done = false
-        var attempt = 0
-        while (!done) {
-          val v = SnapshotTable.currentVersion(table)
-          try {
-            SnapshotTable.commitPartitions(spark, table, slice, "batch_id",
-              readVersion = if (v == 0) -1 else v, statsCols = Seq("id"))
-            done = true
-          } catch {
-            case e: SnapshotTable.SnapshotConflict =>
-              attempt += 1; if (attempt > 10) throw e
-          }
-        }
+        SnapshotTable.restatePartitions(spark, table, slice, "batch_id",
+          statsCols = Seq("id"))
       }
     }
 

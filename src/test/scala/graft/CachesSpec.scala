@@ -193,6 +193,22 @@ class CachesSpec extends AnyFunSuite {
     if (report.nonEmpty) fail(report.mkString("\n"))
   }
 
+  test("only SnapshotTable retries a write conflict; no writer takes a retry count") {
+    // each needle is split so that this file does not match it
+    val catches = "SnapshotConflict" + " =>"
+    val counts = ("max" + "Retries|max" + "ConflictRetries").r
+    val hits = scalaFiles(java.nio.file.Paths.get("src", "main", "scala")).flatMap { f =>
+      val text = java.nio.file.Files.readString(f)
+      val caught =
+        if (f.getFileName.toString != "SnapshotTable.scala" && text.contains(catches))
+          Seq(s"$f: catches the conflict")
+        else Nil
+      caught ++ counts.findAllIn(text).distinct.map(m => s"$f: $m")
+    }
+    if (hits.nonEmpty)
+      fail(s"conflict retry outside SnapshotTable.retrying:\n${hits.mkString("\n")}")
+  }
+
   test("a JVM that exits without a clear deletes its temp roots and events layout") {
     import scala.jdk.CollectionConverters._
     import scala.sys.process._

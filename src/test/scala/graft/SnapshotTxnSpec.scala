@@ -167,4 +167,28 @@ class SnapshotTxnSpec extends AnyFunSuite {
           partitions = Seq("p=other\nz"), readVersion = 2)))
     }
   }
+
+  test("retrying re-runs a conflicting body, gives up after 20 runs, passes other errors") {
+    def conflict(i: Int) = new SnapshotTable.SnapshotConflict(s"conflict $i")
+    var runs = 0
+    val v = SnapshotTable.retrying {
+      runs += 1
+      if (runs <= 3) throw conflict(runs)
+      runs * 10
+    }
+    assert(runs === 4 && v === 40)
+    // the give-up bound: every run conflicts, so the 20th conflict
+    // propagates (after ~9.5 s of back-off between the runs)
+    runs = 0
+    val last = intercept[SnapshotTable.SnapshotConflict] {
+      SnapshotTable.retrying[Int] { runs += 1; throw conflict(runs) }
+    }
+    assert(runs === 20)
+    assert(last.getMessage === "conflict 20")
+    runs = 0
+    intercept[IllegalStateException] {
+      SnapshotTable.retrying[Int] { runs += 1; throw new IllegalStateException("boom") }
+    }
+    assert(runs === 1)
+  }
 }
